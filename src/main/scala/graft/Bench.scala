@@ -6,46 +6,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; this suite's
-      // ~44 queries (the CDC pipelines alone are ~20 codegen units each)
-      // churn straight through that, so a query's compiled classes are
-      // evicted before its timed run. Static conf — must be set here.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // AQE partition coalescing stays at its DEFAULT
-      // (parallelismFirst=true): an earlier round set it false to
-      // coalesce the many tiny shuffles to advisory size, but
-      // size-based coalescing is blind to EXPANSION stages — q154's
-      // wedge join emits ~25× its input, and coalescing its ~20 MB
-      // shuffle input to one task serialized the whole Σ out-deg²
-      // expansion (measured: 11.3 s vs 3.3 s warm at sf0.1). The
-      // default floors coalescing at the parallelism, which is
-      // exactly the guard expansion joins need; the tiny queries pay
-      // sub-ms extra scheduling per stage.
-      .config("spark.locality.wait", "0s")
-      // This runtime ships no native-hadoop library, so the stock
-      // checkpoint managers' per-file permission ops fall back to
-      // fork+exec of `chmod` — one process per state-store delta /
-      // offset-log file, every micro-batch (profiled r13+r14: the
-      // single largest non-compute cost of the streaming gates; the
-      // r13 FileSystem-manager switch removed only the rename-side
-      // fork, the create-side one remained). The java.nio manager
-      // (see its scaladoc) does the identical create / atomic rename
-      // protocol with no permission call at all.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // checkpoint durability checksums (Spark 4.1's corruption
-      // detection, a sidecar checksum file per checkpoint file) are
-      // off for the same local-disk reasoning; HDFS/object-store
-      // deployments re-enable both knobs
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // Warm the JVM/codegen/parquet-footer paths once so the first timed
     // query isn't charged for session startup.
     spark.range(1000000L).selectExpr("sum(id)").collect()

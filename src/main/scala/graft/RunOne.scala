@@ -3,8 +3,6 @@
 
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run one named query from SparkEntry.queries, print
   * timing (cold + warm) and optionally the formatted physical plan.
   *
@@ -15,26 +13,11 @@ object RunOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no native-hadoop in this runtime: see Bench.scala
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // checkpoint durability checksums (Spark 4.1's corruption
-      // detection, a sidecar checksum file per checkpoint file) are
-      // off for the same local-disk reasoning; HDFS/object-store
-      // deployments re-enable both knobs
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
     // ad-hoc conf experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.nonEmpty)
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession.start(extra = extra)
     if (args.contains("jobs")) {
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {

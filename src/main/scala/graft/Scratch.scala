@@ -13,8 +13,7 @@ import java.nio.file.{Files, Path}
   *
   * This is RUNTIME infrastructure, not a dev tool: the lake-lifecycle
   * and streaming gate queries (q19, q58, q84, q232, q233, …) allocate
-  * their table roots through it, which is why it lives in src/main
-  * while the profilers live under src/test/graft/tools.
+  * their table roots through it, which is why it lives in src/main.
   */
 object Scratch {
 

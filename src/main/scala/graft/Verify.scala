@@ -2,7 +2,6 @@
 // SPDX-License-Identifier: Apache-2.0
 
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,37 +15,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def selected[T](m: Map[String, T]): Map[String, T] =
       only.map(s => m.view.filterKeys(s).toMap).getOrElse(m)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Write timestamps as INT64 micros (not INT96) so the driver's
-      // pyarrow read of our results carries the same logical type as the
-      // DuckDB oracle's output — keeps timestamp columns hash-comparable.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Same rationale as Bench: coalesce small shuffles to advisory
-      // size rather than keeping cpus-many slivers — scheduling
-      // roundtrips, not compute, dominate at gate SF, and the shared
-      // host stalls in bursts. Results are unaffected (every query is
-      // hash-gated); the dump just finishes well inside any driver
-      // timeout.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.locality.wait", "0s")
-      .config("spark.ui.enabled", "false")
-      // no native-hadoop in this runtime: see Bench.scala — avoids a
-      // fork+exec per checkpoint file in the streaming gates
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // checkpoint durability checksums (Spark 4.1's corruption
-      // detection, a sidecar checksum file per checkpoint file) are
-      // off for the same local-disk reasoning; HDFS/object-store
-      // deployments re-enable both knobs
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

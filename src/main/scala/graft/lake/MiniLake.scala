@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+  StructType}
 
 /** Versioned parquet table with change-data-feed, the engine's one
   * genuinely custom storage component. Re-creates the observable
@@ -2157,24 +2158,20 @@ final class MiniLake(spark: SparkSession, val path: String,
     * deltas, shuffle otherwise); adaptive execution re-plans them
     * stage by stage, which costs several driver round-trips per commit
     * and buys nothing at that shape — skew in the merge path is
-    * handled by the bucketed layout, not runtime re-planning. Set
-    * `graft.lake.commitAqe=true` to let very large unbucketed rewrites
-    * re-plan adaptively.
+    * handled by the bucketed layout, not runtime re-planning.
     */
-  private def withCommitPlanning[T](f: => T): T =
-    if (spark.conf.getOption("graft.lake.commitAqe").contains("true")) f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      // restore to a ONCE-captured session default, not the value read
-      // at entry: two overlapping commits (an abandoned streaming
-      // micro-batch thread racing the next writer) would otherwise
-      // read each other's transient "false" as the previous value and
-      // leak AQE off for the rest of the session — observed as
-      // order-dependent plan-shape flakes in unrelated suites.
-      val prev = MiniLake.aqeSessionDefault(spark)
-      spark.conf.set(key, "false")
-      try f finally spark.conf.set(key, prev)
-    }
+  private def withCommitPlanning[T](f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    // restore to a ONCE-captured session default, not the value read
+    // at entry: two overlapping commits (an abandoned streaming
+    // micro-batch thread racing the next writer) would otherwise read
+    // each other's transient "false" as the previous value and leak
+    // AQE off for the rest of the session — observed as
+    // order-dependent plan-shape flakes in unrelated suites.
+    val prev = MiniLake.aqeSessionDefault(spark)
+    spark.conf.set(key, "false")
+    try f finally spark.conf.set(key, prev)
+  }
 
   private def nextVersion: Long = latestVersion + 1
 
@@ -3129,7 +3126,7 @@ final class MiniLake(spark: SparkSession, val path: String,
           "even BY DEFAULT)")
     }
     val ins = withGenerated(inserts)
-    requireSchemaMatchExceptIdentity(ins)
+    requireSchemaMatch(ins, exceptIdentity = true)
     val target = snapshot()
     // A statically-empty side (pure-insert or pure-delete batches —
     // the common CDC shapes) skips its joins entirely: each skipped
@@ -3285,7 +3282,7 @@ final class MiniLake(spark: SparkSession, val path: String,
           "user-supplied to mergeConcurrent (the insert side always " +
           "generates)")
     }
-    requireSchemaMatchExceptIdentity(inserts)
+    requireSchemaMatch(inserts, exceptIdentity = true)
     val spec = bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"mergeConcurrent requires a bucketed table ($path is unbucketed): " +
         "bucket scope is what makes concurrent rewrites provably disjoint"))
@@ -3454,7 +3451,7 @@ final class MiniLake(spark: SparkSession, val path: String,
       // generated columns compute-if-absent on this insert/update
       // surface too (consistency with every other data-carrying verb)
       val source = withGenerated(rawSource)
-      requireSchemaMatchExceptIdentity(source)
+      requireSchemaMatch(source, exceptIdentity = true)
       val target = snapshot()
       val srcKeys = source.select(pks.map(col): _*).distinct()
       val pre = target.join(srcKeys, pks, "left_semi")
@@ -3542,7 +3539,7 @@ final class MiniLake(spark: SparkSession, val path: String,
           "inserts generate)")
     }
     val source = withGenerated(rawSource)
-    requireSchemaMatchExceptIdentity(source)
+    requireSchemaMatch(source, exceptIdentity = true)
     val target = snapshot()
     val srcKeys = source.select(pks.map(col): _*).distinct()
     val pre = target.join(srcKeys, pks, "left_semi")
@@ -4035,36 +4032,53 @@ final class MiniLake(spark: SparkSession, val path: String,
     }
   }
 
-  private def requireSchemaMatch(df: DataFrame): Unit = {
-    if (exists) {
-      val expected = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      require(expected == got,
-        s"schema mismatch for $path:\n expected $expected\n got      $got")
-    }
-  }
-
-  /** [[requireSchemaMatch]] minus the identity column: an incoming
-    * merge batch can never carry the ALWAYS-generated id, so it must
-    * match the table's DATA columns exactly.
+  /** Incoming columns must match the table's in name, type and order;
+    * the ALWAYS-generated identity column, which a write never
+    * carries, is left out when `exceptIdentity`. A nested field may be
+    * stricter than the table's (non-nullable where the table records
+    * nullable — the table's schema as read back from parquet is
+    * nullable at every depth), never looser.
     */
-  private def requireSchemaMatchExceptIdentity(df: DataFrame): Unit =
-    identitySpec match {
-      case None => requireSchemaMatch(df)
-      case Some(spec) =>
-        if (exists) {
-          val expected = schema.fields.filterNot(_.name == spec.name)
-            .map(f => (f.name, f.dataType)).toSeq
-          val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-          require(expected == got,
-            s"schema mismatch for $path (identity column " +
-              s"'${spec.name}' excluded):\n expected $expected\n " +
-              s"got      $got")
-        }
+  private def requireSchemaMatch(df: DataFrame,
+      exceptIdentity: Boolean = false): Unit =
+    if (exists) {
+      val skip = if (exceptIdentity) identitySpec.map(_.name) else None
+      val expected = schema.fields.filterNot(f => skip.contains(f.name)).toSeq
+      val got = df.schema.fields.toSeq
+      def show(fs: Seq[StructField]) = fs.map(f => (f.name, f.dataType))
+      require(expected.length == got.length &&
+        expected.zip(got).forall { case (e, g) =>
+          e.name == g.name && MiniLake.writableAs(g.dataType, e.dataType)
+        },
+        s"schema mismatch for $path" +
+          skip.fold("")(n => s" (identity column '$n' excluded)") +
+          s":\n expected ${show(expected)}\n got      ${show(got)}")
     }
 }
 
 object MiniLake {
+  /** Values of type `got` can be written into a column recorded as
+    * `want`: the same type, with every nested field, array element and
+    * map value at most as nullable as the recorded one.
+    */
+  private[lake] def writableAs(got: DataType, want: DataType): Boolean =
+    (got, want) match {
+      case (g: StructType, w: StructType) =>
+        g.length == w.length && g.fields.zip(w.fields).forall {
+          case (gf, wf) => gf.name == wf.name &&
+            (wf.nullable || !gf.nullable) &&
+            writableAs(gf.dataType, wf.dataType)
+        }
+      case (g: ArrayType, w: ArrayType) =>
+        (w.containsNull || !g.containsNull) &&
+          writableAs(g.elementType, w.elementType)
+      case (g: MapType, w: MapType) =>
+        (w.valueContainsNull || !g.valueContainsNull) &&
+          writableAs(g.keyType, w.keyType) &&
+          writableAs(g.valueType, w.valueType)
+      case _ => got == want
+    }
+
   /** Sizing target for writes whose row count is known up front. */
   private[lake] val RowsPerFile: Long = 1L << 20
 

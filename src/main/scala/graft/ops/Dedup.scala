@@ -601,6 +601,11 @@ object Dedup {
       |WHERE a.doc_id >= 400 OR b.doc_id >= 400
       |ORDER BY id1, id2""".stripMargin
 
+  /** Row ceiling (pairs + nodes) of [[connectedComponents]]'
+    * single-task union-find arm.
+    */
+  val CcLocalMaxRows = 4000000L
+
   /** Distributed connected components: label every node in `nodes`
     * (column `doc_id`) with the minimum node id reachable through
     * `pairs` (columns `id1`, `id2`, undirected). See [[q57DedupClusters]]
@@ -618,9 +623,8 @@ object Dedup {
     // RESTRICTED to the node set (an endpoint without a label row
     // never relays), and union-by-min-root computes exactly that
     // restriction's component minima. DedupSpec pins arm equality;
-    // `graft.cc.localMaxRows=0` forces the distributed loop.
-    val localCap = s.conf.getOption("graft.cc.localMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+    // `graft.arms.forceDistributed` forces the distributed loop.
+    val localCap = graft.GraftSession.localCap(s, CcLocalMaxRows)
     // the local arm emits long ids; a non-long id column would make
     // its output schema diverge from the distributed loop's (ADVICE
     // r13) — such callers take the distributed arm

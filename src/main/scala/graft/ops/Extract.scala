@@ -16,27 +16,25 @@ import graft.ops.Pseudonymise.{FreeText, TableConfig}
   *  - large path: `repartition(max(32, current))`, `randomSplit` into
   *    one sub-frame per "key" (the reference shards across rate-limited
   *    API keys; the orchestration is preserved so a rate-limited
-  *    annotator can slot in), per-split annotate → project PKs +
-  *    extracted column → join back on PKs → fold-union;
+  *    annotator can slot in), per-split annotate → fold-union;
   *  - small path: annotate whole frame with one key.
   *
   * The annotator is injected per key (mirrors the `analyse` seam the
   * reference's tests patch); `defaultAnnotator` ignores the key index
   * and uses the local [[graft.functions.HealthAnnotator]].
   *
-  * Scale note: the join-back is PK-equi on the randomSplit-derived
-  * sub-frames; both sides stem from the same repartitioned parent so
-  * Catalyst plans a shuffle only on the (small) projected side when
-  * broadcast applies. The deterministic seed keeps results reproducible
-  * for the oracle gate.
+  * The deterministic split seed keeps results reproducible for the
+  * oracle gate.
   *
-  * Known reference-faithful quirk: a change-set carrying more than one
-  * row per PK (insert + delete of the same key in one CDC batch)
-  * multiplies through the PK join-back exactly as the reference's
-  * `sub_dfs[i].join(sub_df, primary_keys)` does
-  * (feature_extraction.py:100-108); the downstream merge inserts the
-  * duplicates like Delta's whenNotMatchedInsertAll would. Deduplicate
-  * upstream if a source can emit same-PK insert+delete batches.
+  * Departure from the reference: it projects each annotated split to
+  * PKs + extracted column and joins that back onto the split on the
+  * PKs (`sub_dfs[i].join(sub_df, primary_keys)`,
+  * feature_extraction.py:100-108). The annotator already returns every
+  * input column, so here the annotated splits are unioned directly:
+  * both paths emit exactly one row per input row, each carrying the
+  * extraction of its own text. The join-back would turn k same-PK rows
+  * of one change batch (a delete and re-insert of a key) into k² rows,
+  * pairing a deleted text's extraction with the live row.
   */
 object Extract {
 
@@ -66,16 +64,12 @@ object Extract {
         if (isLarge) {
           val repartitioned = df.repartition(
             math.max(TargetPartitions, df.rdd.getNumPartitions))
-          var subDfs = repartitioned
-            .randomSplit(Array.fill(numKeys)(1.0), SplitSeed)
-          for (column <- columns) {
-            for (i <- subDfs.indices) {
-              val annotated = annotator(subDfs(i), column, i)
-                .select(column + ExtractedSuffix, config.primaryKeys: _*)
-              subDfs(i) = subDfs(i).join(annotated, config.primaryKeys)
+          repartitioned.randomSplit(Array.fill(numKeys)(1.0), SplitSeed)
+            .zipWithIndex
+            .map { case (split, i) =>
+              columns.foldLeft(split)((d, c) => annotator(d, c, i))
             }
-          }
-          subDfs.reduce(_ union _)
+            .reduce(_ union _)
         } else {
           // small path: one deterministic key (the reference picks
           // random.choice; seeded here for reproducibility)

@@ -259,9 +259,18 @@ object Features {
     (deg, oriented)
   }
 
-  def q154Triangles(s: SparkSession, dir: String): DataFrame = {
+  /** Closing-probe ceiling of the triangle queries (q154, q259), in
+    * edges: at or below it the closing keys BROADCAST (2M packed
+    * longs ≈ 16 MB), above it the probe is a shuffle join (pruned by a
+    * Bloom filter in q154). Specs pass a lower ceiling to force the
+    * shuffle transport on small graphs.
+    */
+  val TriangleBroadcastEdges = 2_000_000L
+
+  def q154Triangles(s: SparkSession, dir: String,
+      broadcastEdges: Long = TriangleBroadcastEdges): DataFrame = {
     // in-task arm (guarded in-kernel; overflow → the distributed
-    // pipeline below, the 100 TB path; graft.graph.localMaxEdges=0
+    // pipeline below, the 100 TB path; graft.arms.forceDistributed
     // forces it — GraphSpec pins the arms equal on the real gate)
     if (GraphLocal.maxEdges(s) > 0)
       GraphLocal.trianglesCoPurchase(s, rawOkPk(s, dir)) match {
@@ -301,13 +310,8 @@ object Features {
     //    it, so scale costs the optimization, never the answer or the
     //    driver.
     val nEdges = oriented.count()
-    // conf-tunable so specs can force the shuffle+Bloom path on small
-    // graphs; 2M packed longs ≈ 16 MB broadcast, a comfortable default
-    val broadcastEdgeCap = s.conf
-      .getOption("graft.triangles.broadcastEdges").map(_.toLong)
-      .getOrElse(2_000_000L)
     val triangles =
-      if (nEdges <= broadcastEdgeCap)
+      if (nEdges <= broadcastEdges)
         wedges.join(broadcast(closing), "bc")
       else {
         val closingBloom = graft.functions.BloomExpressions
@@ -386,8 +390,9 @@ object Features {
     * (degrees, oriented) pair — factored so FeatureSpec can pin the
     * closed-form cc values on a clique-plus-pendant graph.
     */
-  private[graft] def clusteringSummary(
-      s: SparkSession, deg: DataFrame, oriented: DataFrame): DataFrame = {
+  private[graft] def clusteringSummary(s: SparkSession, deg: DataFrame,
+      oriented: DataFrame,
+      broadcastEdges: Long = TriangleBroadcastEdges): DataFrame = {
     def packed(a: Column, b: Column): Column =
       shiftleft(a, 32).bitwiseOR(b)
     val wedgeLt = col("e1.ddst") < col("e2.ddst") ||
@@ -400,11 +405,8 @@ object Features {
         packed(col("e1.dst"), col("e2.dst")).as("bc"))
     val closing = oriented.select(packed(col("src"), col("dst")).as("bc"))
     val nEdges = oriented.count()
-    val broadcastEdgeCap = s.conf
-      .getOption("graft.triangles.broadcastEdges").map(_.toLong)
-      .getOrElse(2_000_000L)
     val tris =
-      if (nEdges <= broadcastEdgeCap) wedges.join(broadcast(closing), "bc")
+      if (nEdges <= broadcastEdges) wedges.join(broadcast(closing), "bc")
       else wedges.join(closing, "bc")
     val triPerNode = tris
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
@@ -930,8 +932,7 @@ object Features {
     * exchanges are all node-side-bounded (h, then the collapsed
     * (node, h)-histogram) — never edge-sized. At ~16 B/row the
     * default caps the broadcast near 64 MB, the practical executor
-    * ceiling; `graft.coreness.broadcastMaxNodes` overrides (tests set
-    * 0 to force the join path).
+    * ceiling; specs pass a 0 ceiling to force the join path.
     */
   val CorenessBroadcastMaxNodes = 4000000L
 
@@ -954,8 +955,8 @@ object Features {
     * cap the distributed h-index loop below runs unchanged (it is the
     * 100 TB path, and the 10× scale corpus exceeds the cap, so
     * SCALE.md keeps measuring the distributed shape).
-    * `graft.coreness.localMaxEdges` overrides (tests set 0 to force
-    * the distributed loop; FeatureSpec pins both paths equal).
+    * `graft.arms.forceDistributed` forces the distributed loop;
+    * FeatureSpec pins both paths equal.
     */
   val CorenessLocalMaxEdges = 4000000L
 
@@ -1051,14 +1052,13 @@ object Features {
     hist.orderBy("coreness")
   }
 
-  private[graft] def corenessHistogram(s: SparkSession,
-      edges: DataFrame): DataFrame = {
+  private[graft] def corenessHistogram(s: SparkSession, edges: DataFrame,
+      broadcastMaxNodes: Long = CorenessBroadcastMaxNodes): DataFrame = {
     // size-based arm switch, MEASURED not assumed (the q154/q198-
     // transport discipline): one edge count (persisted, reused by the
     // distributed arm's sym build) picks single-task exact peeling at
     // gate scale or the iterated-h-index loop at cluster scale
-    val localCap = s.conf.getOption("graft.coreness.localMaxEdges")
-      .map(_.toLong).getOrElse(CorenessLocalMaxEdges)
+    val localCap = graft.GraftSession.localCap(s, CorenessLocalMaxEdges)
     if (localCap > 0) {
       val e = edges.persist()
       val m = e.count()
@@ -1097,9 +1097,7 @@ object Features {
       .localCheckpoint()
     // transport decision on the MEASURED node count (h is already
     // materialized, so this count is metadata-cheap)
-    val maxBroadcast = s.conf.getOption("graft.coreness.broadcastMaxNodes")
-      .map(_.toLong).getOrElse(CorenessBroadcastMaxNodes)
-    val useBroadcast = h.count() <= maxBroadcast
+    val useBroadcast = h.count() <= broadcastMaxNodes
     // the join transport keeps a SECOND standing copy keyed by nb —
     // the join side that must not re-shuffle per round. Materialized
     // from the persisted sym (one cheap pass), after which sym itself
@@ -1830,7 +1828,7 @@ object Features {
     // gate's dominant cost — a corpus-scale self-join + groupBy) AND
     // the relaxation run in ONE task; the distributed derivation +
     // relaxDistances below is the 100 TB path, forceable via
-    // graft.graph.localMaxEdges=0 (GraphSpec pins the arms equal).
+    // graft.arms.forceDistributed (GraphSpec pins the arms equal).
     // Guarding rides IN the kernel (sentinel on overflow/null) — the
     // separate eligibility probe job cost a measured 0.6 s here.
     if (GraphLocal.maxEdges(s) > 0)
@@ -2577,6 +2575,9 @@ object Features {
     spearmanOver(s, lineitem(s, dir)
       .select(col("l_quantity").as("q"), col("l_extendedprice").as("x")))
 
+  /** Row ceiling of [[spearmanOver]]'s single-task arm. */
+  val SpearmanLocalMaxRows = 4000000L
+
   /** [[q238Spearman]] over an explicit `(q: double, x: double)` frame —
     * factored so SpearmanSpec can pin the in-task arm against the
     * distributed arm on constructed tie patterns.
@@ -2593,7 +2594,7 @@ object Features {
     // task over RAW (q, x) rows — exact int64 accumulation with a
     // checked-overflow escape to BigInt, final double rounding through
     // Spark's own Decimal/Round paths, so the arms agree bit-for-bit
-    // (SpearmanSpec pins them; `graft.spearman.localMaxRows=0` forces
+    // (SpearmanSpec pins them; `graft.arms.forceDistributed` forces
     // the distributed arm — the 100 TB path). The whole arm is ONE
     // job: parallel per-partition (q, x) array packs through a
     // 1-partition exchange (the GraphLocal device — a coalesce(1)
@@ -2606,8 +2607,7 @@ object Features {
     // the cap and flags; the kernel answers a sentinel row and the
     // gate falls back) plus a projected-scan-stats pre-gate so a
     // corpus that cannot fit never even packs.
-    val localCap = s.conf.getOption("graft.spearman.localMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+    val localCap = graft.GraftSession.localCap(s, SpearmanLocalMaxRows)
     val estBytes = rows0.queryExecution.optimizedPlan.stats.sizeInBytes
     if (localCap > 0 && estBytes <= BigInt(localCap) * 32) {
       import s.implicits._
@@ -4140,7 +4140,7 @@ object Features {
     "q162_pit_join" -> (q162PitJoin _),
     "q159_ewma" -> (q159Ewma _),
     "q160_interval_join" -> (q160IntervalJoin _),
-    "q154_triangles" -> (q154Triangles _),
+    "q154_triangles" -> (q154Triangles(_, _)),
     "q155_jl_projection" -> (q155JlProjection _),
     "q156_robust_scale" -> (q156RobustScale _),
     "q150_equidepth_bins" -> (q150EquidepthBins _),

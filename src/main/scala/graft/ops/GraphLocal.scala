@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (~0.1-0.2 s per job × 4-8 jobs per round). Above the cap the
   * distributed standing-partition loops in [[Features]] run unchanged
   * — they are the 100 TB path, and SCALE.md keeps measuring them via
-  * the `graft.graph.localMaxEdges=0` override.
+  * `graft.arms.forceDistributed=true`.
   *
   * Round-13 extension: the CO-PURCHASE DERIVATION (per-order pair
   * join + distinct/count fold — measured as the dominant cost of
@@ -37,29 +37,25 @@ import org.apache.spark.sql.functions._
   */
 object GraphLocal {
 
-  /** Default edge ceiling for the single-task arm — the same 4M-edge
-    * envelope as [[Features.CorenessLocalMaxEdges]]; override with
-    * `graft.graph.localMaxEdges` (0 forces the distributed loop, the
-    * spec/scale-check device).
+  /** Edge ceiling for the single-task arm — the same 4M-edge
+    * envelope as [[Features.CorenessLocalMaxEdges]].
     */
   val DefaultMaxEdges = 4000000L
 
+  /** [[DefaultMaxEdges]], or 0 (distributed loops only) under
+    * `graft.arms.forceDistributed`, the spec/scale-check device.
+    */
   def maxEdges(s: SparkSession): Long =
-    s.conf.getOption("graft.graph.localMaxEdges")
-      .map(_.toLong).getOrElse(DefaultMaxEdges)
+    graft.GraftSession.localCap(s, DefaultMaxEdges)
 
   /** CPU ceiling on the oriented wedge fan Σ C(out-deg, 2) for the
     * in-task triangle kernels (q154/q259): the wedge loop never
     * materializes wedges, so this bounds TIME, not memory (worst case
     * E^1.5 ≈ 8×10⁹ probes at the edge cap — the co-purchase graph
     * measures 41M at sf0.1, 3.4% of its bound, but the bound must not
-    * trust the data). Override with `graft.graph.localMaxWedges`.
+    * trust the data).
     */
   val DefaultMaxWedges = 256000000L
-
-  private def maxWedges(s: SparkSession): Long =
-    s.conf.getOption("graft.graph.localMaxWedges")
-      .map(_.toLong).getOrElse(DefaultMaxWedges)
 
   /** One-job eligibility probe for the single-task EDGE-FRAME arms
     * (pre-derived edges): edge count ≤ `cap` AND no NULLs in `cols`.
@@ -79,9 +75,9 @@ object GraphLocal {
 
   // ---------------------------------------------------------------
   // Primitive long hash structures. The boxed java.util.HashMap paid
-  // ~1.5 s of boxing + rehash on the 1.2M-pair fold alone (measured,
-  // KernelProbe): every put allocates a Node plus two boxed Longs and
-  // the growth path rehashes the whole table repeatedly. These
+  // ~1.5 s of boxing + rehash on the 1.2M-pair fold alone (measured):
+  // every put allocates a Node plus two boxed Longs and the growth
+  // path rehashes the whole table repeatedly. These
   // open-addressing tables (power-of-two, linear probe, ≤0.5 load)
   // do the same fold in tens of milliseconds and are what every
   // kernel below uses.
@@ -949,10 +945,9 @@ object GraphLocal {
   def trianglesCoPurchase(s: SparkSession, li: DataFrame)
       : Option[DataFrame] = {
     import s.implicits._
-    val wedgeCap = maxWedges(s)
     foldedKernel[(Long, Long, Long)](s, li, 1L, (-1L, -1L, -1L),
       r => r.getLong(0) == -1L) { f =>
-      val t = triangleScaffold(f.flat, wedgeCap)
+      val t = triangleScaffold(f.flat, DefaultMaxWedges)
       if (t == null) Iterator.single((-1L, -1L, -1L))
       else {
         var tri = 0L
@@ -973,11 +968,10 @@ object GraphLocal {
   def clusteringCoPurchase(s: SparkSession, li: DataFrame)
       : Option[DataFrame] = {
     import s.implicits._
-    val wedgeCap = maxWedges(s)
     foldedKernel[(Long, Option[Long], Option[Double], Option[Double])](
       s, li, 1L, (-1L, None, None, None),
       r => r.getLong(0) == -1L) { f =>
-      val t = triangleScaffold(f.flat, wedgeCap)
+      val t = triangleScaffold(f.flat, DefaultMaxWedges)
       if (t == null) Iterator.single((-1L, None, None, None))
       else {
         val tri = new Array[Long](t.nNodes)
@@ -1211,15 +1205,6 @@ object GraphLocal {
     counts.asScala.iterator.map { case (c, k) => (c.toLong, k) }
       .toArray.sortBy(_._1).iterator
   }
-
-  // test-scope hooks for the phase profilers (graft.ops test package)
-  private[ops] def testFoldPairs(it: Iterator[(Long, Long)],
-      minOrders: Long, cap: Long): (Array[Long], Array[Long]) = {
-    val f = foldPairs(it, minOrders, cap)
-    if (f == null) null else (f.flat, f.ws)
-  }
-  private[ops] def testScaffold(flat: Array[Long], wedgeCap: Long)
-      : TriangleScaffold = triangleScaffold(flat, wedgeCap)
 
   /** q219's local arm: HITS over the bipartite customer→part purchase
     * rows in one task — dedupe (c, p), h1 = out-degree, a1/h2/a2 the

@@ -526,6 +526,9 @@ object Sampling {
     */
   val CoverageRounds = 8
 
+  /** Token-row ceiling of q216's single-task greedy arm. */
+  val CoverageLocalMaxRows = 4000000L
+
   def q216CoverageSelect(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text.tokens
     // coverage universe = token BIGRAMS: a realistic spanning target
@@ -578,9 +581,8 @@ object Sampling {
     // asc), stop when every gain is 0 (⇔ the distributed arm's empty
     // uncovered frame). SamplingSpec pins the arms equal; the
     // distributed loop below is unchanged — the 100 TB path — and
-    // `graft.coverage.localMaxRows=0` forces it.
-    val localCap = s.conf.getOption("graft.coverage.localMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+    // `graft.arms.forceDistributed` forces it.
+    val localCap = graft.GraftSession.localCap(s, CoverageLocalMaxRows)
     if (localCap > 0 && tokD.count() <= localCap) {
       import s.implicits._
       val kernelRows = tokD.as[(Long, String)].coalesce(1)

@@ -60,7 +60,30 @@ object Jobs {
     */
   def runFeatureExtraction(spark: SparkSession, zones: Zones,
       tableConfigs: Map[String, TableConfig], numKeys: Int = 1,
+      annotator: Extract.Annotator = Extract.defaultAnnotator): Unit =
+    featureExtraction(spark, zones, tableConfigs, numKeys, annotator, None)
+
+  /** The conf-driven entry matching the reference's deployed entrypoint
+    * (feature_extraction.py:36-50): the annotator key list arrives as
+    * the semicolon-separated `spark.secret.cognitive-services-keys`
+    * (its length is the randomSplit shard count) and gold tables
+    * register under the `spark.secret.unity-catalog-*` names. Missing
+    * secrets abort before any processing, like the reference's
+    * ValueError.
+    */
+  def runFeatureExtractionFromConf(spark: SparkSession, zones: Zones,
+      tableConfigs: Map[String, TableConfig],
       annotator: Extract.Annotator = Extract.defaultAnnotator): Unit = {
+    val keys = graft.Secrets.cognitiveKeys(spark)
+    val names = graft.Secrets.catalogNames(spark)
+    featureExtraction(spark, zones, tableConfigs, keys.length, annotator,
+      Some(names))
+  }
+
+  private def featureExtraction(spark: SparkSession, zones: Zones,
+      tableConfigs: Map[String, TableConfig], numKeys: Int,
+      annotator: Extract.Annotator,
+      qualifier: Option[(String, String)]): Unit = {
     Metrics.initializeLogging("feature_extraction")
     val wm = Watermark(spark, zones.watermarkPath)
     tableConfigs.foreach { case (tableName, config) =>
@@ -80,40 +103,8 @@ object Jobs {
       // session-scoped, so (re-)register whenever gold exists — a
       // no-new-data run in a fresh session must still expose the table.
       if (graft.lake.MiniLake.exists(s"${zones.gold}/$tableName"))
-        Catalog.registerLakeTable(spark, tableName, s"${zones.gold}/$tableName")
-    }
-  }
-
-  /** The conf-driven entry matching the reference's deployed entrypoint
-    * (feature_extraction.py:36-50): the annotator key list arrives as
-    * the semicolon-separated `spark.secret.cognitive-services-keys`
-    * (its length is the randomSplit shard count) and gold tables
-    * register under the `spark.secret.unity-catalog-*` names. Missing
-    * secrets abort before any processing, like the reference's
-    * ValueError.
-    */
-  def runFeatureExtractionFromConf(spark: SparkSession, zones: Zones,
-      tableConfigs: Map[String, TableConfig],
-      annotator: Extract.Annotator = Extract.defaultAnnotator): Unit = {
-    val keys = graft.Secrets.cognitiveKeys(spark)
-    val names = graft.Secrets.catalogNames(spark)
-    Metrics.initializeLogging("feature_extraction")
-    val wm = Watermark(spark, zones.watermarkPath)
-    tableConfigs.foreach { case (tableName, config) =>
-      val upd = Cdc.readTableUpdate(spark, s"${zones.silver}/$tableName",
-        wm, "feature_extraction", tableName)
-      if (!upd.df.isEmpty) {
-        val extracted = Extract.extractFeatures(upd.df, tableName, config,
-          keys.length, annotator)
-        val (ins, del) = Cdc.writeTableUpdate(spark,
-          upd.copy(df = extracted), s"${zones.gold}/$tableName",
-          config.primaryKeys, wm, "feature_extraction", tableName)
-        Metrics.rowsUpdated(ins, tableName, "insert", "feature_extraction")
-        Metrics.rowsUpdated(del, tableName, "delete", "feature_extraction")
-      }
-      if (graft.lake.MiniLake.exists(s"${zones.gold}/$tableName"))
         Catalog.registerLakeTable(spark, tableName,
-          s"${zones.gold}/$tableName", qualifier = Some(names))
+          s"${zones.gold}/$tableName", qualifier = qualifier)
     }
   }
 

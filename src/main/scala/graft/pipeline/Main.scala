@@ -3,8 +3,6 @@
 
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.Pseudonymise._
 
 /** Runnable entrypoints mirroring the reference's submitted scripts
@@ -30,14 +28,7 @@ object PipelineMain {
     val base = args(0)
     val stage = if (args.length > 1) args(1) else "all"
     if (stage == "hello") { Jobs.helloWorld(); return }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start()
     val zones = Jobs.Zones(s"$base/bronze", s"$base/silver", s"$base/gold",
       s"$base/internal")
     if (stage == "pseudonymisation" || stage == "all")

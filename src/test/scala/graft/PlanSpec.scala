@@ -293,10 +293,8 @@ class PlanSpec extends AnyFunSuite {
   test("q154: triangle wedges join on src equi-keys, no cartesian") {
     // pin the DISTRIBUTED arm (the 100 TB plan this test guards);
     // the in-task arm's plan is a bare LocalRelation by construction
-    spark.conf.set("graft.graph.localMaxEdges", "0")
-    val plan =
-      try planOf(graft.ops.Features.q154Triangles(spark, sf))
-      finally spark.conf.unset("graft.graph.localMaxEdges")
+    val plan = SparkTestSession.distributed(
+      planOf(graft.ops.Features.q154Triangles(spark, sf)))
     assert(!plan.contains("CartesianProduct"), plan)
     // the wedge join must be an equi join on src (the orientation's
     // whole point); the only nested-loop joins are the three 1-row

@@ -6,30 +6,23 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (mirrors the reference's
-  * session-scoped pytest fixture, conftest.py:38-64): UTC, small
-  * shuffle-partition count, UI off.
+  * session-scoped pytest fixture, conftest.py:38-64), built with the
+  * engine's one profile, [[GraftSession]], on four cores.
   */
 object SparkTestSession {
+  val Cores = 4
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.configure(SparkSession.builder(), Cores)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // no native-hadoop in this runtime: see Bench.scala — avoids a
-      // fork+exec per checkpoint file in the streaming suites
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // checkpoint durability checksums (Spark 4.1's corruption
-      // detection, a sidecar checksum file per checkpoint file) are
-      // off for the same local-disk reasoning; HDFS/object-store
-      // deployments re-enable both knobs
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `f` with every size-switched gate on its distributed arm. */
+  def distributed[T](f: => T): T = {
+    spark.conf.set(GraftSession.ForceDistributed, "true")
+    try f finally spark.conf.unset(GraftSession.ForceDistributed)
   }
 }

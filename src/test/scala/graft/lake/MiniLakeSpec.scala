@@ -1000,6 +1000,36 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(fresh.latestVersion === 1L)
   }
 
+  test("schema check: nested fields may be stricter than the table, " +
+      "never looser, and must match in name, type and order") {
+    import org.apache.spark.sql.types._
+    def pair(a: String, b: String, t: DataType, nullable: Boolean) =
+      StructType(Seq(StructField(a, t, nullable), StructField(b, t, nullable)))
+    val loose = ArrayType(pair("_1", "_2", IntegerType, true), true)
+    val strict = ArrayType(pair("_1", "_2", IntegerType, false), false)
+    assert(MiniLake.writableAs(strict, loose))
+    assert(!MiniLake.writableAs(loose, strict))
+    assert(!MiniLake.writableAs(ArrayType(pair("_2", "_1", IntegerType, true)),
+      loose))
+    assert(!MiniLake.writableAs(ArrayType(pair("_1", "_2", LongType, true)),
+      loose))
+    assert(MiniLake.writableAs(MapType(StringType, strict, false),
+      MapType(StringType, loose, true)))
+    assert(!MiniLake.writableAs(MapType(StringType, loose, true),
+      MapType(StringType, loose, false)))
+    // end to end: a table recorded with non-nullable nested fields
+    // rejects a batch whose nested fields are nullable
+    val t = MiniLake(spark, dir)
+    t.create(Seq((1L, Seq((1, 2)))).toDF("key", "xs"))
+    val err = intercept[IllegalArgumentException] {
+      t.append(Seq((2L, Seq((3, 4)))).toDF("key", "xs")
+        .withColumn("xs", col("xs").cast(loose)))
+    }
+    assert(err.getMessage.contains("schema mismatch"))
+    t.append(Seq((3L, Seq((5, 6)))).toDF("key", "xs"))
+    assert(t.snapshot().count() === 2L)
+  }
+
   test("constraint violation attributes every violated name in one pass") {
     val t = MiniLake(spark, dir)
     t.create(kv(1L -> "a"))

@@ -40,14 +40,13 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite {
       else edges.toDF("id1", "id2")
     // both arms of the size-based switch must match the model: the
     // default conf takes the single-task union-find arm at these
-    // sizes; localMaxRows=0 forces the distributed pointer-doubling
-    // loop (the 100 TB path)
+    // sizes; graft.arms.forceDistributed forces the distributed
+    // pointer-doubling loop (the 100 TB path)
     val local = Dedup.connectedComponents(nodes, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("graft.cc.localMaxRows", "0")
-    val dist = try Dedup.connectedComponents(nodes, pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    finally spark.conf.unset("graft.cc.localMaxRows")
+    val dist = graft.SparkTestSession.distributed(
+      Dedup.connectedComponents(nodes, pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val expect = unionFind(n, edges)
     assert(local === expect)
     assert(dist === expect)

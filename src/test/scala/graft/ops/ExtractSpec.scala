@@ -64,28 +64,25 @@ class ExtractSpec extends AnyFunSuite {
     assert(out.select("NoteID").distinct().count() === 250L)
   }
 
-  test("same-PK multiplicity multiplies through the join-back (reference quirk)") {
-    // A CDC batch holding insert+delete of the same PK reaches
-    // extraction as two rows per key. The reference joins each split
-    // back to itself on the PKs (feature_extraction.py:100-108), so k
-    // co-located rows of one PK come out as k² rows — reproduced here
-    // deliberately (documented in Extract's Scaladoc, decided
-    // reference-faithful in round 1): 75 PKs × 2 rows in, strictly
-    // more rows out, with at least one PK squared.
+  test("same-PK rows come out one per input row, each with its own text's extraction") {
+    // A CDC batch holding a delete and a re-insert of one key reaches
+    // extraction as two rows per PK. The large path (>=100 rows) must
+    // still emit exactly its input rows — 75 PKs × 2 rows in, 150 out —
+    // and pair every row with the extraction of its own text, never a
+    // sibling's.
     val dup = (1L to 75L).flatMap(i =>
-      Seq((i, s"note a for $i"), (i, s"note b for $i")))
+      Seq((i, s"patient $i reports severe headache"),
+        (i, s"patient $i is taking aspirin")))
       .toDF("NoteID", "NoteText")
     val out = Extract.extractFeatures(dup, "Notes", cfg, numKeys = 2)
-    val n = out.count()
-    assert(n > 150L, "co-located same-PK rows must multiply (k² per split)")
-    val perKey = out.groupBy("NoteID").count()
-    assert(perKey.filter(col("count") === 4L).count() > 0L)
-    // and the documented caller-side remedy restores exactness:
-    // dedup the batch by PK before extraction
-    val deduped = Extract.extractFeatures(
-      dup.dropDuplicates("NoteID"), "Notes", cfg, numKeys = 2)
-    assert(deduped.count() === 75L)
-    assert(deduped.select("NoteID").distinct().count() === 75L)
+    val rows = out.select(col("NoteText"), col("NoteText_extracted"))
+      .as[(String, HealthAnnotator.Extraction)].collect()
+    assert(rows.length === 150)
+    assert(rows.map(_._1).sorted.toSeq === dup.as[(Long, String)].collect()
+      .map(_._2).sorted.toSeq)
+    rows.foreach { case (text, extracted) =>
+      assert(extracted === HealthAnnotator.annotate(text), text)
+    }
   }
 
   test("tables without free-text config pass through untouched") {

@@ -15,6 +15,47 @@ class FeatureSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
+  /** `f` with automatic broadcast joins off, so the only broadcasts in
+    * a plan are the ones a transport asks for by hint.
+    */
+  private def hintedBroadcastsOnly[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** The executed plans of every action `f` runs in this session,
+    * localCheckpoints included (an iterative loop's joins are only
+    * visible there).
+    */
+  private def executedPlans(f: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val marker = s"plans-end-${System.nanoTime()}"
+    try {
+      f
+      // listeners run on an asynchronous bus that delivers in order:
+      // once the marker action's plan arrives, every plan of `f` has
+      spark.range(1).selectExpr(s"'$marker' AS m").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_.contains(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = seen.asScala.toSeq
+    assert(plans.exists(_.contains(marker)), "plan capture timed out")
+    plans.filterNot(_.contains(marker))
+  }
+
   test("q150: deciles partition all rows into ~equal, ordered bins") {
     val rows = Features.q150EquidepthBins(spark, sf).collect()
     val n = graft.Tables.events(spark, sf).count()
@@ -90,13 +131,24 @@ class FeatureSpec extends AnyFunSuite {
     assert(row.getAs[Long]("n_triangles") === brute)
     assert(row.getAs[Long]("n_edges") === edges.size)
     assert(row.getAs[Long]("n_nodes") === nodes.size)
-    // the big-graph strategy (shuffle join + byte-capped Bloom prune)
-    // must agree with the broadcast path the small fixture takes
-    spark.conf.set("graft.triangles.broadcastEdges", "0")
-    try {
-      val big = Features.q154Triangles(spark, sf).collect()(0)
-      assert(big === row, "bloom/shuffle path diverged from broadcast")
-    } finally spark.conf.unset("graft.triangles.broadcastEdges")
+    // the distributed pipeline must agree with the in-task kernel on
+    // both of its closing-probe transports, and each must really run:
+    // the broadcast probe the small fixture takes, and the big-graph
+    // shuffle join behind a byte-capped Bloom prune
+    val bcastProbe = "BroadcastHashJoin [bc#"
+    SparkTestSession.distributed(hintedBroadcastsOnly {
+      val bcast = Features.q154Triangles(spark, sf)
+      assert(bcast.collect()(0) === row, "broadcast path diverged")
+      val bplan = bcast.queryExecution.executedPlan.toString
+      assert(bplan.contains(bcastProbe), bplan)
+      assert(!bplan.contains("bloommightcontainlong"), bplan)
+      val bloom = Features.q154Triangles(spark, sf, broadcastEdges = 0)
+      assert(bloom.collect()(0) === row, "bloom/shuffle path diverged")
+      val splan = bloom.queryExecution.executedPlan.toString
+      assert(splan.contains("bloommightcontainlong"), splan)
+      assert(splan.contains("hashpartitioning(bc#"), splan)
+      assert(!splan.contains(bcastProbe), splan)
+    })
   }
 
   test("q198: coreness fixpoint matches hand-computed cores on a " +
@@ -113,25 +165,31 @@ class FeatureSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("coreness"), r.getAs[Long]("n_nodes")))
       .toMap
     assert(hist === Map(1L -> 3L, 4L -> 5L), hist)
-    // the DISTRIBUTED h-index loop (forced by a 0 local cap) must
-    // reach the identical fixpoint — iterated h-index converges to
-    // coreness, so the arm switch changes the execution, never the
-    // answer; and within it, the co-partitioned-join transport
-    // (forced by a 0 broadcast ceiling) must agree too
-    spark.conf.set("graft.coreness.localMaxEdges", "0")
-    try {
-      val looped = Features.corenessHistogram(spark, edges).collect()
-        .map(r => (r.getAs[Long]("coreness"), r.getAs[Long]("n_nodes")))
-        .toMap
-      assert(looped === hist, "distributed loop diverged from peel")
-      spark.conf.set("graft.coreness.broadcastMaxNodes", "0")
-      try {
-        val joined = Features.corenessHistogram(spark, edges).collect()
+    // the DISTRIBUTED h-index loop must reach the identical fixpoint —
+    // iterated h-index converges to coreness, so the arm switch
+    // changes the execution, never the answer — on both per-round
+    // transports, each seen in the loop's executed plans: the h frame
+    // by broadcast (the default at this size) and by the
+    // co-partitioned join (forced by a 0 broadcast ceiling)
+    def histOf(maxNodes: Long): (Map[Long, Long], Seq[String]) = {
+      var out = Map.empty[Long, Long]
+      val plans = executedPlans {
+        out = Features.corenessHistogram(spark, edges, maxNodes).collect()
           .map(r => (r.getAs[Long]("coreness"), r.getAs[Long]("n_nodes")))
           .toMap
-        assert(joined === hist, "join transport diverged from broadcast")
-      } finally spark.conf.unset("graft.coreness.broadcastMaxNodes")
-    } finally spark.conf.unset("graft.coreness.localMaxEdges")
+      }
+      (out, plans)
+    }
+    SparkTestSession.distributed(hintedBroadcastsOnly {
+      val (looped, bplans) = histOf(Features.CorenessBroadcastMaxNodes)
+      assert(looped === hist, "distributed loop diverged from peel")
+      assert(bplans.exists(_.contains("BroadcastHashJoin [nb#")), bplans)
+      val (joined, jplans) = histOf(0L)
+      assert(joined === hist, "join transport diverged from broadcast")
+      assert(jplans.exists(p => p.contains("SortMergeJoin [nb#") ||
+        p.contains("ShuffledHashJoin [nb#")), jplans)
+      assert(!jplans.exists(_.contains("BroadcastHashJoin [nb#")), jplans)
+    })
   }
 
   test("q198: local peel equals the distributed loop on a random-ish " +
@@ -146,13 +204,11 @@ class FeatureSpec extends AnyFunSuite {
     }.filter(e => e._1 != e._2).distinct.toDF("u", "v")
     val local = Features.corenessHistogram(spark, edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    spark.conf.set("graft.coreness.localMaxEdges", "0")
-    try {
-      val dist = Features.corenessHistogram(spark, edges).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(local === dist)
-      assert(local.values.sum === 400L) // every node reported once
-    } finally spark.conf.unset("graft.coreness.localMaxEdges")
+    val dist = SparkTestSession.distributed(
+      Features.corenessHistogram(spark, edges).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap)
+    assert(local === dist)
+    assert(local.values.sum === 400L) // every node reported once
   }
 
   test("q252: Mood's median test fires on shifted groups, stays " +
@@ -437,11 +493,8 @@ class FeatureSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_triangles") === 4L)
     assert(r.getAs[Double]("avg_cc") === 0.875)
     assert(r.getAs[Double]("global_cc") === 0.8)
-    spark.conf.set("graft.triangles.broadcastEdges", "0")
-    try {
-      val r2 = Features.clusteringSummary(spark, deg, oriented)
-        .collect().head
-      assert(r2 === r, "shuffle transport diverged from broadcast")
-    } finally spark.conf.unset("graft.triangles.broadcastEdges")
+    val r2 = Features.clusteringSummary(spark, deg, oriented,
+      broadcastEdges = 0).collect().head
+    assert(r2 === r, "shuffle transport diverged from broadcast")
   }
 }

@@ -80,15 +80,13 @@ class GraphSpec extends AnyFunSuite {
 
   // Arm-equality pins for the size-based switch (VERDICT r12 ask #2):
   // each gate runs once on the default conf (single-task arm at these
-  // edge counts) and once with graft.graph.localMaxEdges=0 (the
+  // edge counts) and once with graft.arms.forceDistributed (the
   // distributed standing-partition loop); the two must agree row for
   // row. sf0.001 exercises the REAL gate derivations including the
   // mod-97 seed predicates, so the Column/Long seed forms cannot drift.
   private def bothArms(fn: => Array[String]): (Seq[String], Seq[String]) = {
     val local = fn.toSeq
-    spark.conf.set("graft.graph.localMaxEdges", "0")
-    try { (local, fn.toSeq) }
-    finally spark.conf.unset("graft.graph.localMaxEdges")
+    (local, graft.SparkTestSession.distributed(fn.toSeq))
   }
 
   test("arm equality: every graph gate local == distributed") {

@@ -43,9 +43,7 @@ class SamplingSpec extends AnyFunSuite {
     def run(): Seq[String] =
       Sampling.q216CoverageSelect(spark, sf).collect().map(_.toString).toSeq
     val local = run()
-    spark.conf.set("graft.coverage.localMaxRows", "0")
-    val dist = try run()
-    finally spark.conf.unset("graft.coverage.localMaxRows")
+    val dist = graft.SparkTestSession.distributed(run())
     assert(local.nonEmpty)
     assert(local === dist)
   }

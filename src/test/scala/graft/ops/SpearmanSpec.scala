@@ -26,10 +26,7 @@ class SpearmanSpec extends AnyFunSuite {
   private def bothArms(df: => org.apache.spark.sql.DataFrame)
       : (Seq[String], Seq[String]) = {
     val local = rows(df)
-    spark.conf.set("graft.spearman.localMaxRows", "0")
-    val dist = try rows(df)
-    finally spark.conf.unset("graft.spearman.localMaxRows")
-    (local, dist)
+    (local, graft.SparkTestSession.distributed(rows(df)))
   }
 
   test("q238 arm equality on the real gate feed") {

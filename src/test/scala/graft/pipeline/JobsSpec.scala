@@ -104,6 +104,27 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(silver.latestVersion === 1L)
   }
 
+  test("incremental gold merges with the default annotator: create plus two appends") {
+    // The annotator emits non-nullable nested fields, while gold's
+    // recorded schema turns nullable at every depth after its first
+    // merge; every later batch must still merge.
+    val bronze = MiniLake(spark, s"${zones.bronze}/Notes")
+    val batches = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L))
+    batches.zipWithIndex.foreach { case (ids, i) =>
+      val batch = notes(ids.map(id => (id, s"note $id: severe headache",
+        id, Timestamp.valueOf("2023-01-01 10:10:10"))): _*)
+      if (i == 0) bronze.create(batch) else bronze.append(batch)
+      Jobs.runPseudonymisation(spark, zones, notesConfig)
+      Jobs.runFeatureExtraction(spark, zones, notesConfig)
+    }
+    val gold = MiniLake(spark, s"${zones.gold}/Notes").snapshot()
+    assert(gold.select("NoteID").as[Long].collect().sorted.toSeq ===
+      batches.flatten)
+    val cats = gold.select("NoteText_extracted.document.entities.category")
+      .as[Seq[String]].collect()
+    assert(cats.forall(_ === Seq("ConditionQualifier", "SymptomOrSign")))
+  }
+
   test("conf-driven extraction: keys and catalog names from spark.secret.*") {
     val secretKeys = Seq("cognitive-services-keys",
       "unity-catalog-catalog-name", "unity-catalog-schema-name")
