@@ -155,36 +155,19 @@ object Bench {
     }
     val sentinelEnd = timeSentinel()
     // The harness that records this line keeps only a short tail of the
-    // build output; round 10 proved that even abbreviated per-query
-    // keys (~4 KB at 264 queries) overflow the capture and the line
-    // parses to null — the whole round's perf signal lost. The printed
-    // line therefore carries ONLY the totals/subtotals/sentinel (a few
-    // hundred bytes, O(1) in query count); the per-query map lives in
-    // bench_full.json, written before the line prints.
+    // build output, so the line stays compact: totals, subtotals, the
+    // sentinel and each query's time rounded to the millisecond. The
+    // full-precision map lives in target/bench_full.json, written before
+    // the line prints.
     def ms(v: Double): String = f"$v%.3f"
     def shortKey(k: String): String = k.takeWhile(_ != '_')
-    // Protocol-split subtotals: the DuckDB oracle answers lake-
-    // lifecycle and streaming gates in closed form without performing
-    // the commit protocol / micro-batch work, so the headline ratio
-    // drifts for structural reasons as those gates accumulate. The
-    // split lets compute-vs-oracle be read directly.
-    val lakeProtocolQs = Set(19, 54, 74, 80, 84, 90, 91, 100, 101, 109,
-      110, 113, 125, 138, 145, 163, 164, 175, 176, 177, 187, 199, 208,
-      223, 226, 227, 232, 234, 235, 250, 254, 255, 262, 272, 275,
-      277, 278, 279, 280, 283, 284, 287, 291, 293, 294, 295, 296, 299,
-      301, 302, 303)
-    val streamingQs = Set(48, 51, 58, 62, 63, 64, 88, 99, 102, 116, 131,
-      161, 168, 171, 200, 233, 240, 273, 300)
-    def category(k: String): String = {
-      val n = shortKey(k).stripPrefix("q").toIntOption.getOrElse(-1)
-      if (streamingQs(n)) "streaming"
-      else if (lakeProtocolQs(n)) "lake_protocol"
-      else "compute"
-    }
-    val catTotals = results.toSeq.groupBy { case (k, _) => category(k) }
+    // One subtotal per Gate.Kind, so compute-vs-oracle reads directly:
+    // the headline ratio drifts as protocol gates accumulate.
+    val gates = SparkEntry.gates
+    val catTotals = results.toSeq.groupBy { case (k, _) => gates(k).kind }
       .map { case (c, vs) => c -> vs.map(_._2).sum }
-    val catJson = Seq("compute", "lake_protocol", "streaming")
-      .map(c => "\"" + c + "\":" + ms(catTotals.getOrElse(c, 0.0)))
+    val catJson = Gate.kinds
+      .map(c => "\"" + c.label + "\":" + ms(catTotals.getOrElse(c, 0.0)))
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val fullQs = results.toSeq.sortBy(_._1)
@@ -200,14 +183,16 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"subtotals":$catJson,"sentinel":$sentinelJson,"queries":$lineQs,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_full.json"),
+    // Artifacts go under target/, so a bench run leaves the checkout clean.
+    val outDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get("target"))
+    java.nio.file.Files.writeString(outDir.resolve("bench_full.json"),
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"subtotals":$catJson,"sentinel":$sentinelJson,"queries":$fullQs,"sf":"$sfDir"}""")
     // prefix-free fallback for parsers that reject sbt's "[info] "
     // stdout prefix: the IDENTICAL one-line JSON at a fixed path
     // beside bench_full.json
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_line.json"), line + "\n")
+    java.nio.file.Files.writeString(outDir.resolve("bench_line.json"),
+      line + "\n")
     spark.stop()
     // last line of program output so it survives the tail capture
     println(line)

@@ -3,36 +3,28 @@
 
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** The query modules; every view below derives from their gates. */
+  def modules: Seq[Gates] = Seq(ops.Relational, ops.Pipeline, ops.Privacy,
+    ops.TextAnalysis, ops.Dedup, ops.Similarity, ops.Multimodal,
+    streaming.EventsStream, ops.EventsOps, ops.Sampling, ops.Vectors,
+    streaming.StreamOps, ops.Chunking, ops.Skew, ops.Profiling, ops.Reshape,
+    ops.CorpusHygiene, ops.Layout, ops.HeavyHitters, ops.Ivm, ops.Features,
+    ops.TextSources, ops.Eval, streaming.CdfStream)
+
+  def gates: Map[String, Gate] = Gate.byName(modules.flatMap(_.gates))
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.Pipeline.queries ++ ops.Privacy.queries ++
-      ops.TextAnalysis.queries ++ ops.Dedup.queries ++ ops.Similarity.queries ++
-      ops.Multimodal.queries ++ streaming.EventsStream.queries ++
-      ops.EventsOps.queries ++ ops.Sampling.queries ++ ops.Vectors.queries ++
-      streaming.StreamOps.queries ++ ops.Chunking.queries ++
-      ops.Skew.queries ++ ops.Profiling.queries ++ ops.Reshape.queries ++
-      ops.CorpusHygiene.queries ++ ops.Layout.queries ++
-      ops.HeavyHitters.queries ++ ops.Ivm.queries ++ ops.Features.queries ++
-      ops.TextSources.queries ++ ops.Eval.queries ++
-      streaming.CdfStream.queries
+    gates.map { case (n, g) => n -> g.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    ops.Relational.oracles ++ ops.Pipeline.oracles ++ ops.Privacy.oracles ++
-      ops.TextAnalysis.oracles ++ ops.Dedup.oracles ++ ops.Similarity.oracles ++
-      ops.Multimodal.oracles ++ streaming.EventsStream.oracles ++
-      ops.EventsOps.oracles ++ ops.Sampling.oracles ++ ops.Vectors.oracles ++
-      streaming.StreamOps.oracles ++ ops.Chunking.oracles ++
-      ops.Skew.oracles ++ ops.Profiling.oracles ++ ops.Reshape.oracles ++
-      ops.CorpusHygiene.oracles ++ ops.Layout.oracles ++
-      ops.HeavyHitters.oracles ++ ops.Ivm.oracles ++ ops.Features.oracles ++
-      ops.TextSources.oracles ++ ops.Eval.oracles ++
-      streaming.CdfStream.oracles
+    gates.map { case (n, g) => n -> g.oracle }
 }

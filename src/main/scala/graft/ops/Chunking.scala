@@ -21,7 +21,7 @@ import graft.functions.Text.{tokens, tokensSql}
   * order — exactly one exchange. Nothing here is data-dependent in
   * shape, so the plans are identical at any corpus size.
   */
-object Chunking {
+object Chunking extends graft.Gates {
 
   /** Boilerplate cleaning: strip URLs and e-mail addresses, collapse
     * runs of spaces, trim. Patterns are deliberately in the common
@@ -208,17 +208,10 @@ object Chunking {
       |GROUP BY 1
       |ORDER BY bin""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q71_clean_text" -> (q71CleanText _),
-    "q72_chunks" -> (q72Chunks _),
-    "q73_packing" -> (q73Packing _),
-    "q118_stride_chunks" -> (q118StrideChunks _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q71_clean_text" -> q71Oracle,
-    "q72_chunks" -> q72Oracle,
-    "q73_packing" -> q73Oracle,
-    "q118_stride_chunks" -> q118Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q71_clean_text", q71CleanText, q71Oracle),
+    gate("q72_chunks", q72Chunks, q72Oracle),
+    gate("q73_packing", q73Packing, q73Oracle),
+    gate("q118_stride_chunks", q118StrideChunks, q118Oracle)
   )
 }

@@ -20,7 +20,7 @@ import graft.functions.Text.{tokens, tokensSql}
   * filter cascade (cf. C4, Raffel et al. 2020 §2.2; RefinedWeb,
   * Penedo et al. 2023 §3).
   */
-object CorpusHygiene {
+object CorpusHygiene extends graft.Gates {
 
   /** Passage-level duplication coverage — the corpus-health metric
     * behind CCNet/Dolma-style paragraph dedup, restated on word
@@ -153,13 +153,8 @@ object CorpusHygiene {
       |FROM k GROUP BY source
       |ORDER BY source""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q105_dup_passages" -> (q105DupPassages _),
-    "q107_c4_filter" -> (q107C4Filter _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q105_dup_passages" -> q105Oracle,
-    "q107_c4_filter" -> q107Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q105_dup_passages", q105DupPassages, q105Oracle),
+    gate("q107_c4_filter", q107C4Filter, q107Oracle)
   )
 }

@@ -31,7 +31,7 @@ import graft.functions.Text.{tokens, tokensSql}
   *  - hashes are md5-hex (lexicographic min == uniform min-hash) so the
   *    DuckDB oracle can reproduce them bit-for-bit.
   */
-object Dedup {
+object Dedup extends graft.Gates {
 
   /** Word 3-gram shingles per document, via the codegen'd
     * [[graft.functions.ShingleExpressions.WordNGrams]] kernel (same
@@ -1849,49 +1849,27 @@ object Dedup {
       |FROM allp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q260_containment" -> (q260Containment _),
-    "q264_jaro_winkler" -> (q264JaroWinklerMatch _),
-    "q211_sorted_neighborhood" -> (q211SortedNeighborhood _),
-    "q202_substring_dedup" -> (q202SubstringDedup _),
-    "q180_semdedup" -> (q180SemDedup _),
-    "q184_semdedup_auto" -> (q184SemDedupAuto _),
-    "q153_incremental_lsh" -> (q153IncrementalLsh _),
-    "q147_er_blocking" -> (q147ErBlocking _),
-    "q191_fellegi_sunter" -> (q191FellegiSunter _),
-    "q119_leakage_split" -> (q119LeakageSplit _),
-    "q130_setsim_join" -> (q130SetSimJoin _),
-    "q141_cluster_canonical" -> (q141ClusterCanonical _),
-    "q40_exact_dedup" -> (q40ExactDedup _),
-    "q41_ngram_jaccard" -> (q41NgramJaccard _),
-    "q42_minhash_lsh" -> (q42MinhashLsh _),
-    "q43_simhash" -> (q43Simhash _),
-    "q57_dedup_clusters" -> (q57DedupClusters _),
-    "q67_simhash_near_dup" -> (q67SimhashNearDup _),
-    "q74_incremental_dedup" -> (q74IncrementalDedup _),
-    "q94_decontaminate" -> (q94Decontaminate _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q260_containment" -> q260Oracle,
-    "q264_jaro_winkler" -> q264Oracle,
-    "q211_sorted_neighborhood" -> q211Oracle,
-    "q202_substring_dedup" -> q202Oracle,
-    "q180_semdedup" -> q180Oracle,
-    "q184_semdedup_auto" -> q184Oracle,
-    "q153_incremental_lsh" -> q153Oracle,
-    "q119_leakage_split" -> q119Oracle,
-    "q147_er_blocking" -> q147Oracle,
-    "q191_fellegi_sunter" -> q191Oracle,
-    "q130_setsim_join" -> q130Oracle,
-    "q141_cluster_canonical" -> q141Oracle,
-    "q40_exact_dedup" -> q40Oracle,
-    "q41_ngram_jaccard" -> q41Oracle,
-    "q42_minhash_lsh" -> q42Oracle,
-    "q43_simhash" -> q43Oracle,
-    "q57_dedup_clusters" -> q57Oracle,
-    "q67_simhash_near_dup" -> q67Oracle,
-    "q74_incremental_dedup" -> q74Oracle,
-    "q94_decontaminate" -> q94Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q260_containment", q260Containment, q260Oracle),
+    gate("q264_jaro_winkler", q264JaroWinklerMatch, q264Oracle),
+    gate("q211_sorted_neighborhood", q211SortedNeighborhood, q211Oracle),
+    gate("q202_substring_dedup", q202SubstringDedup, q202Oracle),
+    gate("q180_semdedup", q180SemDedup, q180Oracle),
+    gate("q184_semdedup_auto", q184SemDedupAuto, q184Oracle),
+    gate("q153_incremental_lsh", q153IncrementalLsh, q153Oracle),
+    gate("q147_er_blocking", q147ErBlocking, q147Oracle),
+    gate("q191_fellegi_sunter", q191FellegiSunter, q191Oracle),
+    gate("q119_leakage_split", q119LeakageSplit, q119Oracle),
+    gate("q130_setsim_join", q130SetSimJoin, q130Oracle),
+    gate("q141_cluster_canonical", q141ClusterCanonical, q141Oracle),
+    gate("q40_exact_dedup", q40ExactDedup, q40Oracle),
+    gate("q41_ngram_jaccard", q41NgramJaccard, q41Oracle),
+    gate("q42_minhash_lsh", q42MinhashLsh, q42Oracle),
+    gate("q43_simhash", q43Simhash, q43Oracle),
+    gate("q57_dedup_clusters", q57DedupClusters, q57Oracle),
+    gate("q67_simhash_near_dup", q67SimhashNearDup, q67Oracle),
+    gate("q74_incremental_dedup", q74IncrementalDedup,
+      q74Oracle, graft.Gate.LakeProtocol),
+    gate("q94_decontaminate", q94Decontaminate, q94Oracle)
   )
 }

@@ -14,7 +14,7 @@ import graft.Tables._
   * where "collect the scores and call sklearn" stopped being an option
   * somewhere around the first terabyte.
   */
-object Eval {
+object Eval extends graft.Gates {
 
   /** Exact ROC-AUC via the Mann-Whitney U statistic — the rank-sum
     * identity AUC = U/(P·N), with midrank tie handling, computed
@@ -915,33 +915,18 @@ object Eval {
       |  round(i.iso, 6) AS iso
       |FROM hist h JOIN iso i ON h.b = i.b ORDER BY h.b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q205_isotonic_calibration" -> (q205IsotonicCalibration _),
-    "q204_decision_stump" -> (q204DecisionStump _),
-    "q203_ols_segment" -> (q203OlsSegment _),
-    "q165_auc" -> (q165Auc _),
-    "q268_confusion_metrics" -> (q268ConfusionMetrics _),
-    "q241_pr_auc" -> (q241PrAuc _),
-    "q197_conformal_coverage" -> (q197ConformalCoverage _),
-    "q196_propensity_att" -> (q196PropensityAtt _),
-    "q194_lift_gains" -> (q194LiftGains _),
-    "q190_calibration" -> (q190Calibration _),
-    "q166_sketch_merge" -> (q166SketchMerge _),
-    "q179_cuped" -> (q179Cuped _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q205_isotonic_calibration" -> q205Oracle,
-    "q204_decision_stump" -> q204Oracle,
-    "q203_ols_segment" -> q203Oracle,
-    "q165_auc" -> q165Oracle,
-    "q268_confusion_metrics" -> q268Oracle,
-    "q241_pr_auc" -> q241Oracle,
-    "q190_calibration" -> q190Oracle,
-    "q194_lift_gains" -> q194Oracle,
-    "q196_propensity_att" -> q196Oracle,
-    "q197_conformal_coverage" -> q197Oracle,
-    "q166_sketch_merge" -> q166Oracle,
-    "q179_cuped" -> q179Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q205_isotonic_calibration", q205IsotonicCalibration, q205Oracle),
+    gate("q204_decision_stump", q204DecisionStump, q204Oracle),
+    gate("q203_ols_segment", q203OlsSegment, q203Oracle),
+    gate("q165_auc", q165Auc, q165Oracle),
+    gate("q268_confusion_metrics", q268ConfusionMetrics, q268Oracle),
+    gate("q241_pr_auc", q241PrAuc, q241Oracle),
+    gate("q197_conformal_coverage", q197ConformalCoverage, q197Oracle),
+    gate("q196_propensity_att", q196PropensityAtt, q196Oracle),
+    gate("q194_lift_gains", q194LiftGains, q194Oracle),
+    gate("q190_calibration", q190Calibration, q190Oracle),
+    gate("q166_sketch_merge", q166SketchMerge, q166Oracle),
+    gate("q179_cuped", q179Cuped, q179Oracle)
   )
 }

@@ -12,7 +12,7 @@ import graft.Tables._
 /** Event-stream operators beyond the reference's batch surface ([EXT]):
   * as-of join and sketch-based distinct counting.
   */
-object EventsOps {
+object EventsOps extends graft.Gates {
 
   /** As-of join, composed from built-ins (SURVEY.md §2.3's preferred
     * path (a)): for every `error` event, the most recent `purchase` by
@@ -1122,49 +1122,26 @@ object EventsOps {
       |    / (CAST(sx AS DOUBLE) / d), 6) AS fano
       |FROM m ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q249_fano_factor" -> (q249FanoFactor _),
-    "q143_retention_cohorts" -> (q143RetentionCohorts _),
-    "q201_backtest_forecast" -> (q201BacktestForecast _),
-    "q192_kaplan_meier" -> (q192KaplanMeier _),
-    "q274_log_rank" -> (q274LogRank _),
-    "q144_last_touch" -> (q144LastTouch _),
-    "q114_gap_fill" -> (q114GapFill _),
-    "q117_rolling_active" -> (q117RollingActive _),
-    "q49_asof_join" -> (q49AsofJoin _),
-    "q50_approx_distinct" -> (q50ApproxDistinct _),
-    "q292_bottomk_sketch" -> (q292BottomkSketch _),
-    "q120_approx_pct" -> (q120ApproxPctWitness _),
-    "q122_markov_transitions" -> (q122MarkovTransitions _),
-    "q126_scd2" -> (q126Scd2 _),
-    "q132_funnel_conversion" -> (q132FunnelConversion _),
-    "q137_arrival_gaps" -> (q137ArrivalGaps _),
-    "q65_percentiles" -> (q65Percentiles _),
-    "q75_band_join" -> (q75BandJoin _),
-    "q82_daily_deltas" -> (q82DailyDeltas _),
-    "q92_cogroup_funnel" -> (q92CogroupFunnel _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q249_fano_factor" -> q249Oracle,
-    "q143_retention_cohorts" -> q143Oracle,
-    "q192_kaplan_meier" -> q192Oracle,
-    "q274_log_rank" -> q274Oracle,
-    "q201_backtest_forecast" -> q201Oracle,
-    "q144_last_touch" -> q144Oracle,
-    "q114_gap_fill" -> q114Oracle,
-    "q117_rolling_active" -> q117Oracle,
-    "q49_asof_join" -> q49Oracle,
-    "q50_approx_distinct" -> q50Oracle,
-    "q292_bottomk_sketch" -> q292Oracle,
-    "q120_approx_pct" -> q120Oracle,
-    "q122_markov_transitions" -> q122Oracle,
-    "q126_scd2" -> q126Oracle,
-    "q132_funnel_conversion" -> q132Oracle,
-    "q137_arrival_gaps" -> q137Oracle,
-    "q65_percentiles" -> q65Oracle,
-    "q75_band_join" -> q75Oracle,
-    "q82_daily_deltas" -> q82Oracle,
-    "q92_cogroup_funnel" -> q92Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q249_fano_factor", q249FanoFactor, q249Oracle),
+    gate("q143_retention_cohorts", q143RetentionCohorts, q143Oracle),
+    gate("q201_backtest_forecast", q201BacktestForecast, q201Oracle),
+    gate("q192_kaplan_meier", q192KaplanMeier, q192Oracle),
+    gate("q274_log_rank", q274LogRank, q274Oracle),
+    gate("q144_last_touch", q144LastTouch, q144Oracle),
+    gate("q114_gap_fill", q114GapFill, q114Oracle),
+    gate("q117_rolling_active", q117RollingActive, q117Oracle),
+    gate("q49_asof_join", q49AsofJoin, q49Oracle),
+    gate("q50_approx_distinct", q50ApproxDistinct, q50Oracle),
+    gate("q292_bottomk_sketch", q292BottomkSketch, q292Oracle),
+    gate("q120_approx_pct", q120ApproxPctWitness, q120Oracle),
+    gate("q122_markov_transitions", q122MarkovTransitions, q122Oracle),
+    gate("q126_scd2", q126Scd2, q126Oracle),
+    gate("q132_funnel_conversion", q132FunnelConversion, q132Oracle),
+    gate("q137_arrival_gaps", q137ArrivalGaps, q137Oracle),
+    gate("q65_percentiles", q65Percentiles, q65Oracle),
+    gate("q75_band_join", q75BandJoin, q75Oracle),
+    gate("q82_daily_deltas", q82DailyDeltas, q82Oracle),
+    gate("q92_cogroup_funnel", q92CogroupFunnel, q92Oracle)
   )
 }

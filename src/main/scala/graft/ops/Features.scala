@@ -15,7 +15,7 @@ import graft.Tables._
   * uses to turn raw columns into model features and to prove two
   * copies of a 100 TB table are identical without moving either.
   */
-object Features {
+object Features extends graft.Gates {
 
   /** Equi-depth (quantile) binning of `events.value` into 10 deciles —
     * the feature-discretization complement to q129's equi-WIDTH
@@ -4104,91 +4104,47 @@ object Features {
       |       ELSE 'tie' END AS dominant
       |FROM ew CROSS JOIN em""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q270_seasonal_strength" -> (q270SeasonalStrength _),
-    "q285_robust_stats" -> (q285RobustStats _),
-    "q263_holt_linear" -> (q263HoltLinear _),
-    "q256_anova_f" -> (q256AnovaF _),
-    "q257_effect_sizes" -> (q257EffectSizes _),
-    "q258_theil_sen" -> (q258TheilSen _),
-    "q259_clustering_coeff" -> (q259ClusteringCoeff _),
-    "q251_kendall_tau" -> (q251KendallTau _),
-    "q252_mood_median" -> (q252MoodMedian _),
-    "q231_poisson_bootstrap" -> (q231PoissonBootstrap _),
-    "q230_pagerank_parts" -> (q230PagerankParts _),
-    "q229_psi" -> (q229Psi _),
-    "q222_mann_whitney" -> (q222MannWhitney _),
-    "q236_welch_t" -> (q236WelchT _),
-    "q237_ks_test" -> (q237KsTest _),
-    "q238_spearman" -> (q238Spearman _),
-    "q242_cramers_v" -> (q242CramersV _),
-    "q243_jsd" -> (q243Jsd _),
-    "q244_cusum" -> (q244Cusum _),
-    "q245_mutual_info" -> (q245MutualInfo _),
-    "q239_gini" -> (q239Gini _),
-    "q221_acf" -> (q221Acf _),
-    "q224_modularity" -> (q224Modularity _),
-    "q225_assortativity" -> (q225Assortativity _),
-    "q220_sssp_relax" -> (q220SsspRelax _),
-    "q219_hits" -> (q219Hits _),
-    "q218_link_prediction" -> (q218LinkPrediction _),
-    "q206_label_propagation" -> (q206LabelPropagation _),
-    "q207_bfs_hops" -> (q207BfsHops _),
-    "q170_string_indexer" -> (q170StringIndexer _),
-    "q198_coreness" -> (q198Coreness _),
-    "q195_target_encoding" -> (q195TargetEncoding _),
-    "q162_pit_join" -> (q162PitJoin _),
-    "q159_ewma" -> (q159Ewma _),
-    "q160_interval_join" -> (q160IntervalJoin _),
-    "q154_triangles" -> (q154Triangles(_, _)),
-    "q155_jl_projection" -> (q155JlProjection _),
-    "q156_robust_scale" -> (q156RobustScale _),
-    "q150_equidepth_bins" -> (q150EquidepthBins _),
-    "q151_chi_square" -> (q151ChiSquare _),
-    "q152_table_checksum" -> (q152TableChecksum _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q285_robust_stats" -> q285Oracle,
-    "q270_seasonal_strength" -> q270Oracle,
-    "q263_holt_linear" -> q263Oracle,
-    "q256_anova_f" -> q256Oracle,
-    "q257_effect_sizes" -> q257Oracle,
-    "q258_theil_sen" -> q258Oracle,
-    "q259_clustering_coeff" -> q259Oracle,
-    "q251_kendall_tau" -> q251Oracle,
-    "q252_mood_median" -> q252Oracle,
-    "q206_label_propagation" -> q206Oracle,
-    "q207_bfs_hops" -> q207Oracle,
-    "q170_string_indexer" -> q170Oracle,
-    "q195_target_encoding" -> q195Oracle,
-    "q198_coreness" -> q198Oracle,
-    "q162_pit_join" -> q162Oracle,
-    "q159_ewma" -> q159Oracle,
-    "q160_interval_join" -> q160Oracle,
-    "q154_triangles" -> q154Oracle,
-    "q218_link_prediction" -> q218Oracle,
-    "q219_hits" -> q219Oracle,
-    "q220_sssp_relax" -> q220Oracle,
-    "q221_acf" -> q221Oracle,
-    "q224_modularity" -> q224Oracle,
-    "q225_assortativity" -> q225Oracle,
-    "q222_mann_whitney" -> q222Oracle,
-    "q236_welch_t" -> q236Oracle,
-    "q237_ks_test" -> q237Oracle,
-    "q238_spearman" -> q238Oracle,
-    "q242_cramers_v" -> q242Oracle,
-    "q243_jsd" -> q243Oracle,
-    "q244_cusum" -> q244Oracle,
-    "q245_mutual_info" -> q245Oracle,
-    "q239_gini" -> q239Oracle,
-    "q229_psi" -> q229Oracle,
-    "q230_pagerank_parts" -> q230Oracle,
-    "q231_poisson_bootstrap" -> q231Oracle,
-    "q155_jl_projection" -> q155Oracle,
-    "q156_robust_scale" -> q156Oracle,
-    "q150_equidepth_bins" -> q150Oracle,
-    "q151_chi_square" -> q151Oracle,
-    "q152_table_checksum" -> q152Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q270_seasonal_strength", q270SeasonalStrength, q270Oracle),
+    gate("q285_robust_stats", q285RobustStats, q285Oracle),
+    gate("q263_holt_linear", q263HoltLinear, q263Oracle),
+    gate("q256_anova_f", q256AnovaF, q256Oracle),
+    gate("q257_effect_sizes", q257EffectSizes, q257Oracle),
+    gate("q258_theil_sen", q258TheilSen, q258Oracle),
+    gate("q259_clustering_coeff", q259ClusteringCoeff, q259Oracle),
+    gate("q251_kendall_tau", q251KendallTau, q251Oracle),
+    gate("q252_mood_median", q252MoodMedian, q252Oracle),
+    gate("q231_poisson_bootstrap", q231PoissonBootstrap, q231Oracle),
+    gate("q230_pagerank_parts", q230PagerankParts, q230Oracle),
+    gate("q229_psi", q229Psi, q229Oracle),
+    gate("q222_mann_whitney", q222MannWhitney, q222Oracle),
+    gate("q236_welch_t", q236WelchT, q236Oracle),
+    gate("q237_ks_test", q237KsTest, q237Oracle),
+    gate("q238_spearman", q238Spearman, q238Oracle),
+    gate("q242_cramers_v", q242CramersV, q242Oracle),
+    gate("q243_jsd", q243Jsd, q243Oracle),
+    gate("q244_cusum", q244Cusum, q244Oracle),
+    gate("q245_mutual_info", q245MutualInfo, q245Oracle),
+    gate("q239_gini", q239Gini, q239Oracle),
+    gate("q221_acf", q221Acf, q221Oracle),
+    gate("q224_modularity", q224Modularity, q224Oracle),
+    gate("q225_assortativity", q225Assortativity, q225Oracle),
+    gate("q220_sssp_relax", q220SsspRelax, q220Oracle),
+    gate("q219_hits", q219Hits, q219Oracle),
+    gate("q218_link_prediction", q218LinkPrediction, q218Oracle),
+    gate("q206_label_propagation", q206LabelPropagation, q206Oracle),
+    gate("q207_bfs_hops", q207BfsHops, q207Oracle),
+    gate("q170_string_indexer", q170StringIndexer, q170Oracle),
+    gate("q198_coreness", q198Coreness, q198Oracle),
+    gate("q195_target_encoding", q195TargetEncoding, q195Oracle),
+    gate("q162_pit_join", q162PitJoin, q162Oracle),
+    gate("q159_ewma", q159Ewma, q159Oracle),
+    gate("q160_interval_join", q160IntervalJoin, q160Oracle),
+    gate("q154_triangles", q154Triangles(_, _), q154Oracle),
+    gate("q155_jl_projection", q155JlProjection, q155Oracle),
+    gate("q156_robust_scale", q156RobustScale, q156Oracle),
+    gate("q150_equidepth_bins", q150EquidepthBins, q150Oracle),
+    gate("q151_chi_square", q151ChiSquare, q151Oracle),
+    gate("q152_table_checksum", q152TableChecksum, q152Oracle)
   )
 }

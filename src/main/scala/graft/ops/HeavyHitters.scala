@@ -29,7 +29,7 @@ import graft.Tables._
   * is what lets a DuckDB oracle (plain GROUP BY ... HAVING) verify an
   * approximate algorithm hash-exactly.
   */
-object HeavyHitters {
+object HeavyHitters extends graft.Gates {
 
   /** Misra-Gries summary of one partition: at most k counters. */
   private[ops] def misraGries(it: Iterator[String], k: Int)
@@ -88,11 +88,7 @@ object HeavyHitters {
       |FROM t GROUP BY term HAVING count(*) >= 500
       |ORDER BY term""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q112_heavy_hitters" -> (q112HeavyHitters _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q112_heavy_hitters" -> q112Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q112_heavy_hitters", q112HeavyHitters, q112Oracle)
   )
 }

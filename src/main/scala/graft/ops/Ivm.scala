@@ -24,7 +24,7 @@ import graft.lake.MiniLake
   * its rollups for ~1/1000 of the recompute cost; the view itself can
   * live in a MiniLake table keyed for the join.
   */
-object Ivm {
+object Ivm extends graft.Gates(graft.Gate.LakeProtocol) {
 
   /** Signed per-group deltas of a CDF slice: +1 for rows arriving
     * (insert / update_postimage), −1 for rows leaving (delete /
@@ -102,11 +102,7 @@ object Ivm {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q113_incremental_view" -> (q113IncrementalView _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q113_incremental_view" -> q113Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q113_incremental_view", q113IncrementalView, q113Oracle)
   )
 }

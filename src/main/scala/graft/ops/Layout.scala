@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * pick bucket counts so `rows/buckets` fits an executor's memory at
   * target scale.
   */
-object Layout {
+object Layout extends graft.Gates(graft.Gate.LakeProtocol) {
 
   /** Write `df` as a bucketed+sorted catalog table. */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
@@ -140,11 +140,7 @@ object Layout {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q110_bucketed_join" -> (q110BucketedJoin _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q110_bucketed_join" -> q110Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q110_bucketed_join", q110BucketedJoin, q110Oracle)
   )
 }

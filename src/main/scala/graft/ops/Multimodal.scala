@@ -22,7 +22,7 @@ import graft.Tables._
   * oracle exercise. Payloads are derived from testdata (`documents.text`
   * UTF-8 bytes) so the oracle can recompute every derived feature.
   */
-object Multimodal {
+object Multimodal extends graft.Gates {
 
   /** Lookup-table lowercase hex. The f"%02x"-per-byte spelling this
     * replaces was the measured per-row cost of the codec-seam gates
@@ -344,17 +344,10 @@ object Multimodal {
       |SELECT * FROM exact UNION ALL SELECT * FROM near
       |ORDER BY hamming_bucket""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q47_media_features" -> (q47MediaFeatures _),
-    "q68_media_resize" -> (q68MediaResize _),
-    "q69_frame_sample" -> (q69FrameSample _),
-    "q276_media_near_dup" -> (q276MediaNearDup _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q47_media_features" -> q47Oracle,
-    "q68_media_resize" -> q68Oracle,
-    "q69_frame_sample" -> q69Oracle,
-    "q276_media_near_dup" -> q276Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q47_media_features", q47MediaFeatures, q47Oracle),
+    gate("q68_media_resize", q68MediaResize, q68Oracle),
+    gate("q69_frame_sample", q69FrameSample, q69Oracle),
+    gate("q276_media_near_dup", q276MediaNearDup, q276Oracle)
   )
 }

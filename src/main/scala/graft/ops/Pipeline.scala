@@ -18,7 +18,7 @@ import graft.lake.{Cdc, MiniLake, Watermark}
   * path. The DuckDB oracle states the expected final silver snapshot
   * directly against `documents`.
   */
-object Pipeline {
+object Pipeline extends graft.Gates(graft.Gate.LakeProtocol) {
 
   /** create v0 (doc_id < 300) → append v1 (300–399) → merge-delete
     * (doc_id % 7 == 0) → two watermarked CDC passes (split mid-history
@@ -2178,99 +2178,51 @@ object Pipeline {
       |  CAST(0 AS BIGINT) AS n_active_constraints
       |FROM orders""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q208_check_constraints" -> (q208CheckConstraints _),
-    "q145_schema_evolution" -> (q145SchemaEvolution _),
-    "q125_forget_user" -> (q125ForgetUser _),
-    "q138_version_diff" -> (q138VersionDiff _),
-    "q19_cdc_roundtrip" -> (q19CdcRoundtrip _),
-    "q54_bucketed_cdc" -> (q54BucketedCdc _),
-    "q80_partitioned_lake" -> (q80PartitionedLake _),
-    "q90_time_travel" -> (q90TimeTravel _),
-    "q91_range_skipping" -> (q91RangeSkipping _),
-    "q100_zorder_2d" -> (q100Zorder2d _),
-    "q223_zorder_optimize" -> (q223ZorderOptimize _),
-    "q226_rename_column" -> (q226RenameColumn _),
-    "q227_drop_column" -> (q227DropColumn _),
-    "q101_string_skipping" -> (q101StringSkipping _),
-    "q109_delete_restore" -> (q109DeleteRestore _),
-    "q163_deletion_vectors" -> (q163DeletionVectors _),
-    "q164_bloom_skipping" -> (q164BloomSkipping _),
-    "q175_merge_upsert" -> (q175MergeUpsert _),
-    "q176_shallow_clone" -> (q176ShallowClone _),
-    "q177_table_history" -> (q177TableHistory _),
-    "q232_checkpoint_lifecycle" -> (q232CheckpointLifecycle _),
-    "q254_change_retention" -> (q254ChangeRetention _),
-    "q255_column_readd" -> (q255ColumnReadd _),
-    "q262_identity_column" -> (q262IdentityColumn _),
-    "q272_replace_where" -> (q272ReplaceWhere _),
-    "q275_protocol_version" -> (q275ProtocolVersion _),
-    "q277_timestamp_travel" -> (q277TimestampTravel _),
-    "q278_default_column" -> (q278DefaultColumn _),
-    "q279_type_widening" -> (q279TypeWidening _),
-    "q280_identity_concurrent" -> (q280IdentityConcurrent _),
-    "q283_vacuum_dry_run" -> (q283VacuumDryRun _),
-    "q284_concurrent_dv_delete" -> (q284ConcurrentDvDelete _),
-    "q287_changes_since" -> (q287ChangesSince _),
-    "q291_describe_detail" -> (q291DescribeDetail _),
-    "q293_identity_multiwriter" -> (q293IdentityMultiwriter _),
-    "q294_identity_by_default" -> (q294IdentityByDefault _),
-    "q295_timestamp_window" -> (q295TimestampWindow _),
-    "q296_row_tracking" -> (q296RowTracking _),
-    "q299_partition_evolution" -> (q299PartitionEvolution _),
-    "q301_append_only" -> (q301AppendOnly _),
-    "q302_writer_protocol" -> (q302WriterProtocol _),
-    "q303_merge_sync" -> (q303MergeSync _),
-    "q234_generated_partition" -> (q234GeneratedPartition _),
-    "q235_symlink_manifest" -> (q235SymlinkManifest _),
-    "q250_double_skipping" -> (q250DoubleSkipping _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q208_check_constraints" -> q208Oracle,
-    "q145_schema_evolution" -> q145Oracle,
-    "q125_forget_user" -> q125Oracle,
-    "q138_version_diff" -> q138Oracle,
-    "q19_cdc_roundtrip" -> q19Oracle,
-    "q54_bucketed_cdc" -> q19Oracle,
-    "q80_partitioned_lake" -> q80Oracle,
-    "q90_time_travel" -> q90Oracle,
-    "q91_range_skipping" -> q91Oracle,
-    "q100_zorder_2d" -> q100Oracle,
-    "q223_zorder_optimize" -> q223Oracle,
-    "q226_rename_column" -> q226Oracle,
-    "q227_drop_column" -> q227Oracle,
-    "q101_string_skipping" -> q101Oracle,
-    "q109_delete_restore" -> q109Oracle,
-    "q163_deletion_vectors" -> q163Oracle,
-    "q164_bloom_skipping" -> q164Oracle,
-    "q175_merge_upsert" -> q175Oracle,
-    "q176_shallow_clone" -> q176Oracle,
-    "q177_table_history" -> q177Oracle,
-    "q232_checkpoint_lifecycle" -> q232Oracle,
-    "q254_change_retention" -> q254Oracle,
-    "q255_column_readd" -> q255Oracle,
-    "q262_identity_column" -> q262Oracle,
-    "q272_replace_where" -> q272Oracle,
-    "q275_protocol_version" -> q275Oracle,
-    "q277_timestamp_travel" -> q277Oracle,
-    "q278_default_column" -> q278Oracle,
-    "q279_type_widening" -> q279Oracle,
-    "q280_identity_concurrent" -> q280Oracle,
-    "q283_vacuum_dry_run" -> q283Oracle,
-    "q284_concurrent_dv_delete" -> q284Oracle,
-    "q287_changes_since" -> q287Oracle,
-    "q291_describe_detail" -> q291Oracle,
-    "q293_identity_multiwriter" -> q293Oracle,
-    "q294_identity_by_default" -> q294Oracle,
-    "q295_timestamp_window" -> q295Oracle,
-    "q296_row_tracking" -> q296Oracle,
-    "q299_partition_evolution" -> q299Oracle,
-    "q301_append_only" -> q301Oracle,
-    "q302_writer_protocol" -> q302Oracle,
-    "q303_merge_sync" -> q303Oracle,
-    "q234_generated_partition" -> q234Oracle,
-    "q235_symlink_manifest" -> q235Oracle,
-    "q250_double_skipping" -> q250Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q208_check_constraints", q208CheckConstraints, q208Oracle),
+    gate("q145_schema_evolution", q145SchemaEvolution, q145Oracle),
+    gate("q125_forget_user", q125ForgetUser, q125Oracle),
+    gate("q138_version_diff", q138VersionDiff, q138Oracle),
+    gate("q19_cdc_roundtrip", q19CdcRoundtrip, q19Oracle),
+    gate("q54_bucketed_cdc", q54BucketedCdc, q19Oracle),
+    gate("q80_partitioned_lake", q80PartitionedLake, q80Oracle),
+    gate("q90_time_travel", q90TimeTravel, q90Oracle),
+    gate("q91_range_skipping", q91RangeSkipping, q91Oracle),
+    gate("q100_zorder_2d", q100Zorder2d, q100Oracle),
+    gate("q223_zorder_optimize", q223ZorderOptimize, q223Oracle),
+    gate("q226_rename_column", q226RenameColumn, q226Oracle),
+    gate("q227_drop_column", q227DropColumn, q227Oracle),
+    gate("q101_string_skipping", q101StringSkipping, q101Oracle),
+    gate("q109_delete_restore", q109DeleteRestore, q109Oracle),
+    gate("q163_deletion_vectors", q163DeletionVectors, q163Oracle),
+    gate("q164_bloom_skipping", q164BloomSkipping, q164Oracle),
+    gate("q175_merge_upsert", q175MergeUpsert, q175Oracle),
+    gate("q176_shallow_clone", q176ShallowClone, q176Oracle),
+    gate("q177_table_history", q177TableHistory, q177Oracle),
+    gate("q232_checkpoint_lifecycle", q232CheckpointLifecycle, q232Oracle),
+    gate("q254_change_retention", q254ChangeRetention, q254Oracle),
+    gate("q255_column_readd", q255ColumnReadd, q255Oracle),
+    gate("q262_identity_column", q262IdentityColumn, q262Oracle),
+    gate("q272_replace_where", q272ReplaceWhere, q272Oracle),
+    gate("q275_protocol_version", q275ProtocolVersion, q275Oracle),
+    gate("q277_timestamp_travel", q277TimestampTravel, q277Oracle),
+    gate("q278_default_column", q278DefaultColumn, q278Oracle),
+    gate("q279_type_widening", q279TypeWidening, q279Oracle),
+    gate("q280_identity_concurrent", q280IdentityConcurrent, q280Oracle),
+    gate("q283_vacuum_dry_run", q283VacuumDryRun, q283Oracle),
+    gate("q284_concurrent_dv_delete", q284ConcurrentDvDelete, q284Oracle),
+    gate("q287_changes_since", q287ChangesSince, q287Oracle),
+    gate("q291_describe_detail", q291DescribeDetail, q291Oracle),
+    gate("q293_identity_multiwriter", q293IdentityMultiwriter, q293Oracle),
+    gate("q294_identity_by_default", q294IdentityByDefault, q294Oracle),
+    gate("q295_timestamp_window", q295TimestampWindow, q295Oracle),
+    gate("q296_row_tracking", q296RowTracking, q296Oracle),
+    gate("q299_partition_evolution", q299PartitionEvolution, q299Oracle),
+    gate("q301_append_only", q301AppendOnly, q301Oracle),
+    gate("q302_writer_protocol", q302WriterProtocol, q302Oracle),
+    gate("q303_merge_sync", q303MergeSync, q303Oracle),
+    gate("q234_generated_partition", q234GeneratedPartition, q234Oracle),
+    gate("q235_symlink_manifest", q235SymlinkManifest, q235Oracle),
+    gate("q250_double_skipping", q250DoubleSkipping, q250Oracle)
   )
 }

@@ -19,7 +19,7 @@ import graft.ops.Pseudonymise._
   * output is a closed-form constant the oracle can state directly —
   * a driver-visible golden test of the UDF path.
   */
-object Privacy {
+object Privacy extends graft.Gates {
 
   /** Salted SHA-256 ID hashing through the real pseudonymisation op
     * (bit-compatible with the reference's golden,
@@ -402,27 +402,15 @@ object Privacy {
       |  5 * num <= nc * nt * (m - 1) AS meets_t
       |FROM emd ORDER BY nation, segment""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q266_entropy_l_diversity" -> (q266EntropyLDiversity _),
-    "q210_t_closeness" -> (q210TCloseness _),
-    "q20_hash_ids" -> (q20HashIds _),
-    "q21_round_hour" -> (q21RoundHour _),
-    "q22_round_month" -> (q22RoundMonth _),
-    "q23_redact_text" -> (q23RedactText _),
-    "q24_extract_entities" -> (q24ExtractEntities _),
-    "q188_k_anonymity" -> (q188KAnonymity _),
-    "q189_dp_counts" -> (q189DpCounts _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q266_entropy_l_diversity" -> q266Oracle,
-    "q210_t_closeness" -> q210Oracle,
-    "q20_hash_ids" -> q20Oracle,
-    "q21_round_hour" -> q21Oracle,
-    "q22_round_month" -> q22Oracle,
-    "q23_redact_text" -> q23Oracle,
-    "q24_extract_entities" -> q24Oracle,
-    "q188_k_anonymity" -> q188Oracle,
-    "q189_dp_counts" -> q189Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q266_entropy_l_diversity", q266EntropyLDiversity, q266Oracle),
+    gate("q210_t_closeness", q210TCloseness, q210Oracle),
+    gate("q20_hash_ids", q20HashIds, q20Oracle),
+    gate("q21_round_hour", q21RoundHour, q21Oracle),
+    gate("q22_round_month", q22RoundMonth, q22Oracle),
+    gate("q23_redact_text", q23RedactText, q23Oracle),
+    gate("q24_extract_entities", q24ExtractEntities, q24Oracle),
+    gate("q188_k_anonymity", q188KAnonymity, q188Oracle),
+    gate("q189_dp_counts", q189DpCounts, q189Oracle)
   )
 }

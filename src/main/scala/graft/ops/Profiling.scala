@@ -18,7 +18,7 @@ import graft.Tables._
   * wide single row unpivots driver-side into the (column, stats)
   * report. Profiling N columns never costs N scans.
   */
-object Profiling {
+object Profiling extends graft.Gates {
 
   private val profiled = Seq("o_orderkey", "o_orderpriority", "o_orderstatus")
 
@@ -607,29 +607,16 @@ object Profiling {
       |    THEN round(norm_sum / n_healthy, 6) END FROM w)
       |ORDER BY metric""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q185_vector_health" -> (q185VectorHealth _),
-    "q178_benford_audit" -> (q178BenfordAudit _),
-    "q149_corr_matrix" -> (q149CorrMatrix _),
-    "q136_cms_witness" -> (q136CmsWitness _),
-    "q139_median_impute" -> (q139MedianImpute _),
-    "q140_zscore_anomalies" -> (q140ZscoreAnomalies _),
-    "q83_column_profile" -> (q83ColumnProfile _),
-    "q106_stats_profile" -> (q106StatsProfile _),
-    "q111_expectations" -> (q111Expectations _),
-    "q129_value_histogram" -> (q129ValueHistogram _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q178_benford_audit" -> q178Oracle,
-    "q149_corr_matrix" -> q149Oracle,
-    "q136_cms_witness" -> q136Oracle,
-    "q139_median_impute" -> q139Oracle,
-    "q140_zscore_anomalies" -> q140Oracle,
-    "q83_column_profile" -> q83Oracle,
-    "q106_stats_profile" -> q106Oracle,
-    "q185_vector_health" -> q185Oracle,
-    "q111_expectations" -> q111Oracle,
-    "q129_value_histogram" -> q129Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q185_vector_health", q185VectorHealth, q185Oracle),
+    gate("q178_benford_audit", q178BenfordAudit, q178Oracle),
+    gate("q149_corr_matrix", q149CorrMatrix, q149Oracle),
+    gate("q136_cms_witness", q136CmsWitness, q136Oracle),
+    gate("q139_median_impute", q139MedianImpute, q139Oracle),
+    gate("q140_zscore_anomalies", q140ZscoreAnomalies, q140Oracle),
+    gate("q83_column_profile", q83ColumnProfile, q83Oracle),
+    gate("q106_stats_profile", q106StatsProfile, q106Oracle),
+    gate("q111_expectations", q111Expectations, q111Oracle),
+    gate("q129_value_histogram", q129ValueHistogram, q129Oracle)
   )
 }

@@ -24,7 +24,7 @@ import graft.Tables._
   *     key — with in-partition sorts, so state never exceeds one user's
   *     events per task.
   */
-object Relational {
+object Relational extends graft.Gates {
 
   private def ts(s: String) = lit(s).cast("timestamp")
 
@@ -1315,81 +1315,42 @@ object Relational {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q174_argmin_join" -> (q174ArgminJoin _),
-    "q148_skyline" -> (q148Skyline _),
-    "q146_pagerank_trade" -> (q146PagerankTrade _),
-    "q267_personalized_pagerank" -> (q267PersonalizedPagerank _),
-    "q269_harmonic_centrality" -> (q269HarmonicCentrality _),
-    "q127_trade_flows" -> (q127TradeFlows _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_shipping_priority" -> (q3ShippingPriority _),
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q5_nation_revenue" -> (q5NationRevenue _),
-    "q6_forecast" -> (q6Forecast _),
-    "q7_distinct_users" -> (q7DistinctUsers _),
-    "q8_top_orders_per_segment" -> (q8TopOrdersPerSegment _),
-    "q9_running_total" -> (q9RunningTotal _),
-    "q10_sessionization" -> (q10Sessions _),
-    "q11_customers_without_orders" -> (q11CustomersWithoutOrders _),
-    "q12_rollup" -> (q12Rollup _),
-    "q13_brand_revenue" -> (q13BrandRevenue _),
-    "q14_order_stats" -> (q14OrderStats _),
-    "q15_date_bounds" -> (q15DateBounds _),
-    "q16_set_ops" -> (q16SetOps _),
-    "q17_json_props" -> (q17JsonProps _),
-    "q104_variant_props" -> (q104VariantProps _),
-    "q18_hourly_events" -> (q18HourlyEvents _),
-    "q52_cube" -> (q52Cube _),
-    "q53_except" -> (q53Except _),
-    "q61_pivot_daily" -> (q61PivotDaily _),
-    "q64_session_window" -> (q64SessionWindow _),
-    "q70_nation_coverage" -> (q70NationCoverage _),
-    "q79_grouping_sets" -> (q79GroupingSets _),
-    "q86_topk_operator" -> (q86TopKOperator _),
-    "q87_bloom_pruned_join" -> (q87BloomPrunedJoin _),
-    "q181_waiting_suppliers" -> (q181WaitingSuppliers _),
-    "q182_small_qty_revenue" -> (q182SmallQuantityRevenue _),
-    "q183_dominant_suppliers" -> (q183DominantSuppliers _),
-    "q186_dormant_customers" -> (q186DormantCustomers _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q174_argmin_join" -> q174Oracle,
-    "q148_skyline" -> q148Oracle,
-    "q146_pagerank_trade" -> q146Oracle,
-    "q267_personalized_pagerank" -> q267Oracle,
-    "q269_harmonic_centrality" -> q269Oracle,
-    "q127_trade_flows" -> q127Oracle,
-    "q1_pricing_summary" -> q1Oracle,
-    "q3_shipping_priority" -> q3Oracle,
-    "q4_order_priority" -> q4Oracle,
-    "q5_nation_revenue" -> q5Oracle,
-    "q6_forecast" -> q6Oracle,
-    "q7_distinct_users" -> q7Oracle,
-    "q8_top_orders_per_segment" -> q8Oracle,
-    "q9_running_total" -> q9Oracle,
-    "q10_sessionization" -> q10Oracle,
-    "q11_customers_without_orders" -> q11Oracle,
-    "q12_rollup" -> q12Oracle,
-    "q13_brand_revenue" -> q13Oracle,
-    "q14_order_stats" -> q14Oracle,
-    "q15_date_bounds" -> q15Oracle,
-    "q16_set_ops" -> q16Oracle,
-    "q17_json_props" -> q17Oracle,
-    "q104_variant_props" -> q104Oracle,
-    "q18_hourly_events" -> q18Oracle,
-    "q52_cube" -> q52Oracle,
-    "q53_except" -> q53Oracle,
-    "q61_pivot_daily" -> q61Oracle,
-    "q64_session_window" -> q10Oracle,
-    "q70_nation_coverage" -> q70Oracle,
-    "q79_grouping_sets" -> q79Oracle,
-    "q86_topk_operator" -> q8Oracle,
-    "q87_bloom_pruned_join" -> q87Oracle,
-    "q181_waiting_suppliers" -> q181Oracle,
-    "q182_small_qty_revenue" -> q182Oracle,
-    "q183_dominant_suppliers" -> q183Oracle,
-    "q186_dormant_customers" -> q186Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q174_argmin_join", q174ArgminJoin, q174Oracle),
+    gate("q148_skyline", q148Skyline, q148Oracle),
+    gate("q146_pagerank_trade", q146PagerankTrade, q146Oracle),
+    gate("q267_personalized_pagerank", q267PersonalizedPagerank, q267Oracle),
+    gate("q269_harmonic_centrality", q269HarmonicCentrality, q269Oracle),
+    gate("q127_trade_flows", q127TradeFlows, q127Oracle),
+    gate("q1_pricing_summary", q1PricingSummary, q1Oracle),
+    gate("q3_shipping_priority", q3ShippingPriority, q3Oracle),
+    gate("q4_order_priority", q4OrderPriority, q4Oracle),
+    gate("q5_nation_revenue", q5NationRevenue, q5Oracle),
+    gate("q6_forecast", q6Forecast, q6Oracle),
+    gate("q7_distinct_users", q7DistinctUsers, q7Oracle),
+    gate("q8_top_orders_per_segment", q8TopOrdersPerSegment, q8Oracle),
+    gate("q9_running_total", q9RunningTotal, q9Oracle),
+    gate("q10_sessionization", q10Sessions, q10Oracle),
+    gate("q11_customers_without_orders", q11CustomersWithoutOrders, q11Oracle),
+    gate("q12_rollup", q12Rollup, q12Oracle),
+    gate("q13_brand_revenue", q13BrandRevenue, q13Oracle),
+    gate("q14_order_stats", q14OrderStats, q14Oracle),
+    gate("q15_date_bounds", q15DateBounds, q15Oracle),
+    gate("q16_set_ops", q16SetOps, q16Oracle),
+    gate("q17_json_props", q17JsonProps, q17Oracle),
+    gate("q104_variant_props", q104VariantProps, q104Oracle),
+    gate("q18_hourly_events", q18HourlyEvents, q18Oracle),
+    gate("q52_cube", q52Cube, q52Oracle),
+    gate("q53_except", q53Except, q53Oracle),
+    gate("q61_pivot_daily", q61PivotDaily, q61Oracle),
+    gate("q64_session_window", q64SessionWindow, q10Oracle),
+    gate("q70_nation_coverage", q70NationCoverage, q70Oracle),
+    gate("q79_grouping_sets", q79GroupingSets, q79Oracle),
+    gate("q86_topk_operator", q86TopKOperator, q8Oracle),
+    gate("q87_bloom_pruned_join", q87BloomPrunedJoin, q87Oracle),
+    gate("q181_waiting_suppliers", q181WaitingSuppliers, q181Oracle),
+    gate("q182_small_qty_revenue", q182SmallQuantityRevenue, q182Oracle),
+    gate("q183_dominant_suppliers", q183DominantSuppliers, q183Oracle),
+    gate("q186_dormant_customers", q186DormantCustomers, q186Oracle)
   )
 }

@@ -15,7 +15,7 @@ import graft.Tables._
   * (the fuzzy near-dup family's exact-metric member, alongside q41
   * Jaccard / q42 MinHash / q43 SimHash).
   */
-object Reshape {
+object Reshape extends graft.Gates {
 
   /** UNPIVOT: per-nation customer and supplier counts as a wide grid,
     * melted to (nation, metric, value) rows — `DataFrame.unpivot`, the
@@ -139,15 +139,9 @@ object Reshape {
       |WHERE levenshtein(a.pfx, b.pfx) <= 8
       |ORDER BY a_id, b_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q96_unpivot" -> (q96Unpivot _),
-    "q97_trailing_window" -> (q97TrailingWindow _),
-    "q98_fuzzy_pairs" -> (q98FuzzyPairs _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q96_unpivot" -> q96Oracle,
-    "q97_trailing_window" -> q97Oracle,
-    "q98_fuzzy_pairs" -> q98Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q96_unpivot", q96Unpivot, q96Oracle),
+    gate("q97_trailing_window", q97TrailingWindow, q97Oracle),
+    gate("q98_fuzzy_pairs", q98FuzzyPairs, q98Oracle)
   )
 }

@@ -24,7 +24,7 @@ import graft.Tables._
   * val, rest → test. Hex-string comparison keeps both engines
   * bit-identical with no hex→int conversion.
   */
-object Sampling {
+object Sampling extends graft.Gates {
 
   private def splitCol = {
     val bucket = substring(
@@ -850,31 +850,17 @@ object Sampling {
       |FROM step WHERE i >= 1 ORDER BY lang""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q282_unimax_allocation" -> (q282UnimaxAllocation _),
-    "q217_temperature_mix" -> (q217TemperatureMix _),
-    "q216_coverage_select" -> (q216CoverageSelect _),
-    "q214_dsir_resample" -> (q214DsirResample _),
-    "q167_pps_sample" -> (q167PpsSample _),
-    "q133_rebalance_plan" -> (q133RebalancePlan _),
-    "q59_hash_split" -> (q59HashSplit _),
-    "q78_capped_sample" -> (q78CappedSample _),
-    "q89_training_mix" -> (q89TrainingMix _),
-    "q93_shard_export" -> (q93ShardExport _),
-    "q103_quality_strata" -> (q103QualityStrata _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q282_unimax_allocation" -> q282Oracle,
-    "q214_dsir_resample" -> q214Oracle,
-    "q216_coverage_select" -> q216Oracle,
-    "q217_temperature_mix" -> q217Oracle,
-    "q167_pps_sample" -> q167Oracle,
-    "q133_rebalance_plan" -> q133Oracle,
-    "q59_hash_split" -> q59Oracle,
-    "q78_capped_sample" -> q78Oracle,
-    "q89_training_mix" -> q89Oracle,
-    "q93_shard_export" -> q93Oracle,
-    "q103_quality_strata" -> q103Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q282_unimax_allocation", q282UnimaxAllocation, q282Oracle),
+    gate("q217_temperature_mix", q217TemperatureMix, q217Oracle),
+    gate("q216_coverage_select", q216CoverageSelect, q216Oracle),
+    gate("q214_dsir_resample", q214DsirResample, q214Oracle),
+    gate("q167_pps_sample", q167PpsSample, q167Oracle),
+    gate("q133_rebalance_plan", q133RebalancePlan, q133Oracle),
+    gate("q59_hash_split", q59HashSplit, q59Oracle),
+    gate("q78_capped_sample", q78CappedSample, q78Oracle),
+    gate("q89_training_mix", q89TrainingMix, q89Oracle),
+    gate("q93_shard_export", q93ShardExport, q93Oracle),
+    gate("q103_quality_strata", q103QualityStrata, q103Oracle)
   )
 }

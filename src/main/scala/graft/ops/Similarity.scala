@@ -31,7 +31,7 @@ import graft.functions.VectorExpressions.cosine_similarity
   * 16× — never crossing the full matrix. Recall is asserted against
   * brute force in SimilaritySpec.
   */
-object Similarity {
+object Similarity extends graft.Gates {
 
   private[graft] def vecsDouble(s: SparkSession, dir: String): DataFrame =
     embeddings(s, dir)
@@ -1087,33 +1087,20 @@ object Similarity {
       |WHERE n.rn <= 3
       |ORDER BY n.qid, n.rn""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q297_bitext_mining" -> (q297BitextMining _),
-    "q298_hard_negatives" -> (q298HardNegatives _),
-    "q44_embedding_near_dup" -> (q44EmbeddingNearDup _),
-    "q45_cosine_topk" -> (q45CosineTopK _),
-    "q286_scalar_quantization" -> (q286ScalarQuantization _),
-    "q288_matryoshka_overlap" -> (q288MatryoshkaOverlap _),
-    "q213_ndcg_at_k" -> (q213NdcgAtK _),
-    "q46_ann_lsh" -> (q46AnnLsh _),
-    "q55_ann_ivf" -> (q55AnnIvf _),
-    "q169_maxsim" -> (q169Maxsim _),
-    "q187_ann_ivf_pq" -> (q187AnnIvfPq _),
-    "q199_ann_index_lifecycle" -> (q199AnnIndexLifecycle _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q297_bitext_mining" -> q297Oracle,
-    "q298_hard_negatives" -> q298Oracle,
-    "q44_embedding_near_dup" -> q44Oracle,
-    "q45_cosine_topk" -> q45Oracle,
-    "q286_scalar_quantization" -> q286Oracle,
-    "q288_matryoshka_overlap" -> q288Oracle,
-    "q213_ndcg_at_k" -> q213Oracle,
-    "q46_ann_lsh" -> witnessOracle,
-    "q55_ann_ivf" -> witnessOracle,
-    "q169_maxsim" -> q169Oracle,
-    "q187_ann_ivf_pq" -> witnessOracle,
-    "q199_ann_index_lifecycle" -> witnessOracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q297_bitext_mining", q297BitextMining, q297Oracle),
+    gate("q298_hard_negatives", q298HardNegatives, q298Oracle),
+    gate("q44_embedding_near_dup", q44EmbeddingNearDup, q44Oracle),
+    gate("q45_cosine_topk", q45CosineTopK, q45Oracle),
+    gate("q286_scalar_quantization", q286ScalarQuantization, q286Oracle),
+    gate("q288_matryoshka_overlap", q288MatryoshkaOverlap, q288Oracle),
+    gate("q213_ndcg_at_k", q213NdcgAtK, q213Oracle),
+    gate("q46_ann_lsh", q46AnnLsh, witnessOracle),
+    gate("q55_ann_ivf", q55AnnIvf, witnessOracle),
+    gate("q169_maxsim", q169Maxsim, q169Oracle),
+    gate("q187_ann_ivf_pq", q187AnnIvfPq,
+      witnessOracle, graft.Gate.LakeProtocol),
+    gate("q199_ann_index_lifecycle", q199AnnIndexLifecycle,
+      witnessOracle, graft.Gate.LakeProtocol)
   )
 }

@@ -14,7 +14,7 @@ import graft.Tables._
   * where one key dominates (the classic null-key / power-law problem
   * at 100 TB).
   */
-object Skew {
+object Skew extends graft.Gates {
 
   /** Two-phase salted aggregation: groupBy(keys :+ salt) partial →
     * groupBy(keys) final. Correct for decomposable aggregates; `sums`
@@ -131,13 +131,8 @@ object Skew {
       |FROM l JOIN customer ON k = c_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q81_salted_agg" -> (q81SaltedAgg _),
-    "q115_skew_join" -> (q115SkewJoin _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q81_salted_agg" -> q81Oracle,
-    "q115_skew_join" -> q115Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q81_salted_agg", q81SaltedAgg, q81Oracle),
+    gate("q115_skew_join", q115SkewJoin, q115Oracle)
   )
 }

@@ -20,7 +20,7 @@ import graft.functions.Text.{tokens, tokensSql}
   * each query is a single narrow pass over the table (no shuffle except
   * the final order for the oracle).
   */
-object TextAnalysis {
+object TextAnalysis extends graft.Gates {
 
   /** Token counting: n_tokens, character length, mean token length. */
   def q30TokenStats(s: SparkSession, dir: String): DataFrame =
@@ -1666,61 +1666,32 @@ object TextAnalysis {
       |FROM docs CROSS JOIN mu
       |GROUP BY source ORDER BY source""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q261_char_class_entropy" -> (q261CharClassEntropy _),
-    "q265_sentence_stats" -> (q265SentenceStats _),
-    "q271_flesch_kincaid" -> (q271FleschKincaid _),
-    "q253_unigram_lm_filter" -> (q253UnigramLmFilter _),
-    "q281_bigram_lm_filter" -> (q281BigramLmFilter _),
-    "q289_blocklist_scrub" -> (q289BlocklistScrub _),
-    "q290_epoch_shuffle" -> (q290EpochShuffle _),
-    "q246_zipf_fit" -> (q246ZipfFit _),
-    "q247_heaps_growth" -> (q247HeapsGrowth _),
-    "q248_novelty_rate" -> (q248NoveltyRate _),
-    "q172_bpe_merge" -> (q172BpeMerge _),
-    "q173_pair_lift" -> (q173PairLift _),
-    "q142_bm25_topk" -> (q142Bm25TopK _),
-    "q212_rrf_fusion" -> (q212RrfFusion _),
-    "q215_naive_bayes" -> (q215NaiveBayes _),
-    "q228_learning_curve" -> (q228LearningCurve _),
-    "q135_frequent_pairs" -> (q135FrequentPairs _),
-    "q124_vocab_coverage" -> (q124VocabCoverage _),
-    "q30_token_stats" -> (q30TokenStats _),
-    "q31_quality_score" -> (q31QualityScore _),
-    "q32_lang_id" -> (q32LangId _),
-    "q33_fingerprint" -> (q33Fingerprint _),
-    "q56_bpe_tokens" -> (q56BpeTokens _),
-    "q66_tfidf_top_terms" -> (q66TfidfTopTerms _),
-    "q76_lm_score" -> (q76LmScore _),
-    "q95_repetition_stats" -> (q95RepetitionStats _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q261_char_class_entropy" -> q261Oracle,
-    "q265_sentence_stats" -> q265Oracle,
-    "q271_flesch_kincaid" -> q271Oracle,
-    "q253_unigram_lm_filter" -> q253Oracle,
-    "q281_bigram_lm_filter" -> q281Oracle,
-    "q289_blocklist_scrub" -> q289Oracle,
-    "q290_epoch_shuffle" -> q290Oracle,
-    "q246_zipf_fit" -> q246Oracle,
-    "q247_heaps_growth" -> q247Oracle,
-    "q248_novelty_rate" -> q248Oracle,
-    "q172_bpe_merge" -> q172Oracle,
-    "q173_pair_lift" -> q173Oracle,
-    "q142_bm25_topk" -> q142Oracle,
-    "q212_rrf_fusion" -> q212Oracle,
-    "q215_naive_bayes" -> q215Oracle,
-    "q228_learning_curve" -> q228Oracle,
-    "q135_frequent_pairs" -> q135Oracle,
-    "q124_vocab_coverage" -> q124Oracle,
-    "q30_token_stats" -> q30Oracle,
-    "q31_quality_score" -> q31Oracle,
-    "q32_lang_id" -> q32Oracle,
-    "q33_fingerprint" -> q33Oracle,
-    "q56_bpe_tokens" -> q56Oracle,
-    "q66_tfidf_top_terms" -> q66Oracle,
-    "q76_lm_score" -> q76Oracle,
-    "q95_repetition_stats" -> q95Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q261_char_class_entropy", q261CharClassEntropy, q261Oracle),
+    gate("q265_sentence_stats", q265SentenceStats, q265Oracle),
+    gate("q271_flesch_kincaid", q271FleschKincaid, q271Oracle),
+    gate("q253_unigram_lm_filter", q253UnigramLmFilter, q253Oracle),
+    gate("q281_bigram_lm_filter", q281BigramLmFilter, q281Oracle),
+    gate("q289_blocklist_scrub", q289BlocklistScrub, q289Oracle),
+    gate("q290_epoch_shuffle", q290EpochShuffle, q290Oracle),
+    gate("q246_zipf_fit", q246ZipfFit, q246Oracle),
+    gate("q247_heaps_growth", q247HeapsGrowth, q247Oracle),
+    gate("q248_novelty_rate", q248NoveltyRate, q248Oracle),
+    gate("q172_bpe_merge", q172BpeMerge, q172Oracle),
+    gate("q173_pair_lift", q173PairLift, q173Oracle),
+    gate("q142_bm25_topk", q142Bm25TopK, q142Oracle),
+    gate("q212_rrf_fusion", q212RrfFusion, q212Oracle),
+    gate("q215_naive_bayes", q215NaiveBayes, q215Oracle),
+    gate("q228_learning_curve", q228LearningCurve, q228Oracle),
+    gate("q135_frequent_pairs", q135FrequentPairs, q135Oracle),
+    gate("q124_vocab_coverage", q124VocabCoverage, q124Oracle),
+    gate("q30_token_stats", q30TokenStats, q30Oracle),
+    gate("q31_quality_score", q31QualityScore, q31Oracle),
+    gate("q32_lang_id", q32LangId, q32Oracle),
+    gate("q33_fingerprint", q33Fingerprint, q33Oracle),
+    gate("q56_bpe_tokens", q56BpeTokens, q56Oracle),
+    gate("q66_tfidf_top_terms", q66TfidfTopTerms, q66Oracle),
+    gate("q76_lm_score", q76LmScore, q76Oracle),
+    gate("q95_repetition_stats", q95RepetitionStats, q95Oracle)
   )
 }

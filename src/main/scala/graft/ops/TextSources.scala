@@ -23,7 +23,7 @@ import graft.Tables._
   * like any production export), the read-back is a parallel text scan,
   * and the fidelity report is one map-side-combinable aggregate.
   */
-object TextSources {
+object TextSources extends graft.Gates {
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -99,15 +99,9 @@ object TextSources {
 
   val q193Oracle: String = fidelityOracle
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q157_jsonl_roundtrip" -> (q157JsonlRoundtrip _),
-    "q158_csv_roundtrip" -> (q158CsvRoundtrip _),
-    "q193_orc_roundtrip" -> (q193OrcRoundtrip _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q157_jsonl_roundtrip" -> q157Oracle,
-    "q158_csv_roundtrip" -> q158Oracle,
-    "q193_orc_roundtrip" -> q193Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q157_jsonl_roundtrip", q157JsonlRoundtrip, q157Oracle),
+    gate("q158_csv_roundtrip", q158CsvRoundtrip, q158Oracle),
+    gate("q193_orc_roundtrip", q193OrcRoundtrip, q193Oracle)
   )
 }

@@ -20,7 +20,7 @@ import graft.Tables._
   * at 100 TB that is the canonical map-side-combinable layout: partial
   * avgs per partition, one exchange of numLabels × dim rows.
   */
-object Vectors {
+object Vectors extends graft.Gates {
 
   /** Mean embedding per label, one row per (label, dim). DECIMAL cast
     * after rounding for cross-engine hash stability (sum order differs
@@ -534,23 +534,13 @@ object Vectors {
       |GROUP BY a.cid ORDER BY cid""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q209_kmeans_lloyd" -> (q209KmeansLloyd _),
-    "q134_drift_tvd" -> (q134DriftTvd _),
-    "q60_label_centroids" -> (q60LabelCentroids _),
-    "q77_quantize_int8" -> (q77Quantize _),
-    "q85_centroid_aggregator" -> (q85CentroidAggregator _),
-    "q108_hof_vector_math" -> (q108HofVectorMath _),
-    "q121_pq_quantize" -> (q121PqQuantize _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q209_kmeans_lloyd" -> q209Oracle,
-    "q134_drift_tvd" -> q134Oracle,
-    "q60_label_centroids" -> q60Oracle,
-    "q77_quantize_int8" -> q77Oracle,
-    "q85_centroid_aggregator" -> q60Oracle,
-    "q108_hof_vector_math" -> q108Oracle,
-    "q121_pq_quantize" -> q121Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q209_kmeans_lloyd", q209KmeansLloyd, q209Oracle),
+    gate("q134_drift_tvd", q134DriftTvd, q134Oracle),
+    gate("q60_label_centroids", q60LabelCentroids, q60Oracle),
+    gate("q77_quantize_int8", q77Quantize, q77Oracle),
+    gate("q85_centroid_aggregator", q85CentroidAggregator, q60Oracle),
+    gate("q108_hof_vector_math", q108HofVectorMath, q108Oracle),
+    gate("q121_pq_quantize", q121PqQuantize, q121Oracle)
   )
 }

@@ -85,7 +85,7 @@ final class MiniLakeCdfSourceProvider
 }
 
 /** Driver gates for the streaming change-feed source. */
-object CdfStream {
+object CdfStream extends graft.Gates(graft.Gate.Streaming) {
   import org.apache.spark.sql.{Dataset, Row, SparkSession}
   import org.apache.spark.sql.functions._
 
@@ -215,17 +215,12 @@ object CdfStream {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_stream_cdc_silver" -> (q233StreamCdcSilver _),
-    "q240_stream_ivm" -> (q240StreamIvm _),
-    "q273_stream_rate_limit" -> (q273StreamRateLimit _)
-  )
-
-  def oracles: Map[String, String] = Map(
+  def gates: Seq[graft.Gate] = Seq(
     // the stream-maintained silver must equal the batch-CDC silver
-    "q233_stream_cdc_silver" -> graft.ops.Pipeline.q19Oracle,
-    "q240_stream_ivm" -> q240Oracle,
-    "q273_stream_rate_limit" -> q273Oracle
+    gate("q233_stream_cdc_silver", q233StreamCdcSilver,
+      graft.ops.Pipeline.q19Oracle),
+    gate("q240_stream_ivm", q240StreamIvm, q240Oracle),
+    gate("q273_stream_rate_limit", q273StreamRateLimit, q273Oracle)
   )
 
   /** q273: rate-limited backlog drain — `maxCommitsPerBatch` is the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * checkpointing — nothing here is local-mode-specific except the
   * memory sink used to surface the result synchronously.
   */
-object EventsStream {
+object EventsStream extends graft.Gates(graft.Gate.Streaming) {
 
   // events.parquet's as-stored schema comes from Tables.eventsRawSchema
   // (its ts physical type varies by testdata vintage); each stream
@@ -176,50 +176,20 @@ object EventsStream {
       |FROM ranked WHERE rk <= 3
       |ORDER BY hour, rk""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q131_stream_topk" -> ((s, dir) => topKStream(s, dir)),
-    "q48_stream_hourly" -> ((s, dir) => hourlyStream(s, dir)),
-    "q102_stream_sliding" -> ((s, dir) => slidingStream(s, dir)),
-    "q51_stream_sessions" -> ((s, dir) => SessionizeStream.sessions(s, dir)
-      .select("user_id", "session_seq", "n_events", "start_ms", "end_ms",
-        "session_value")),
-    "q161_tws_sessions" -> ((s, dir) => TwsSessionizeStream.sessions(s, dir)
-      .select("user_id", "session_seq", "n_events", "start_ms", "end_ms",
-        "session_value")),
-    "q58_stream_lake_ingest" -> (LakeIngestStream.q58StreamLakeIngest _),
-    "q84_partitioned_ingest" -> (LakeIngestStream.q84PartitionedIngest _),
-    "q88_stream_upsert" -> (LakeIngestStream.q88StreamUpsert _),
-    "q116_streaming_view" -> (LakeIngestStream.q116StreamingView _),
-    "q200_ann_stream_ingest" -> (LakeIngestStream.q200AnnStreamIngest _),
-    "q300_stream_identity_ingest" ->
-      (LakeIngestStream.q300StreamIdentityIngest _)
-  )
-
-  /** Identical to the batch q18 oracle — streaming must agree with
-    * batch on a bounded input.
+  /** Each oracle is batch SQL: streaming must agree with batch on a
+    * bounded input.
     */
-  def oracles: Map[String, String] = Map(
-    "q131_stream_topk" -> q131Oracle,
-    // identical to the batch q10 oracle — stateful streaming must agree
-    // with the window-based batch sessionizer
-    "q51_stream_sessions" -> graft.ops.Relational.q10Oracle,
-    // the third independent sessionizer against the same batch oracle
-    "q161_tws_sessions" -> graft.ops.Relational.q10Oracle,
-    "q48_stream_hourly" ->
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q131_stream_topk", (s, dir) => topKStream(s, dir), q131Oracle),
+    gate("q48_stream_hourly", (s, dir) => hourlyStream(s, dir),
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
         | count(*) AS n, round(sum(value),2) AS total_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY hour, event_type""".stripMargin,
-    "q58_stream_lake_ingest" -> LakeIngestStream.q58Oracle,
-    "q84_partitioned_ingest" -> LakeIngestStream.q84Oracle,
-    "q88_stream_upsert" -> LakeIngestStream.q88Oracle,
-    "q116_streaming_view" -> LakeIngestStream.q116Oracle,
-    "q200_ann_stream_ingest" -> LakeIngestStream.q200Oracle,
-    "q300_stream_identity_ingest" -> LakeIngestStream.q300Oracle,
+        |ORDER BY hour, event_type""".stripMargin),
     // window membership stated directly: ts belongs to the 4 sliding
     // windows starting at floor15(ts) - k*15min, k in 0..3
-    "q102_stream_sliding" ->
+    gate("q102_stream_sliding", (s, dir) => slidingStream(s, dir),
       """SELECT CAST(time_bucket(INTERVAL 15 MINUTE, CAST(ts AS TIMESTAMP))
         |        - to_minutes(15 * k.k) AS TIMESTAMP) AS win_start,
         |  event_type, count(*) AS n,
@@ -227,6 +197,27 @@ object EventsStream {
         |    AS total_value
         |FROM events, (SELECT unnest([0, 1, 2, 3]) AS k) k
         |GROUP BY 1, 2
-        |ORDER BY win_start, event_type""".stripMargin
+        |ORDER BY win_start, event_type""".stripMargin),
+    // identical to the batch q10 oracle — stateful streaming must agree
+    // with the window-based batch sessionizer
+    gate("q51_stream_sessions", (s, dir) => SessionizeStream.sessions(s, dir)
+      .select("user_id", "session_seq", "n_events", "start_ms", "end_ms",
+        "session_value"), graft.ops.Relational.q10Oracle),
+    // the third independent sessionizer against the same batch oracle
+    gate("q161_tws_sessions", (s, dir) => TwsSessionizeStream.sessions(s, dir)
+      .select("user_id", "session_seq", "n_events", "start_ms", "end_ms",
+        "session_value"), graft.ops.Relational.q10Oracle),
+    gate("q58_stream_lake_ingest", LakeIngestStream.q58StreamLakeIngest,
+      LakeIngestStream.q58Oracle),
+    gate("q84_partitioned_ingest", LakeIngestStream.q84PartitionedIngest,
+      LakeIngestStream.q84Oracle),
+    gate("q88_stream_upsert", LakeIngestStream.q88StreamUpsert,
+      LakeIngestStream.q88Oracle),
+    gate("q116_streaming_view", LakeIngestStream.q116StreamingView,
+      LakeIngestStream.q116Oracle),
+    gate("q200_ann_stream_ingest", LakeIngestStream.q200AnnStreamIngest,
+      LakeIngestStream.q200Oracle),
+    gate("q300_stream_identity_ingest",
+      LakeIngestStream.q300StreamIdentityIngest, LakeIngestStream.q300Oracle)
   )
 }

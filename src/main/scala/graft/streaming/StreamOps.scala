@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * streaming machinery (join state, dedup state, watermark eviction) is
   * what's under test.
   */
-object StreamOps {
+object StreamOps extends graft.Gates(graft.Gate.Streaming) {
 
   // Staged single-file parquet inputs (sentinels, shifted replays) are
   // pure functions of the source dir, but every invocation re-derived
@@ -371,19 +371,11 @@ object StreamOps {
       |GROUP BY 1, 2
       |ORDER BY hour, event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q62_stream_join" -> (q62StreamJoin _),
-    "q63_stream_dedup" -> (q63StreamDedup _),
-    "q99_stream_static_join" -> (q99StreamStaticJoin _),
-    "q168_stream_outer_join" -> (q168StreamOuterJoin _),
-    "q171_stream_late_drop" -> (q171StreamLateDrop _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q62_stream_join" -> q62Oracle,
-    "q63_stream_dedup" -> q63Oracle,
-    "q99_stream_static_join" -> q99Oracle,
-    "q168_stream_outer_join" -> q168Oracle,
-    "q171_stream_late_drop" -> q171Oracle
+  def gates: Seq[graft.Gate] = Seq(
+    gate("q62_stream_join", q62StreamJoin, q62Oracle),
+    gate("q63_stream_dedup", q63StreamDedup, q63Oracle),
+    gate("q99_stream_static_join", q99StreamStaticJoin, q99Oracle),
+    gate("q168_stream_outer_join", q168StreamOuterJoin, q168Oracle),
+    gate("q171_stream_late_drop", q171StreamLateDrop, q171Oracle)
   )
 }

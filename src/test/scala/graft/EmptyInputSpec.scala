@@ -5,6 +5,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Empty-input totality: every registered query must run (not
@@ -19,10 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class EmptyInputSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
 
+  private val sf = "/root/testdata/sf0.001"
+
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("graft_sf0").toString
-    val src = "/root/testdata/sf0.001"
-    Files.list(java.nio.file.Paths.get(src)).toArray.map(_.toString)
+    Files.list(java.nio.file.Paths.get(sf)).toArray.map(_.toString)
       .filter(_.endsWith(".parquet"))
       .foreach { f =>
         val name = java.nio.file.Paths.get(f).getFileName.toString
@@ -37,19 +39,52 @@ class EmptyInputSpec extends AnyFunSuite {
     dir
   }
 
-  test("every query is total on zero-row tables") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, emptyDir).count(); None }
-        catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("")
-                .linesIterator.take(1).mkString.take(140))
-        }
+  /** Runs `g` on `dir`: its failure, if any, and whether it started a
+    * streaming query. `onQueryStarted` fires synchronously inside
+    * `start()`, so the flag is set before the run returns.
+    */
+  private def run(g: Gate, dir: String): (Option[String], Boolean) = {
+    val started = new java.util.concurrent.atomic.AtomicBoolean
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent)
+          : Unit = started.set(true)
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
+    spark.streams.addListener(listener)
+    val failure =
+      try { g.run(spark, dir).count(); None }
+      catch {
+        case e: Throwable =>
+          Some(s"${g.name}: ${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("")
+              .linesIterator.take(1).mkString.take(140))
+      } finally spark.streams.removeListener(listener)
+    (failure, started.get)
+  }
+
+  private lazy val runs: Seq[(Gate, (Option[String], Boolean))] =
+    SparkEntry.gates.values.toSeq.sortBy(_.name)
+      .map(g => g -> run(g, emptyDir))
+
+  test("every query is total on zero-row tables") {
+    val failures = runs.flatMap(_._2._1)
     assert(failures.isEmpty,
       failures.mkString(s"${failures.size} queries died on empty input:\n  ",
         "\n  ", ""))
+  }
+
+  test("a gate starts a streaming query exactly when it is declared streaming") {
+    // q200 fits its index before it streams, and zero rows fit none, so
+    // a streaming gate that starts nothing here is rerun on real tables
+    val wrong = runs.collect {
+      case (g, (_, onEmpty)) if (g.kind == Gate.Streaming) !=
+          (onEmpty || (g.kind == Gate.Streaming && run(g, sf)._2)) =>
+        s"${g.name}: declared ${g.kind.label}, starts " +
+          (if (onEmpty) "a" else "no") + " streaming query"
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n  ", "\n  ", ""))
   }
 }
