@@ -47,9 +47,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
   * scoped rewrites are the natural next step and the API keeps the
   * commit path isolated so that can land without changing callers.
   *
-  * Single-writer semantics (matches the reference's orchestrated, one-
-  * activity-at-a-time pipelines): concurrent committers race on the
-  * atomic log-entry publish; the loser fails rather than corrupts.
+  * One commit protocol ([[publish]]): every commit claims the next log
+  * version by an atomic hard link and checks the commits that landed
+  * since its read against the verb's conflict rule. Single-shot verbs
+  * (the reference's orchestrated, one-activity-at-a-time pipelines)
+  * admit no winner: a loser fails with ConcurrentModificationException
+  * rather than corrupts. The concurrent verbs (appendConcurrent,
+  * mergeConcurrent, deleteVectored) admit the winners they commute
+  * with.
   */
 final class MiniLake(spark: SparkSession, val path: String,
     compact: Boolean = false,
@@ -152,8 +157,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     val sch = schema
     cols.foreach(c => require(sch.fieldNames.contains(c),
       s"partition column $c is not in the schema of $path"))
-    val v = nextVersion
-    writeEntry(CommitEntry(v, "partition-evolve",
+    val v = publish(latestVersion)(CommitEntry(_, "partition-evolve",
       System.currentTimeMillis(), sch.json, Seq.empty, Seq.empty,
       hasChanges = false, bucketSpec = bucketSpec, partitionCols = cols))
     partColsCache = Some((v, cols))
@@ -292,27 +296,27 @@ final class MiniLake(spark: SparkSession, val path: String,
   }
 
   /** High water derived ONLY from entries at or below `asOf` — the
-    * race-free variant for writers that pin their commit version
-    * FIRST (reserveIdentityRange, appendIfAbsent): a base computed
-    * from versions ≤ v-1 paired with a version-v hard link means any
-    * interleaved commit forces a FileAlreadyExistsException collision
-    * and a retry with a fresh base, so no writer can ever publish a
-    * stale (overlapping or regressing) mark. Same bounded backward
-    * walk as [[identityHighWater]].
+    * race-free variant for writers whose mark must match the version
+    * they publish at: [[publish]] hands the entry builder its claimed
+    * version `v`, so a mark computed from versions ≤ v-1 is paired
+    * with a version-v hard link, and any interleaved commit forces a
+    * collision and a rebuild with a fresh base — no writer can ever
+    * publish a stale (overlapping or regressing) mark. Same bounded
+    * backward walk as [[identityHighWater]].
     */
   private def identityHighWaterAt(asOf: Long): Option[Long] =
     listVersions.filter(_ <= asOf).sorted(Ordering[Long].reverse).iterator
       .map(readEntry).flatMap(_.identityHighWater).nextOption()
 
-  /** Identity assignment is sequenced through the single-writer verbs
-    * (create/append/overwrite/merge/mergeUpdate/replacePartitions)
-    * whose committed high water is unambiguous, through
-    * [[appendConcurrent]] and [[mergeConcurrent]] via Delta-style
-    * id-range RESERVATION (a metadata-only commit claims the range
-    * before the data write — see [[reserveIdentityRange]]), and
-    * through [[appendIfAbsent]] by riding the SAME atomic entry as
-    * the (appId, txnVersion) marker, so a replayed sink skips the
-    * data and the ids together.
+  /** Identity assignment is sequenced through the single-shot verbs
+    * (create/append/overwrite/merge/mergeUpdate/replacePartitions),
+    * which admit no concurrent winner, so their committed high water
+    * is unambiguous; through [[appendConcurrent]] and
+    * [[mergeConcurrent]] via Delta-style id-range RESERVATION (a
+    * metadata-only commit claims the range before the data write —
+    * see [[reserveIdentityRange]]); and through [[appendIfAbsent]] by
+    * riding the SAME atomic entry as the (appId, txnVersion) marker,
+    * so a replayed sink skips the data and the ids together.
     */
 
   /** Stamp `df` with identity values `base+step, base+2·step, …` — the
@@ -437,36 +441,19 @@ final class MiniLake(spark: SparkSession, val path: String,
     * burns its range (ids are never reused — the same contract DELETE
     * already has). Returns the claimed base (exclusive).
     */
-  private def reserveIdentityRange(spec: MiniLake.IdentitySpec, n: Long,
-      maxRetries: Int): Long = {
-    var attempt = 0
-    while (true) {
-      // pin the version FIRST, then derive the base ONLY from entries
-      // ≤ v-1 (the deleteVectoredConcurrent discipline): a concurrent
-      // reservation landing between the two reads would otherwise go
-      // undetected — this writer would publish at winner's version + 1
-      // with a stale base, handing two writers overlapping id ranges.
-      // With v pinned, any interleaved commit takes v itself, the
-      // hard link below collides, and the retry re-derives base fresh.
-      val v = nextVersion
-      val base = identityHighWaterAt(v - 1).getOrElse(spec.start - spec.step)
-      try {
-        writeEntry(CommitEntry(v, "id-reserve", System.currentTimeMillis(),
-          schema.json, Seq.empty, Seq.empty, hasChanges = false,
-          bucketSpec = bucketSpec,
-          identityHighWater = Some(base + spec.step * n)))
-        idHwCache = Some((v, base + spec.step * n))
-        return base
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"identity reservation on $path lost $maxRetries commit " +
-              "races, giving up")
-          idHwCache = None // re-read the winner's advanced mark
-      }
-    }
-    -1L // unreachable
+  private def reserveIdentityRange(spec: MiniLake.IdentitySpec,
+      n: Long): Long = {
+    // the base derives ONLY from entries ≤ v-1 of the claimed version
+    // v: a reservation landing in between takes v itself, the hard
+    // link collides, and the next attempt re-derives the base fresh
+    def baseAt(v: Long): Long =
+      identityHighWaterAt(v - 1).getOrElse(spec.start - spec.step)
+    val v = publish(latestVersion, AnyWinner)(v =>
+      CommitEntry(v, "id-reserve", System.currentTimeMillis(),
+        schema.json, Seq.empty, Seq.empty, hasChanges = false,
+        bucketSpec = bucketSpec,
+        identityHighWater = Some(baseAt(v) + spec.step * n)))
+    baseAt(v)
   }
 
   /** SYNC IDENTITY (Delta's `ALTER TABLE ... SYNC IDENTITY`): re-seat
@@ -485,31 +472,19 @@ final class MiniLake(spark: SparkSession, val path: String,
     val row = snapshot().agg(
       max(col(spec.name).cast("long")).as("mx"),
       min(col(spec.name).cast("long")).as("mn")).head
-    var attempt = 0
-    while (true) {
-      // same pin-v-first discipline as reserveIdentityRange: the mark
-      // folds forward from entries ≤ v-1 and the hard link arbitrates
-      val v = nextVersion
+    // same discipline as reserveIdentityRange: the mark folds forward
+    // from entries ≤ v-1 of the claimed version
+    def hwAt(v: Long): Long = {
       val cur = identityHighWaterAt(v - 1).getOrElse(spec.start - spec.step)
-      val hw =
-        if (row.isNullAt(0)) cur
-        else MiniLake.advancePast(spec, cur,
-          if (spec.step > 0) row.getLong(0) else row.getLong(1))
-      try {
-        writeEntry(CommitEntry(v, "id-sync", System.currentTimeMillis(),
-          schema.json, Seq.empty, Seq.empty, hasChanges = false,
-          bucketSpec = bucketSpec, identityHighWater = Some(hw)))
-        idHwCache = Some((v, hw))
-        return hw
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          require(attempt <= 32,
-            s"SYNC IDENTITY on $path lost 32 commit races, giving up")
-          idHwCache = None
-      }
+      if (row.isNullAt(0)) cur
+      else MiniLake.advancePast(spec, cur,
+        if (spec.step > 0) row.getLong(0) else row.getLong(1))
     }
-    -1L // unreachable
+    val v = publish(latestVersion, AnyWinner)(v =>
+      CommitEntry(v, "id-sync", System.currentTimeMillis(),
+        schema.json, Seq.empty, Seq.empty, hasChanges = false,
+        bucketSpec = bucketSpec, identityHighWater = Some(hwAt(v))))
+    hwAt(v)
   }
 
   // ---- log ----------------------------------------------------------
@@ -1250,9 +1225,66 @@ final class MiniLake(spark: SparkSession, val path: String,
     (longs.toMap, strs.toMap, dbls.toMap)
   }
 
+  /** Test seam: runs once, at the start of this instance's next
+    * [[publish]] — after the verb's data write, before its first
+    * attempt: the window a racing winner lands in.
+    */
+  @volatile private[lake] var beforeNextPublish: Option[() => Unit] = None
+
+  /** The commit protocol — Delta's one rule (Armbrust et al., VLDB
+    * 2020): claim the next log version atomically and, on losing,
+    * check the winners for a logical conflict. Every commit passes
+    * through here; it is the only caller of [[writeEntry]].
+    *
+    * Each attempt pins `v = nextVersion`, checks every entry in
+    * `(readV, v)` — the commits that landed after the verb read the
+    * table — against the verb's `rule`, and publishes `entryAt(v)`. A
+    * refused winner raises [[java.util.ConcurrentModificationException]]
+    * naming it, and the caller re-runs against fresh state. A lost
+    * hard-link race backs off and retries, at most [[MaxLostRaces]]
+    * times: once the per-commit fixed cost dropped to ~1 ms, a loser's
+    * re-prep window matched the winners' commit interval, and without
+    * the jitter one of 8 racing writers lost 32 races in a row.
+    * Sub-ms to few-ms jitter desynchronizes the herd; winners never
+    * wait. Returns the published version.
+    */
+  private def publish(readV: Long, rule: Rule = NoWinner)(
+      entryAt: Long => CommitEntry): Long = {
+    beforeNextPublish.foreach { f => beforeNextPublish = None; f() }
+    var checked = readV // winners are immutable: each is checked once
+    var lost = 0
+    while (true) {
+      val v = nextVersion
+      val e = entryAt(v)
+      listVersions.filter(w => w > checked && w < v).foreach { w =>
+        val winner = readEntry(w)
+        rule(winner).foreach(why =>
+          throw new java.util.ConcurrentModificationException(
+            s"${e.mode} on $path conflicts with concurrent " +
+              s"${winner.mode} at version $w, which invalidated the " +
+              s"snapshot it read at version $readV: $why"))
+      }
+      checked = v - 1
+      try { writeEntry(e); return e.version }
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          lost += 1
+          if (lost == MaxLostRaces)
+            throw new java.util.ConcurrentModificationException(
+              s"${e.mode} on $path lost $MaxLostRaces commit races, " +
+                "giving up")
+          java.util.concurrent.locks.LockSupport.parkNanos(
+            java.util.concurrent.ThreadLocalRandom.current()
+              .nextLong(500_000L * math.min(lost, 8)))
+      }
+    }
+    -1L // unreachable
+  }
+
   /** Publish the commit entry for `v` atomically: write a tmp file, then
     * hard-link it into place — link creation fails if `v` was already
-    * committed, so two racing writers can't both win.
+    * committed, so two racing writers can't both win. Called only by
+    * [[publish]], which owns the race.
     */
   private def writeEntry(e1: CommitEntry): Unit = {
     // the single funnel every commit passes through — the writer
@@ -1475,6 +1507,10 @@ final class MiniLake(spark: SparkSession, val path: String,
     // are consumed for good (a lost race keeps them for the retry)
     MiniLake.sharedLatestAdvance(canonPath, e.version)
     e.adds.foreach(pendingStats.remove)
+    // the in-process high water advances only once the entry is
+    // durably published (a failed commit must not burn ids forward of
+    // what the log proves)
+    e.identityHighWater.foreach(h => idHwCache = Some((e.version, h)))
     protoCache = Some(stampedProto)
     writerProtoCache = Some(stampedWriter)
     defaultsCache = Some(tableDefaults)
@@ -1688,7 +1724,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
     val newSch = StructType(sch.fields :+
       org.apache.spark.sql.types.StructField(name, dt, nullable = true))
-    writeEntry(CommitEntry(v, "add-column", System.currentTimeMillis(),
+    publish(v - 1)(CommitEntry(_, "add-column", System.currentTimeMillis(),
       newSch.json, Seq.empty, Seq.empty, hasChanges = false,
       bucketSpec = bucketSpec,
       addDefaults = defaultsEncoded + (name -> s"$v|$defaultSql")))
@@ -1732,7 +1768,7 @@ final class MiniLake(spark: SparkSession, val path: String,
         s"old files still carry its physical column")
     val newSch = StructType(sch.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    writeEntry(CommitEntry(v, "rename", System.currentTimeMillis(),
+    publish(v - 1)(CommitEntry(_, "rename", System.currentTimeMillis(),
       newSch.json, Seq.empty, Seq.empty, hasChanges = false,
       bucketSpec = bucketSpec, renames = Map(from -> to)))
   }
@@ -1758,7 +1794,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     require(!generatedCols.exists(_._1 == name),
       s"cannot drop generated column: $name")
     val newSch = StructType(sch.filterNot(_.name == name))
-    writeEntry(CommitEntry(v, "drop", System.currentTimeMillis(),
+    publish(v - 1)(CommitEntry(_, "drop", System.currentTimeMillis(),
       newSch.json, Seq.empty, Seq.empty, hasChanges = false,
       bucketSpec = bucketSpec))
   }
@@ -2225,7 +2261,7 @@ final class MiniLake(spark: SparkSession, val path: String,
 
   def setTableProperty(key: String, value: String): Unit = {
     require(exists, s"table $path does not exist")
-    writeEntry(CommitEntry(nextVersion, "setProperty",
+    publish(latestVersion)(CommitEntry(_, "setProperty",
       System.currentTimeMillis(), schema.json, Seq.empty, Seq.empty,
       hasChanges = false, bucketSpec = bucketSpec,
       constraints = Map(MiniLake.PropPrefix + key -> value)))
@@ -2234,7 +2270,7 @@ final class MiniLake(spark: SparkSession, val path: String,
   def unsetTableProperty(key: String): Unit = {
     require(tableProperties.contains(key),
       s"no table property '$key' on $path")
-    writeEntry(CommitEntry(nextVersion, "unsetProperty",
+    publish(latestVersion)(CommitEntry(_, "unsetProperty",
       System.currentTimeMillis(), schema.json, Seq.empty, Seq.empty,
       hasChanges = false, bucketSpec = bucketSpec,
       constraints = Map(MiniLake.PropPrefix + key -> "")))
@@ -2266,11 +2302,12 @@ final class MiniLake(spark: SparkSession, val path: String,
     require(exists, s"table $path does not exist")
     require(!checkConstraints.contains(name),
       s"CHECK constraint '$name' already exists on $path")
+    val readV = latestVersion
     require(
-      snapshot().filter(expr(predicate) <=> lit(false)).isEmpty,
+      snapshot(readV).filter(expr(predicate) <=> lit(false)).isEmpty,
       s"cannot add CHECK constraint '$name' ($predicate): " +
         s"existing rows of $path violate it")
-    writeEntry(CommitEntry(nextVersion, "addConstraint",
+    publish(readV)(CommitEntry(_, "addConstraint",
       System.currentTimeMillis(), schema.json, Seq.empty, Seq.empty,
       hasChanges = false, bucketSpec = bucketSpec,
       constraints = Map(name -> predicate)))
@@ -2280,7 +2317,7 @@ final class MiniLake(spark: SparkSession, val path: String,
   def dropCheckConstraint(name: String): Unit = {
     require(checkConstraints.contains(name),
       s"no CHECK constraint '$name' on $path")
-    writeEntry(CommitEntry(nextVersion, "dropConstraint",
+    publish(latestVersion)(CommitEntry(_, "dropConstraint",
       System.currentTimeMillis(), schema.json, Seq.empty, Seq.empty,
       hasChanges = false, bucketSpec = bucketSpec,
       constraints = Map(name -> "")))
@@ -2678,61 +2715,68 @@ final class MiniLake(spark: SparkSession, val path: String,
     * sinks): the (appId, txnVersion) marker commits ATOMICALLY with the
     * data — inside the same log entry — so a sink that crashed between
     * write and bookkeeping cannot double-apply on replay. Returns false
-    * (no commit) when this txn version was already applied.
+    * (no commit) when this txn version was already applied, including
+    * by a racing replay that published first.
     */
   def appendIfAbsent(batch: DataFrame, appId: String,
       txnVersion: Long): Boolean = {
-    if (lastTxnVersion(appId) >= txnVersion) false
+    val readV = latestVersion
+    def applied = lastTxnVersion(appId) >= txnVersion
+    if (applied) false
     else {
       withCommitPlanning {
         // identity rides the SAME atomic entry as the (appId,
         // txnVersion) marker: a sink that crashed between write and
         // bookkeeping replays, the marker check above skips the data
         // AND the ids together — nothing is double-assigned and no id
-        // is burned by a replay. Race-safe by the pin-v-first
-        // discipline: the base derives only from entries ≤ v-1, so a
-        // winner landing before the publish collides on the hard link
-        // and the whole verb fails cleanly — the caller's replay is
-        // idempotent by construction (that is the verb's contract).
-        val v = nextVersion
-        val (stamped, idHw) = withIdentityAssigned(batch, Some(v - 1))
+        // is burned by a replay. The base derives from entries ≤ readV
+        // and the verb admits no winner, so the ids it publishes are
+        // exactly the ones it stamped.
+        val (stamped, idHw) = withIdentityAssigned(batch, Some(readV))
         val df = withGenerated(stamped)
         requireSchemaMatch(df)
-        val adds = writeData(df, v, None)
-        writeEntry(CommitEntry(v, "append", System.currentTimeMillis(),
-          df.schema.json, adds, Seq.empty, hasChanges = true,
-          bucketSpec = bucketSpec, changesMode = "insertsFromData",
-          txn = Some(appId -> txnVersion), identityHighWater = idHw))
-        idHw.foreach(h => idHwCache = Some((v, h)))
+        val adds = writeData(df, readV + 1, None)
+        try {
+          publish(readV)(CommitEntry(_, "append",
+            System.currentTimeMillis(), df.schema.json, adds, Seq.empty,
+            hasChanges = true, bucketSpec = bucketSpec,
+            changesMode = "insertsFromData",
+            txn = Some(appId -> txnVersion), identityHighWater = idHw))
+          true
+        } catch {
+          // a racing replay of the same (appId, txnVersion) won: the
+          // data is applied, and this replay is the verb's no-op
+          case _: java.util.ConcurrentModificationException if applied =>
+            false
+        }
       }
-      true
     }
   }
 
   /** Optimistic-concurrency append: safe under CONCURRENT writers.
     * Blind appends commute (file-level adds, no removes), so losing
     * the atomic log-entry publish is not a real conflict — this
-    * variant writes its data files ONCE into a version-independent
-    * `data/c-<uuid>` directory (the log references files by path, so
-    * nothing ties them to a version number) and then retries only the
-    * metadata-sized entry publish until it claims a version. Rewrite
-    * commits (merge/update/overwrite) stay single-winner — their
-    * remove sets are computed against a specific snapshot, so the
-    * loser MUST fail rather than publish a stale rewrite.
+    * variant writes its data files ONCE into an attempt directory
+    * stamped with its read version (the log references files by path,
+    * so nothing ties them to the claimed version) and then [[publish]]
+    * retries only the metadata-sized entry until it claims a version.
+    * Rewrite commits (merge/update/overwrite) stay single-winner —
+    * their remove sets are computed against a specific snapshot, so
+    * the loser MUST fail rather than publish a stale rewrite.
     *
     * At cluster scale this is the multi-writer ingest contract: any
     * number of executors/jobs appending concurrently, each paying one
     * distributed write plus a few driver-side retry reads.
     */
-  def appendConcurrent(batch: DataFrame, maxRetries: Int = 32): Long =
-    appendConcurrentImpl(batch, maxRetries, () => ())
-
-  /** Test seam: `beforePublish` runs after the data write, before the
-    * first publish attempt — the window a schema-changing winner can
-    * land in without a version-number collision.
-    */
-  private[lake] def appendConcurrentImpl(batch: DataFrame,
-      maxRetries: Int, beforePublish: () => Unit): Long = {
+  def appendConcurrent(batch: DataFrame): Long = {
+    // the attempt dir is stamped with the READ version, not the claimed
+    // one: the version segment is the file's schema ERA for rename-
+    // aware reads (writeVersionOf), and this writer's schema is exactly
+    // the table schema at its read version. A schema-changing winner
+    // (rename/drop/mergeSchema) after the read fails the schema match
+    // in the conflict rule below, so a committed append's era schema
+    // can never diverge from its files.
+    val readV = latestVersion
     // Identity under concurrency rides an id-range RESERVATION: count
     // the batch (persisted first, so the count is stable), durably
     // claim [hwm+step, hwm+n·step] in a metadata-only commit, then
@@ -2742,8 +2786,8 @@ final class MiniLake(spark: SparkSession, val path: String,
     var persisted: Option[DataFrame] = None
     // BY DEFAULT batch carrying explicit ids: no reservation (the
     // values are the caller's), but the winning entry must advance
-    // the high water past max(supplied) — computed INSIDE the publish
-    // loop from entries ≤ v-1, because an absolute mark derived from
+    // the high water past max(supplied) — computed from entries ≤ v-1
+    // of the claimed version, because an absolute mark derived from
     // stale state could REGRESS a racing generator's higher mark and
     // re-expose its range
     var suppliedExtreme: Option[Long] = None
@@ -2773,65 +2817,26 @@ final class MiniLake(spark: SparkSession, val path: String,
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted = Some(g)
         val n = g.count()
-        val base = reserveIdentityRange(spec, n, maxRetries)
+        val base = reserveIdentityRange(spec, n)
         assignIdentityFrom(g, spec, base, expectN = Some(n))._1
     }
     requireSchemaMatch(df)
-    // the attempt dir is stamped with the READ version, not the claimed
-    // one: the version segment is the file's schema ERA for rename-
-    // aware reads (writeVersionOf), and this writer's schema is exactly
-    // the table schema at its read version. A schema-changing winner
-    // (rename/drop/mergeSchema) between read and publish makes the
-    // retry loop's requireSchemaMatch abort, so a committed append's
-    // era schema can never diverge from its files.
-    val readV = math.max(0L, latestVersion)
     val adds = withCommitPlanning {
-      writeData(df, -1L, None, Some(attemptDir("data", readV)))
+      writeData(df, -1L, None, Some(attemptDir("data", math.max(0L, readV))))
     }
     persisted.foreach(_.unpersist()) // data is on disk; cache done
-    beforePublish()
-    var attempt = 0
-    while (true) {
-      // re-check the schema at the TOP of every attempt, before the
-      // version claim: a schema-changing winner (rename/drop/
-      // mergeSchema) landing during the distributed data write does
-      // NOT collide on the version number — it simply advances it —
-      // so a catch-side check alone would let the first publish
-      // attempt stamp the stale pre-change schemaJson and silently
-      // revert the schema for every later reader. Checking before
-      // nextVersion closes the window: any winner landing after this
-      // check necessarily takes the version this writer is about to
-      // claim, forcing a collision and the next iteration's re-check.
-      requireSchemaMatch(df)
-      val v = nextVersion
-      val idHw = suppliedExtreme.flatMap(sup => identitySpec.map(spec =>
-        MiniLake.advancePast(spec,
-          identityHighWaterAt(v - 1).getOrElse(spec.start - spec.step),
-          sup)))
-      try {
-        writeEntry(CommitEntry(v, "append", System.currentTimeMillis(),
-          df.schema.json, adds, Seq.empty, hasChanges = true,
-          bucketSpec = bucketSpec, changesMode = "insertsFromData",
-          identityHighWater = idHw))
-        idHw.foreach(h => idHwCache = Some((v, h)))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"append to $path lost $maxRetries commit races, giving up")
-          // Jittered backoff before re-preparing the entry: once the
-          // per-commit fixed cost dropped to ~1 ms, a loser's re-prep
-          // window matches the winners' commit interval and a
-          // no-backoff loop can starve one of N fast racing writers
-          // (observed: 32 straight losses at 8 writers). Sub-ms to
-          // few-ms jitter desynchronizes the herd; winners never wait.
-          java.util.concurrent.locks.LockSupport.parkNanos(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(500_000L * math.min(attempt, 8)))
-      }
-    }
-    -1L // unreachable
+    // a blind append commutes with every winner that leaves the table
+    // schema writable for this batch; a schema-changing winner lands
+    // WITHOUT a version collision (it simply advances the version), so
+    // only this check keeps a stale schemaJson from reverting it
+    publish(readV, _ => { requireSchemaMatch(df); None })(v =>
+      CommitEntry(v, "append", System.currentTimeMillis(),
+        df.schema.json, adds, Seq.empty, hasChanges = true,
+        bucketSpec = bucketSpec, changesMode = "insertsFromData",
+        identityHighWater = suppliedExtreme.flatMap(sup =>
+          identitySpec.map(spec => MiniLake.advancePast(spec,
+            identityHighWaterAt(v - 1).getOrElse(spec.start - spec.step),
+            sup)))))
   }
 
   /** OPTIMIZE-style bin-packing compaction: rewrite the live file set
@@ -2853,7 +2858,7 @@ final class MiniLake(spark: SparkSession, val path: String,
       val data = readFiles(prior, v - 1)
       val n = data.count()
       val adds = writeData(data, v, rowHint = Some(n), checked = false)
-      writeEntry(CommitEntry(v, "optimize", System.currentTimeMillis(),
+      publish(v - 1)(CommitEntry(_, "optimize", System.currentTimeMillis(),
         sch.json, adds, prior, hasChanges = false,
         bucketSpec = bucketSpec, dvRemoves = liveDvFiles(v - 1)))
     }
@@ -2883,7 +2888,7 @@ final class MiniLake(spark: SparkSession, val path: String,
         val adds = writeData(
           graft.ops.Layout.zorderWrite(data, cols, numFiles), v,
           checked = false, preserveLayout = true)
-        writeEntry(CommitEntry(v, "optimize", System.currentTimeMillis(),
+        publish(v - 1)(CommitEntry(_, "optimize", System.currentTimeMillis(),
           sch.json, adds, prior, hasChanges = false,
           bucketSpec = bucketSpec, dvRemoves = liveDvFiles(v - 1)))
       }
@@ -2908,7 +2913,7 @@ final class MiniLake(spark: SparkSession, val path: String,
         val data = readFiles(hit, v - 1)
         val n = data.count()
         val adds = writeData(data, v, rowHint = Some(n), checked = false)
-        writeEntry(CommitEntry(v, "optimize", System.currentTimeMillis(),
+        publish(v - 1)(CommitEntry(_, "optimize", System.currentTimeMillis(),
           sch.json, adds, hit, hasChanges = false,
           bucketSpec = bucketSpec))
       }
@@ -3021,11 +3026,10 @@ final class MiniLake(spark: SparkSession, val path: String,
     val (adds, chg) = inParallel(
       writeData(df, v, rowHint = Some(nIns)),
       writeChanges(changes, v, rowHint = Some(nDel + nIns)))
-    writeEntry(CommitEntry(v, "overwrite", System.currentTimeMillis(),
+    publish(v - 1)(CommitEntry(_, "overwrite", System.currentTimeMillis(),
       df.schema.json, adds, doomed, hasChanges = true,
       bucketSpec = bucketSpec, changeFiles = chg, dvRemoves = dvRemoved,
       identityHighWater = idHw))
-    idHw.foreach(h => idHwCache = Some((v, h)))
     (nIns, nDel)
   }
 
@@ -3038,14 +3042,10 @@ final class MiniLake(spark: SparkSession, val path: String,
     withCommitPlanning {
       val v = nextVersion
       val adds = writeData(data, v, rowHint)
-      writeEntry(CommitEntry(v, mode, System.currentTimeMillis(),
+      publish(v - 1)(CommitEntry(_, mode, System.currentTimeMillis(),
         data.schema.json, adds, Seq.empty, hasChanges = true,
         bucketSpec = bucketSpec, changesMode = "insertsFromData",
         identityHighWater = idHw, minReader = minReader))
-      // advance the in-process high water only after the entry is
-      // durably published (a failed commit must not burn ids forward
-      // of what the log proves)
-      idHw.foreach(h => idHwCache = Some((v, h)))
     }
 
   /** A commit's data and change files land in independent directories
@@ -3074,47 +3074,39 @@ final class MiniLake(spark: SparkSession, val path: String,
     // rows never free their ids — the Delta identity contract)
     val (stamped, idHw) = withIdentityAssigned(batch)
     val df = withDefaults(withGenerated(stamped))
-    val prior = snapshot()
+    val readV = latestVersion
+    val prior = snapshot(readV)
     val changes = prior.withColumn(ChangeType, lit("delete"))
       .unionByName(df.withColumn(ChangeType, lit("insert")))
-    commitWithChanges(df, mode = "overwrite", changes = changes,
-      removesAll = true, idHw = idHw)
+    commitWithChanges(readV, df, mode = "overwrite", changes = changes,
+      idHw = idHw)
   }
 
-  private def commitWithChanges(data: DataFrame, mode: String,
-      changes: DataFrame, removesAll: Boolean,
-      idHw: Option[Long] = None): Unit =
+  /** Full rewrite read at `readV`: every live file and deletion vector
+    * retires — the rewrite reads THROUGH the deletion vectors
+    * (snapshot applies them), so the new files already exclude DV'd
+    * rows.
+    */
+  private def commitWithChanges(readV: Long, data: DataFrame, mode: String,
+      changes: DataFrame, idHw: Option[Long] = None): Unit =
     withCommitPlanning {
-      val v = nextVersion
-      val removed = if (removesAll) liveFiles(v - 1) else Seq.empty
-      // a full rewrite reads THROUGH the deletion vectors (snapshot
-      // applies them), so the new files already exclude DV'd rows and
-      // every live DV retires with this commit
-      val dvRemoved = if (removesAll) liveDvFiles(v - 1) else Seq.empty
+      val v = readV + 1
       val (adds, chg) = inParallel(writeData(data, v), writeChanges(changes, v))
-      writeEntry(CommitEntry(v, mode, System.currentTimeMillis(),
-        data.schema.json, adds, removed, hasChanges = true,
-        bucketSpec = bucketSpec, changeFiles = chg, dvRemoves = dvRemoved,
-        identityHighWater = idHw))
-      idHw.foreach(h => idHwCache = Some((v, h)))
+      publish(readV)(CommitEntry(_, mode, System.currentTimeMillis(),
+        data.schema.json, adds, liveFiles(readV), hasChanges = true,
+        bucketSpec = bucketSpec, changeFiles = chg,
+        dvRemoves = liveDvFiles(readV), identityHighWater = idHw))
     }
 
-  /** MERGE (S4): `whenNotMatchedInsertAll` ∪ `whenMatchedDelete`, keyed
-    * on `pks` — implemented Spark-natively as two anti-joins
-    * (datalake.py:194-211). Re-inserting an existing PK is a no-op
-    * (idempotent replay, design_doc.md at-least-once note). Returns
-    * (#inserted, #deleted) for the caller's metrics (M1).
+  /** The shared front of [[merge]] and [[mergeConcurrent]]: identity
+    * guards, the schema check, and the deltas. Merging ON the identity
+    * column itself is impossible by construction (ALWAYS forbids
+    * caller-supplied values, so incoming rows cannot name a PK to
+    * match) — refused explicitly; the merge verbs never accept
+    * caller-supplied ids, even BY DEFAULT.
     */
-  def merge(inserts: DataFrame, deletes: DataFrame,
-      pks: Seq[String]): (Long, Long) = withCommitPlanning {
-    requireNotAppendOnly("merge")
-    // identity: insert-side rows get ids assigned AFTER the
-    // not-matched anti-join (only rows that actually insert consume
-    // ids), continuing from the high-water mark — merge is a
-    // single-writer verb like append, so no reservation is needed.
-    // Merging ON the identity column itself is impossible by
-    // construction (ALWAYS forbids caller-supplied values, so incoming
-    // rows cannot name a PK to match) — refused explicitly.
+  private def mergeDeltas(verb: String, inserts: DataFrame,
+      deletes: DataFrame, pks: Seq[String], readV: Long): MergeDeltas = {
     identitySpec.foreach { spec =>
       require(!pks.contains(spec.name),
         s"cannot merge on GENERATED AS IDENTITY column " +
@@ -3122,12 +3114,12 @@ final class MiniLake(spark: SparkSession, val path: String,
       require(!inserts.columns.contains(spec.name) &&
         !deletes.columns.contains(spec.name),
         s"GENERATED AS IDENTITY column '${spec.name}' cannot " +
-          "be user-supplied to merge (the insert side always generates, " +
+          s"be user-supplied to $verb (the insert side always generates, " +
           "even BY DEFAULT)")
     }
     val ins = withGenerated(inserts)
     requireSchemaMatch(ins, exceptIdentity = true)
-    val target = snapshot()
+    val target = snapshot(readV)
     // A statically-empty side (pure-insert or pure-delete batches —
     // the common CDC shapes) skips its joins entirely: each skipped
     // broadcast join is a driver-side plan + an extra Spark job, which
@@ -3155,6 +3147,26 @@ final class MiniLake(spark: SparkSession, val path: String,
       else ins.join(kept.select(pks.map(col): _*), pks, "left_anti")
         .select(insCols.map(col).toSeq: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    MergeDeltas(target, delKeys, toDelete, kept, toInsertRaw, emptyDel,
+      emptyIns)
+  }
+
+  /** MERGE (S4): `whenNotMatchedInsertAll` ∪ `whenMatchedDelete`, keyed
+    * on `pks` — implemented Spark-natively as two anti-joins
+    * (datalake.py:194-211). Re-inserting an existing PK is a no-op
+    * (idempotent replay, design_doc.md at-least-once note). Returns
+    * (#inserted, #deleted) for the caller's metrics (M1).
+    */
+  def merge(inserts: DataFrame, deletes: DataFrame,
+      pks: Seq[String]): (Long, Long) = withCommitPlanning {
+    requireNotAppendOnly("merge")
+    // identity: insert-side rows get ids assigned AFTER the
+    // not-matched anti-join (only rows that actually insert consume
+    // ids), continuing from the high-water mark — merge admits no
+    // concurrent winner, like append, so no reservation is needed.
+    val readV = latestVersion
+    val MergeDeltas(target, delKeys, toDelete, kept, toInsertRaw,
+      emptyDel, emptyIns) = mergeDeltas("merge", inserts, deletes, pks, readV)
 
     // The deltas are batch-sized (not table-sized), so persisting them
     // is scale-safe and saves recomputing the anti-joins for the count,
@@ -3184,7 +3196,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     }
     val nDel = delByBucket.values.sum
     val affected = delByBucket.keySet
-    val v = nextVersion
+    val v = readV + 1
     if (nDel > 0) {
       // copy-on-write of the affected data. Bucketed tables rewrite
       // ONLY the buckets holding matched delete rows (a PK's row can
@@ -3193,22 +3205,22 @@ final class MiniLake(spark: SparkSession, val path: String,
       // tables rewrite the whole live set.
       val (newData, removed) = bucketSpec match {
         case Some(_) =>
-          val prior = liveFiles(v - 1)
+          val prior = liveFiles(readV)
           val hit = prior.filter(f =>
             affected.exists(k => f.contains(s"/$BucketCol=$k/")))
           val affectedTarget =
             if (hit.isEmpty) emptyDf(spark, target.schema)
-            else readFiles(hit, v - 1)
+            else readFiles(hit, readV)
           val keptAffected = affectedTarget.join(delKeys, pks, "left_anti")
           (keptAffected.unionByName(toInsert), hit)
         case None =>
-          (kept.unionByName(toInsert), liveFiles(v - 1))
+          (kept.unionByName(toInsert), liveFiles(readV))
       }
       val (adds, chg) = inParallel(writeData(newData, v),
         writeChanges(toDelete.withColumn(ChangeType, lit("delete"))
           .unionByName(toInsert.withColumn(ChangeType, lit("insert"))), v,
           rowHint = Some(nIns + nDel)))
-      writeEntry(CommitEntry(v, "merge", System.currentTimeMillis(),
+      publish(readV)(CommitEntry(_, "merge", System.currentTimeMillis(),
         target.schema.json, adds, removed, hasChanges = true,
         bucketSpec = bucketSpec, changeFiles = chg,
         identityHighWater = idHw))
@@ -3216,12 +3228,11 @@ final class MiniLake(spark: SparkSession, val path: String,
       // pure insert: append-only commit, no rewrite of existing files;
       // the added files double as the change feed
       val adds = writeData(toInsert, v, rowHint = Some(nIns))
-      writeEntry(CommitEntry(v, "merge", System.currentTimeMillis(),
+      publish(readV)(CommitEntry(_, "merge", System.currentTimeMillis(),
         target.schema.json, adds, Seq.empty, hasChanges = true,
         bucketSpec = bucketSpec, changesMode = "insertsFromData",
         identityHighWater = idHw))
     }
-    idHw.foreach(h => idHwCache = Some((v, h)))
     toDelete.unpersist()
     toInsertRaw.unpersist()
     if (!(toInsert eq toInsertRaw)) toInsert.unpersist()
@@ -3236,12 +3247,12 @@ final class MiniLake(spark: SparkSession, val path: String,
     * own bucket).
     *
     * Protocol: compute the deltas and write data/change files ONCE
-    * against the snapshot at entry (`readV`), then race for the log
-    * publish. On losing, examine every winner committed after `readV`:
+    * against the snapshot at entry (`readV`), then [[publish]]. Every
+    * winner committed after `readV` is examined:
     *  - a winner whose touched files all carry bucket ids DISJOINT
     *    from this merge's affected buckets, with an unchanged schema
     *    and no renames/DVs, cannot have seen or produced any row this
-    *    merge read or writes — retry the publish at the next version;
+    *    merge read or writes — publish at the next version;
     *  - anything else (overlapping buckets, schema change, DV delete,
     *    unbucketed files, constraint/metadata commits) invalidates the
     *    snapshot this rewrite was computed from — throw
@@ -3255,59 +3266,16 @@ final class MiniLake(spark: SparkSession, val path: String,
     * retry-from-scratch.
     */
   def mergeConcurrent(inserts: DataFrame, deletes: DataFrame,
-      pks: Seq[String], maxRetries: Int = 16): (Long, Long) =
-    mergeConcurrentImpl(inserts, deletes, pks, maxRetries, () => ())
-
-  /** Test seam: `beforePublish` runs after the data write, before the
-    * first publish attempt — the window a racing winner lands in.
-    */
-  private[lake] def mergeConcurrentImpl(inserts: DataFrame,
-      deletes: DataFrame, pks: Seq[String], maxRetries: Int,
-      beforePublish: () => Unit): (Long, Long) = withCommitPlanning {
+      pks: Seq[String]): (Long, Long) = withCommitPlanning {
     requireNotAppendOnly("mergeConcurrent")
-    // identity under concurrent MERGE rides the same id-range
-    // reservation appendConcurrent uses (Delta's discipline): count
-    // the rows that actually insert, durably claim the range in a
-    // metadata-only commit, stamp, then race the publish. The merge
-    // verbs never accept caller-supplied ids (even BY DEFAULT) —
-    // incoming rows can't name the id column as a PK, so explicit
-    // values have no matching role here.
-    identitySpec.foreach { spec =>
-      require(!pks.contains(spec.name),
-        s"cannot merge on GENERATED AS IDENTITY column '${spec.name}' " +
-          s"of $path: incoming rows can never supply it")
-      require(!inserts.columns.contains(spec.name) &&
-        !deletes.columns.contains(spec.name),
-        s"GENERATED AS IDENTITY column '${spec.name}' cannot be " +
-          "user-supplied to mergeConcurrent (the insert side always " +
-          "generates)")
-    }
-    requireSchemaMatch(inserts, exceptIdentity = true)
     val spec = bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"mergeConcurrent requires a bucketed table ($path is unbucketed): " +
         "bucket scope is what makes concurrent rewrites provably disjoint"))
     val readV = latestVersion
     val mySchemaJson = schemaAt(readV).json
-    val target = snapshot(readV)
-    val emptyDel = knownEmpty(deletes)
-    val emptyIns = knownEmpty(inserts)
-    val delKeys = deletes.select(pks.map(col): _*).distinct()
-    val toDelete =
-      if (emptyDel) emptyDf(spark, target.schema)
-      else target.join(delKeys, pks, "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept =
-      if (emptyDel) target else target.join(delKeys, pks, "left_anti")
-    // identity tables anti-join and count WITHOUT the id column (the
-    // batch can't carry it), then stamp ids on exactly the rows that
-    // insert — after the range is reserved below
-    val insCols = target.columns.filterNot(c =>
-      identitySpec.exists(_.name == c))
-    val toInsertRaw =
-      if (emptyIns) emptyDf(spark, target.schema)
-      else inserts.join(kept.select(pks.map(col): _*), pks, "left_anti")
-        .select(insCols.map(col).toSeq: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val MergeDeltas(target, delKeys, toDelete, _, toInsertRaw,
+      emptyDel, emptyIns) =
+      mergeDeltas("mergeConcurrent", inserts, deletes, pks, readV)
     def byBucket(df: DataFrame, statically: Boolean): Map[Long, Long] =
       if (statically) Map.empty
       else df.groupBy(bucketExpr(spec).cast("long").as("b")).count()
@@ -3316,13 +3284,16 @@ final class MiniLake(spark: SparkSession, val path: String,
     val insByBucket = byBucket(toInsertRaw, emptyIns)
     val nDel = delByBucket.values.sum
     val nIns = insByBucket.values.sum
-    // reservation happens BEFORE the data write (the Delta ordering:
-    // the claimed range is durable before any data references it);
-    // two racing merges collide on the reservation version, never on
-    // the ids
+    // identity under concurrent MERGE rides the same id-range
+    // reservation appendConcurrent uses (Delta's discipline): count
+    // the rows that actually insert, durably claim the range in a
+    // metadata-only commit BEFORE the data write (the claimed range is
+    // durable before any data references it), stamp, then publish.
+    // Two racing merges collide on the reservation version, never on
+    // the ids.
     val toInsert = identitySpec match {
       case Some(idSpec) if nIns > 0 =>
-        val base = reserveIdentityRange(idSpec, nIns, maxRetries)
+        val base = reserveIdentityRange(idSpec, nIns)
         assignIdentityFrom(toInsertRaw, idSpec, base,
           expectN = Some(nIns))._1
           .select(target.columns.map(col).toSeq: _*)
@@ -3359,56 +3330,31 @@ final class MiniLake(spark: SparkSession, val path: String,
     toDelete.unpersist()
     toInsertRaw.unpersist()
     if (!(toInsert eq toInsertRaw)) toInsert.unpersist()
-    beforePublish()
 
-    def requireCompatible(e: CommitEntry): Unit = {
-      def conflict(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"merge on $path (read version $readV, buckets " +
-            s"${affected.toSeq.sorted.mkString("{", ",", "}")}) conflicts " +
-            s"with concurrent ${e.mode} at version ${e.version}: $why")
+    val bucketRe = s"/$BucketCol=(\\d+)/".r
+    def rule(e: CommitEntry): Option[String] =
       // id-reserve / id-sync are metadata-only marks (no files, no
       // schema change) — they commute with every rewrite; our own
       // reservation above is one of them
-      if (e.mode != "append" && e.mode != "merge" &&
-        e.mode != "id-reserve" && e.mode != "id-sync")
-        conflict("only blind appends, bucket-disjoint merges, and " +
-          "identity marks commute")
-      if (e.schemaJson != mySchemaJson) conflict("schema changed")
-      if (e.renames.nonEmpty) conflict("column rename")
-      if (e.dvAdds.nonEmpty || e.dvRemoves.nonEmpty)
-        conflict("deletion vectors touched")
-      val bucketRe = s"/$BucketCol=(\\d+)/".r
-      (e.adds ++ e.removes).foreach { f =>
+      if (!Set("append", "merge", "id-reserve", "id-sync")(e.mode))
+        Some("only blind appends, bucket-disjoint merges, and identity " +
+          "marks commute")
+      else if (e.schemaJson != mySchemaJson) Some("schema changed")
+      else if (e.renames.nonEmpty) Some("column rename")
+      else if (e.dvAdds.nonEmpty || e.dvRemoves.nonEmpty)
+        Some("deletion vectors touched")
+      else (e.adds ++ e.removes).iterator.flatMap { f =>
         bucketRe.findFirstMatchIn(f) match {
-          case Some(m) if !affected.contains(m.group(1).toLong) => ()
-          case Some(m) => conflict(s"bucket ${m.group(1)} overlaps")
-          case None => conflict(s"unbucketed file $f")
+          case Some(m) if !affected.contains(m.group(1).toLong) => None
+          case Some(m) => Some(s"bucket ${m.group(1)} overlaps")
+          case None => Some(s"unbucketed file $f")
         }
-      }
-    }
-
-    var attempt = 0
-    while (true) {
-      val v = nextVersion
-      // every commit that landed after our snapshot must commute with
-      // this rewrite — re-checked each attempt so late winners are seen
-      listVersions.filter(_ > readV).foreach(w =>
-        requireCompatible(readEntry(w)))
-      try {
-        writeEntry(CommitEntry(v, "merge", System.currentTimeMillis(),
-          mySchemaJson, adds, removed, hasChanges = true,
-          bucketSpec = bucketSpec, changeFiles = chg,
-          changesMode = changesMode))
-        return (nIns, nDel)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"merge on $path lost $maxRetries commit races, giving up")
-      }
-    }
-    (-1L, -1L) // unreachable
+      }.nextOption()
+    publish(readV, rule)(CommitEntry(_, "merge", System.currentTimeMillis(),
+      mySchemaJson, adds, removed, hasChanges = true,
+      bucketSpec = bucketSpec, changeFiles = chg,
+      changesMode = changesMode))
+    (nIns, nDel)
   }
 
   /** MERGE with UPDATE-matched semantics (the Delta
@@ -3431,76 +3377,102 @@ final class MiniLake(spark: SparkSession, val path: String,
     * path would apply; this variant rewrites the live set, the right
     * call for wide-update CDC batches). Deltas stay batch-sized.
     */
-  def mergeUpdate(rawSource: DataFrame, pks: Seq[String]): (Long, Long) =
-    withCommitPlanning {
-      requireNotAppendOnly("mergeUpdate")
-      // identity: matched rows KEEP their ids (the update replaces
-      // only non-key payload — ids are immutable once assigned, the
-      // Delta contract), inserts generate from the high water.
-      // Caller-supplied ids are refused even BY DEFAULT: the merge
-      // verbs' insert side always generates.
-      identitySpec.foreach { spec =>
-        require(!pks.contains(spec.name),
-          s"cannot merge on GENERATED AS IDENTITY column " +
-            s"'${spec.name}' of $path: incoming rows can never supply it")
-        require(!rawSource.columns.contains(spec.name),
-          s"GENERATED AS IDENTITY column '${spec.name}' cannot be " +
-            "user-supplied to mergeUpdate (matched rows keep their " +
-            "ids; inserts generate)")
-      }
-      // generated columns compute-if-absent on this insert/update
-      // surface too (consistency with every other data-carrying verb)
-      val source = withGenerated(rawSource)
-      requireSchemaMatch(source, exceptIdentity = true)
-      val target = snapshot()
-      val srcKeys = source.select(pks.map(col): _*).distinct()
-      val pre = target.join(srcKeys, pks, "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val untouched = target.join(srcKeys, pks, "left_anti")
-      // the postimage re-attaches the target's id by PK (1:1 — both
-      // sides PK-unique per the verb's contract), so an updated row's
-      // id survives the rewrite bit-for-bit
-      val postRaw = identitySpec match {
-        case Some(spec) =>
-          source.join(target.select((pks :+ spec.name).map(col): _*),
-            pks, "inner")
-        case None =>
-          source.join(target.select(pks.map(col): _*), pks, "left_semi")
-      }
-      val post = postRaw.select(target.columns.map(col).toSeq: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val insertsRaw = source.join(target.select(pks.map(col): _*), pks,
-        "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nUpd = post.count()
-      val nIns = insertsRaw.count()
-      val (inserts, idHw) = identitySpec match {
-        case Some(spec) if nIns > 0 =>
-          val base = identityHighWater.getOrElse(spec.start - spec.step)
-          val (stamp, hw) = assignIdentityFrom(insertsRaw, spec, base,
-            expectN = Some(nIns))
-          (stamp.select(target.columns.map(col).toSeq: _*)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-            Some(hw))
-        case _ => (insertsRaw, None)
-      }
-      val v = nextVersion
-      val newData = untouched.unionByName(post).unionByName(inserts)
-      val changes = pre.withColumn(ChangeType, lit("update_preimage"))
-        .unionByName(post.withColumn(ChangeType, lit("update_postimage")))
-        .unionByName(inserts.withColumn(ChangeType, lit("insert")))
-      val (adds, chg) = inParallel(
-        writeData(newData, v),
-        writeChanges(changes, v, rowHint = Some(2 * nUpd + nIns)))
-      writeEntry(CommitEntry(v, "merge-update", System.currentTimeMillis(),
-        target.schema.json, adds, liveFiles(v - 1), hasChanges = true,
-        bucketSpec = bucketSpec, changeFiles = chg,
-        dvRemoves = liveDvFiles(v - 1), identityHighWater = idHw))
-      idHw.foreach(h => idHwCache = Some((v, h)))
-      pre.unpersist(); post.unpersist(); insertsRaw.unpersist()
-      if (!(inserts eq insertsRaw)) inserts.unpersist()
-      (nUpd, nIns)
+  def mergeUpdate(rawSource: DataFrame, pks: Seq[String]): (Long, Long) = {
+    val (nUpd, nIns, _) = mergeUpsert(rawSource, pks, deleteUnmatched = false)
+    (nUpd, nIns)
+  }
+
+  /** The body of [[mergeUpdate]] and [[mergeSync]]: matched rows take
+    * the source payload, absent rows insert, and `deleteUnmatched`
+    * adds mergeSync's third clause. Identity: matched rows KEEP their
+    * ids (the update replaces only non-key payload — ids are immutable
+    * once assigned, the Delta contract), inserts generate from the
+    * high water. Caller-supplied ids are refused even BY DEFAULT: the
+    * merge verbs' insert side always generates.
+    */
+  private def mergeUpsert(rawSource: DataFrame, pks: Seq[String],
+      deleteUnmatched: Boolean): (Long, Long, Long) = withCommitPlanning {
+    val verb = if (deleteUnmatched) "mergeSync" else "mergeUpdate"
+    requireNotAppendOnly(verb)
+    identitySpec.foreach { spec =>
+      require(!pks.contains(spec.name),
+        s"cannot merge on GENERATED AS IDENTITY column " +
+          s"'${spec.name}' of $path: incoming rows can never supply it")
+      require(!rawSource.columns.contains(spec.name),
+        s"GENERATED AS IDENTITY column '${spec.name}' cannot be " +
+          s"user-supplied to $verb (matched rows keep their ids; " +
+          "inserts generate)")
     }
+    // generated columns compute-if-absent on this insert/update
+    // surface too (consistency with every other data-carrying verb)
+    val source = withGenerated(rawSource)
+    requireSchemaMatch(source, exceptIdentity = true)
+    val readV = latestVersion
+    val target = snapshot(readV)
+    val srcKeys = source.select(pks.map(col): _*).distinct()
+    val pre = target.join(srcKeys, pks, "left_semi")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // target rows NOT matched by any source key: untouched by
+    // mergeUpdate, deleted by mergeSync's third clause
+    val unmatched = target.join(srcKeys, pks, "left_anti")
+    val dropped = if (!deleteUnmatched) None else Some(unmatched
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // the postimage re-attaches the target's id by PK (1:1 — both
+    // sides PK-unique per the verb's contract), so an updated row's
+    // id survives the rewrite bit-for-bit
+    val postRaw = identitySpec match {
+      case Some(spec) =>
+        source.join(target.select((pks :+ spec.name).map(col): _*),
+          pks, "inner")
+      case None =>
+        source.join(target.select(pks.map(col): _*), pks, "left_semi")
+    }
+    val post = postRaw.select(target.columns.map(col).toSeq: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val insertsRaw = source.join(target.select(pks.map(col): _*), pks,
+      "left_anti")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nUpd = post.count()
+    val nIns = insertsRaw.count()
+    val nDel = dropped.fold(0L)(_.count())
+    val (inserts, idHw) = identitySpec match {
+      case Some(spec) if nIns > 0 =>
+        val base = identityHighWater.getOrElse(spec.start - spec.step)
+        val (stamp, hw) = assignIdentityFrom(insertsRaw, spec, base,
+          expectN = Some(nIns))
+        (stamp.select(target.columns.map(col).toSeq: _*)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+          Some(hw))
+      case Some(spec) =>
+        // zero inserts on an identity table: insertsRaw is empty but
+        // still lacks the identity column — conform it so the
+        // newData/changes unions resolve (nothing to stamp, no HW move)
+        (insertsRaw.withColumn(spec.name, lit(null).cast("long"))
+          .select(target.columns.map(col).toSeq: _*), None)
+      case None => (insertsRaw, None)
+    }
+    val v = readV + 1
+    val newData = (if (deleteUnmatched) post
+      else unmatched.unionByName(post)).unionByName(inserts)
+    val upserts = pre.withColumn(ChangeType, lit("update_preimage"))
+      .unionByName(post.withColumn(ChangeType, lit("update_postimage")))
+      .unionByName(inserts.withColumn(ChangeType, lit("insert")))
+    val changes = dropped.fold(upserts)(d =>
+      upserts.unionByName(d.withColumn(ChangeType, lit("delete"))))
+    val (adds, chg) = inParallel(
+      writeData(newData, v),
+      writeChanges(changes, v, rowHint = Some(2 * nUpd + nIns + nDel)))
+    publish(readV)(CommitEntry(_,
+      if (deleteUnmatched) "merge-sync" else "merge-update",
+      System.currentTimeMillis(), target.schema.json, adds,
+      liveFiles(readV), hasChanges = true, bucketSpec = bucketSpec,
+      changeFiles = chg, dvRemoves = liveDvFiles(readV),
+      identityHighWater = idHw))
+    pre.unpersist(); post.unpersist(); insertsRaw.unpersist()
+    dropped.foreach(_.unpersist())
+    if (!(inserts eq insertsRaw)) inserts.unpersist()
+    (nUpd, nIns, nDel)
+  }
 
   /** MERGE with all THREE Delta clauses (Delta 2.3+): whenMatched
     * UPDATE ∪ whenNotMatched INSERT ∪ `whenNotMatchedBySource` DELETE —
@@ -3527,80 +3499,8 @@ final class MiniLake(spark: SparkSession, val path: String,
     * Returns (nUpdated, nInserted, nDeleted).
     */
   def mergeSync(rawSource: DataFrame,
-      pks: Seq[String]): (Long, Long, Long) = withCommitPlanning {
-    requireNotAppendOnly("mergeSync")
-    identitySpec.foreach { spec =>
-      require(!pks.contains(spec.name),
-        s"cannot merge on GENERATED AS IDENTITY column " +
-          s"'${spec.name}' of $path: incoming rows can never supply it")
-      require(!rawSource.columns.contains(spec.name),
-        s"GENERATED AS IDENTITY column '${spec.name}' cannot be " +
-          "user-supplied to mergeSync (matched rows keep their ids; " +
-          "inserts generate)")
-    }
-    val source = withGenerated(rawSource)
-    requireSchemaMatch(source, exceptIdentity = true)
-    val target = snapshot()
-    val srcKeys = source.select(pks.map(col): _*).distinct()
-    val pre = target.join(srcKeys, pks, "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the third clause: target rows NOT matched by any source key
-    val dropped = target.join(srcKeys, pks, "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // postimage re-attaches the target's id by PK (1:1 — both sides
-    // PK-unique per the verb's contract), identical to mergeUpdate
-    val postRaw = identitySpec match {
-      case Some(spec) =>
-        source.join(target.select((pks :+ spec.name).map(col): _*),
-          pks, "inner")
-      case None =>
-        source.join(target.select(pks.map(col): _*), pks, "left_semi")
-    }
-    val post = postRaw.select(target.columns.map(col).toSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val insertsRaw = source.join(target.select(pks.map(col): _*), pks,
-      "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nUpd = post.count()
-    val nIns = insertsRaw.count()
-    val nDel = dropped.count()
-    val (inserts, idHw) = identitySpec match {
-      case Some(spec) if nIns > 0 =>
-        val base = identityHighWater.getOrElse(spec.start - spec.step)
-        val (stamp, hw) = assignIdentityFrom(insertsRaw, spec, base,
-          expectN = Some(nIns))
-        (stamp.select(target.columns.map(col).toSeq: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-          Some(hw))
-      case Some(spec) =>
-        // zero inserts on an identity table: insertsRaw is empty but
-        // still lacks the identity column — conform it so the
-        // newData/changes unions resolve (nothing to stamp, no HW move)
-        (insertsRaw.withColumn(spec.name, lit(null).cast("long"))
-          .select(target.columns.map(col).toSeq: _*), None)
-      case None => (insertsRaw, None)
-    }
-    val v = nextVersion
-    // nothing else survives: every target row either matched (post),
-    // or was deleted by the third clause; absent source rows insert
-    val newData = post.unionByName(inserts)
-    val changes = pre.withColumn(ChangeType, lit("update_preimage"))
-      .unionByName(post.withColumn(ChangeType, lit("update_postimage")))
-      .unionByName(inserts.withColumn(ChangeType, lit("insert")))
-      .unionByName(dropped.withColumn(ChangeType, lit("delete")))
-    val (adds, chg) = inParallel(
-      writeData(newData, v),
-      writeChanges(changes, v, rowHint = Some(2 * nUpd + nIns + nDel)))
-    writeEntry(CommitEntry(v, "merge-sync", System.currentTimeMillis(),
-      target.schema.json, adds, liveFiles(v - 1), hasChanges = true,
-      bucketSpec = bucketSpec, changeFiles = chg,
-      dvRemoves = liveDvFiles(v - 1), identityHighWater = idHw))
-    idHw.foreach(h => idHwCache = Some((v, h)))
-    pre.unpersist(); post.unpersist(); insertsRaw.unpersist()
-    dropped.unpersist()
-    if (!(inserts eq insertsRaw)) inserts.unpersist()
-    (nUpd, nIns, nDel)
-  }
+      pks: Seq[String]): (Long, Long, Long) =
+    mergeUpsert(rawSource, pks, deleteUnmatched = true)
 
   /** In-place column update of rows matching `pred` (S5 — the watermark
     * bump). Records Delta-style update_preimage/update_postimage change
@@ -3618,7 +3518,8 @@ final class MiniLake(spark: SparkSession, val path: String,
     identitySpec.foreach(spec => require(!assignments.contains(spec.name),
       s"GENERATED AS IDENTITY column '${spec.name}' of $path cannot " +
         "be updated"))
-    val target = snapshot()
+    val readV = latestVersion
+    val target = snapshot(readV)
     // null-safe predicate split: a NULL predicate means "not matched"
     // (Delta UPDATE semantics) — a plain `!pred` filter would drop
     // those rows from both branches and lose data.
@@ -3627,7 +3528,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     val post = assignments.foldLeft(pre) { case (d, (c, e)) => d.withColumn(c, e) }
     val untouched = target.filter(!matched)
     val newData = untouched.unionByName(post)
-    val v = nextVersion
+    val v = readV + 1
     val removed = liveFiles(v - 1)
     val (adds, chg) =
       if (trackChanges) {
@@ -3635,7 +3536,7 @@ final class MiniLake(spark: SparkSession, val path: String,
           .unionByName(post.withColumn(ChangeType, lit("update_postimage")))
         inParallel(writeData(newData, v), writeChanges(changes, v))
       } else (writeData(newData, v), Seq.empty[String])
-    writeEntry(CommitEntry(v, "update", System.currentTimeMillis(),
+    publish(v - 1)(CommitEntry(_, "update", System.currentTimeMillis(),
       target.schema.json, adds, removed, hasChanges = trackChanges,
       bucketSpec = bucketSpec, changeFiles = chg,
       dvRemoves = liveDvFiles(v - 1)))
@@ -3726,14 +3627,15 @@ final class MiniLake(spark: SparkSession, val path: String,
     */
   def delete(pred: Column): Long = withCommitPlanning {
     requireNotAppendOnly("delete")
-    val target = snapshot()
+    val readV = latestVersion
+    val target = snapshot(readV)
     val matched = coalesce(pred, lit(false))
     val doomed = target.filter(matched)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDel = doomed.count()
-    val v = nextVersion
+    val v = readV + 1
     if (nDel == 0) {
-      writeEntry(CommitEntry(v, "delete", System.currentTimeMillis(),
+      publish(v - 1)(CommitEntry(_, "delete", System.currentTimeMillis(),
         target.schema.json, Seq.empty, Seq.empty, hasChanges = false,
         bucketSpec = bucketSpec))
     } else {
@@ -3742,7 +3644,7 @@ final class MiniLake(spark: SparkSession, val path: String,
         writeData(kept, v),
         writeChanges(doomed.withColumn(ChangeType, lit("delete")), v,
           rowHint = Some(nDel)))
-      writeEntry(CommitEntry(v, "delete", System.currentTimeMillis(),
+      publish(v - 1)(CommitEntry(_, "delete", System.currentTimeMillis(),
         target.schema.json, adds, liveFiles(v - 1), hasChanges = true,
         bucketSpec = bucketSpec, changeFiles = chg,
         dvRemoves = liveDvFiles(v - 1)))
@@ -3768,155 +3670,86 @@ final class MiniLake(spark: SparkSession, val path: String,
     * into clean files when the vectors grow past taste. Time travel
     * honors DVs exactly: `snapshot(asOf)` applies the vectors live as
     * of that version, no more, no fewer.
-    */
-  def deleteVectored(pred: Column): Long = withCommitPlanning {
-    requireNotAppendOnly("deleteVectored")
-    val files = liveFiles(latestVersion)
-    val sch = schema
-    val matched = coalesce(pred, lit(false))
-    // evaluate the predicate over the DV-applied snapshot (rows already
-    // vectored out must not re-match), keeping the physical position
-    // columns the sidecar needs
-    val base =
-      if (files.isEmpty) return 0L
-      else readFiles(files, latestVersion, keepPos = true)
-    val doomed = base.filter(matched)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDel = doomed.count()
-    val v = nextVersion
-    if (nDel == 0) {
-      writeEntry(CommitEntry(v, "delete-dv", System.currentTimeMillis(),
-        sch.json, Seq.empty, Seq.empty, hasChanges = false,
-        bucketSpec = bucketSpec))
-    } else {
-      val dvDir = attemptDir("dv", v)
-      val (dvFiles, chg) = inParallel(
-        {
-          doomed.select(col(DvFileCol), col(DvPosCol))
-            .coalesce(filesFor(nDel)).write.parquet(dvDir.toString)
-          parquetFilesIn(dvDir)
-        },
-        writeChanges(doomed.drop(DvFileCol, DvPosCol)
-          .withColumn(ChangeType, lit("delete")), v, rowHint = Some(nDel)))
-      writeEntry(CommitEntry(v, "delete-dv", System.currentTimeMillis(),
-        sch.json, Seq.empty, Seq.empty, hasChanges = true,
-        bucketSpec = bucketSpec, changeFiles = chg, dvAdds = dvFiles))
-    }
-    doomed.unpersist()
-    nDel
-  }
-
-  /** [[deleteVectored]] under OPTIMISTIC CONCURRENCY — row-level
-    * concurrent DELETEs, Delta's WriteSerializable conflict rules
-    * specialized to the DV path (mergeConcurrent covers rewrite
-    * commits; this covers sidecar commits). The doomed (file,
-    * position) sidecar and the CDF preimages are computed and written
-    * ONCE against the snapshot at entry; then the log publish races.
-    * On losing, every winner committed since the read version is
-    * examined:
+    *
+    * Safe under CONCURRENT writers — Delta's WriteSerializable conflict
+    * rules on the DV path. The sidecar and the CDF preimages are
+    * written ONCE against the snapshot at the read version; then
+    * [[publish]] examines every winner committed since:
     *  - a blind append / create / identity reservation with an
     *    unchanged schema cannot invalidate recorded positions
     *    (positions are per-file and published files are immutable) —
-    *    retry the publish. WriteSerializable semantics: the winner's
-    *    new rows are NOT re-evaluated against this delete's predicate
-    *    (Delta draws the same line for DELETE vs blind append);
-    *  - a concurrent DV delete whose sidecar targets a DISJOINT file
-    *    set cannot overlap a position — stacked DVs compose — retry;
+    *    publish at the next version. WriteSerializable semantics: the
+    *    winner's new rows are NOT re-evaluated against this delete's
+    *    predicate (Delta draws the same line for DELETE vs blind
+    *    append);
+    *  - a DV delete whose sidecar targets a DISJOINT file set cannot
+    *    overlap a position — stacked DVs compose — publish;
     *  - anything else (rewrites/removes, a DV delete sharing a target
     *    file — its positions might overlap ours and CDF would
     *    double-publish preimages — schema changes, renames, DV
     *    retirements) invalidates the snapshot this delete was
-    *    computed from: throw ConcurrentModificationException and the
-    *    caller re-runs against fresh state, exactly Delta's
+    *    computed from: ConcurrentModificationException, and the caller
+    *    re-runs against fresh state, exactly Delta's
     *    ConcurrentDeleteDeleteException contract.
+    * This delete's own target files are collected only when a DV
+    * winner shows up, so an uncontended delete runs no extra job.
     */
-  def deleteVectoredConcurrent(pred: Column,
-      maxRetries: Int = 32): Long =
-    deleteVectoredConcurrentImpl(pred, maxRetries, () => ())
-
-  /** Test seam: `beforePublish` runs after the sidecar write, before
-    * the first publish attempt — the window a conflicting winner can
-    * land in deterministically. */
-  private[lake] def deleteVectoredConcurrentImpl(pred: Column,
-      maxRetries: Int, beforePublish: () => Unit): Long =
-      withCommitPlanning {
-    requireNotAppendOnly("deleteVectoredConcurrent")
+  def deleteVectored(pred: Column): Long = withCommitPlanning {
+    requireNotAppendOnly("deleteVectored")
     val readV = latestVersion
     val files = liveFiles(readV)
-    val sch = schema
-    val matched = coalesce(pred, lit(false))
-    if (files.isEmpty) return 0L
-    val base = readFiles(files, readV, keepPos = true)
-    val doomed = base.filter(matched)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDel = doomed.count()
-    val myTargets: Set[String] =
-      if (nDel == 0) Set.empty
-      else doomed.select(col(DvFileCol)).distinct()
-        .collect().map(r => MiniLake.localPath(r.getString(0))).toSet
-    val (dvFiles, chg) =
-      if (nDel == 0) (Seq.empty[String], Seq.empty[String])
-      else {
-        val dvDir = attemptDir("dv", readV)
-        inParallel(
-          {
-            doomed.select(col(DvFileCol), col(DvPosCol))
-              .coalesce(filesFor(nDel)).write.parquet(dvDir.toString)
-            parquetFilesIn(dvDir)
-          },
-          writeChanges(doomed.drop(DvFileCol, DvPosCol)
-            .withColumn(ChangeType, lit("delete")), readV,
-            rowHint = Some(nDel)))
-      }
-    doomed.unpersist()
-    beforePublish()
-    def winnerSafe(e: CommitEntry): Boolean = {
-      val schemaUnchanged = e.schemaJson == sch.json
-      val blindAdd = e.removes.isEmpty && e.dvAdds.isEmpty &&
-        e.dvRemoves.isEmpty && e.renames.isEmpty && schemaUnchanged
-      if (blindAdd) true
-      else if (e.removes.isEmpty && e.dvRemoves.isEmpty &&
-        e.renames.isEmpty && schemaUnchanged && e.dvAdds.nonEmpty) {
-        // DV-delete winner: safe iff its sidecar's target files are
-        // disjoint from ours (metadata-sized read of a small sidecar)
-        val theirs = spark.read.schema(MiniLake.DvSchema)
-          .parquet(e.dvAdds: _*).select(col(DvFileCol)).distinct()
-          .collect().map(r => MiniLake.localPath(r.getString(0))).toSet
-        theirs.intersect(myTargets).isEmpty
-      } else false
+    if (files.isEmpty) 0L
+    else {
+      val sch = schemaAt(readV)
+      // evaluate the predicate over the DV-applied snapshot (rows
+      // already vectored out must not re-match), keeping the physical
+      // position columns the sidecar needs
+      val doomed = readFiles(files, readV, keepPos = true)
+        .filter(coalesce(pred, lit(false)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val nDel = doomed.count()
+      val v = readV + 1
+      val (dvFiles, chg) =
+        if (nDel == 0) (Seq.empty[String], Seq.empty[String])
+        else {
+          val dvDir = attemptDir("dv", v)
+          inParallel(
+            {
+              doomed.select(col(DvFileCol), col(DvPosCol))
+                .coalesce(filesFor(nDel)).write.parquet(dvDir.toString)
+              parquetFilesIn(dvDir)
+            },
+            writeChanges(doomed.drop(DvFileCol, DvPosCol)
+              .withColumn(ChangeType, lit("delete")), v,
+              rowHint = Some(nDel)))
+        }
+      doomed.unpersist()
+      lazy val myTargets = dvTargets(dvFiles)
+      def rule(e: CommitEntry): Option[String] =
+        if (e.removes.nonEmpty || e.dvRemoves.nonEmpty ||
+            e.renames.nonEmpty || e.schemaJson != sch.json)
+          Some("a rewrite, deletion-vector retirement or schema change " +
+            "moved the rows this delete positioned")
+        else if (e.dvAdds.nonEmpty &&
+            dvTargets(e.dvAdds).intersect(myTargets).nonEmpty)
+          Some("its deletion vector shares a target file with this one")
+        else None
+      publish(readV, rule)(CommitEntry(_, "delete-dv",
+        System.currentTimeMillis(), sch.json, Seq.empty, Seq.empty,
+        hasChanges = nDel > 0, bucketSpec = bucketSpec,
+        changeFiles = chg, dvAdds = dvFiles))
+      nDel
     }
-    var attempt = 0
-    while (true) {
-      val v = nextVersion
-      // every commit that landed after our snapshot must commute with
-      // this delete — checked BEFORE each publish attempt (a winner
-      // landing after the check necessarily takes the version this
-      // writer is about to claim, forcing a collision and the next
-      // iteration's re-check — the mergeConcurrent discipline)
-      listVersions.filter(_ > readV).foreach { w =>
-        val e = readEntry(w)
-        if (!winnerSafe(e))
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent ${e.mode} at version $w of $path " +
-              "invalidated this delete's snapshot (rewrite, " +
-              "shared DV target file, or schema change): re-run " +
-              "against fresh state")
-      }
-      try {
-        writeEntry(CommitEntry(v, "delete-dv", System.currentTimeMillis(),
-          sch.json, Seq.empty, Seq.empty, hasChanges = nDel > 0,
-          bucketSpec = bucketSpec, changeFiles = chg, dvAdds = dvFiles))
-        return nDel
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"deleteVectoredConcurrent on $path lost $maxRetries " +
-              "commit races, giving up")
-      }
-    }
-    -1L // unreachable
   }
+
+  /** The data files a set of deletion-vector sidecars targets
+    * (metadata-sized read of small sidecars).
+    */
+  private def dvTargets(sidecars: Seq[String]): Set[String] =
+    if (sidecars.isEmpty) Set.empty
+    else spark.read.schema(MiniLake.DvSchema).parquet(sidecars: _*)
+      .select(col(DvFileCol)).distinct().collect()
+      .map(r => MiniLake.localPath(r.getString(0))).toSet
 
   /** Fold live deletion vectors into clean data files (Delta's
     * REORG TABLE ... APPLY (PURGE)): one rewrite of the live set with
@@ -3934,7 +3767,7 @@ final class MiniLake(spark: SparkSession, val path: String,
       val data = readFiles(prior, v - 1)
       val n = data.count()
       val adds = writeData(data, v, rowHint = Some(n), checked = false)
-      writeEntry(CommitEntry(v, "materialize", System.currentTimeMillis(),
+      publish(v - 1)(CommitEntry(_, "materialize", System.currentTimeMillis(),
         sch.json, adds, prior, hasChanges = false,
         bucketSpec = bucketSpec, dvRemoves = dvs))
     }
@@ -3990,12 +3823,11 @@ final class MiniLake(spark: SparkSession, val path: String,
         "restore to a version at or after the re-add")
     // columns ADDED since v (mergeSchema widening) null-fill — the
     // restore is then a well-typed multiset diff under one schema
-    val cur = snapshot()
+    val cur = snapshot(latest)
     val tgt = MiniLake.conformTo(tgtRenamed, curSchema)
     val changes = cur.exceptAll(tgt).withColumn(ChangeType, lit("delete"))
       .unionByName(tgt.exceptAll(cur).withColumn(ChangeType, lit("insert")))
-    commitWithChanges(tgt, mode = "restore", changes = changes,
-      removesAll = true)
+    commitWithChanges(latest, tgt, mode = "restore", changes = changes)
   }
 
   /** GENERATE symlink_format_manifest (Delta's Presto/Trino/Athena
@@ -4506,6 +4338,36 @@ object MiniLake {
       cloneDropped: Seq[String] = Seq.empty,
       cloneEraSchemas: Map[Long, String] = Map.empty)
 
+  /** The batch-sized deltas both MERGE verbs (`mergeDeltas`) compute against
+    * `snapshot(readV)`: matched target rows to delete (persisted), the
+    * target rows kept, and the insert rows whose key is absent after
+    * the deletes (persisted, without the identity column — the caller
+    * stamps ids on exactly the rows that insert).
+    */
+  private final case class MergeDeltas(target: DataFrame,
+      delKeys: DataFrame, toDelete: DataFrame, kept: DataFrame,
+      toInsertRaw: DataFrame, emptyDel: Boolean, emptyIns: Boolean)
+
+  /** A verb's conflict rule for [[MiniLake.publish]]: `None` admits a
+    * commit that landed after the verb's read version, `Some(why)`
+    * refuses it.
+    */
+  private type Rule = CommitEntry => Option[String]
+
+  /** Single-shot verbs compute their removes and change rows against
+    * one snapshot, so any winner invalidates them.
+    */
+  private val NoWinner: Rule =
+    _ => Some("this verb admits no concurrent commit")
+
+  /** Metadata marks derived afresh from the claimed version (identity
+    * reservations) commute with every winner.
+    */
+  private val AnyWinner: Rule = _ => None
+
+  /** Lost hard-link races one publish tolerates before giving up. */
+  private val MaxLostRaces = 32
+
   /** Highest reader protocol this build understands (Delta's
     * minReaderVersion contract): 1 = plain log, 2 = deletion vectors,
     * 3 = column mapping (rename/drop/re-add), 4 = initial-default
@@ -4701,7 +4563,7 @@ object MiniLake {
     */
   def shallowClone(spark: SparkSession, srcPath: String,
       destPath: String): MiniLake =
-    cloneImpl(spark, srcPath, destPath, (f: String) => f,
+    cloneTo(spark, srcPath, destPath, (f: String) => f,
       dvOverride = None)
 
   /** DEEP CLONE (Delta `CREATE TABLE ... CLONE src`, the default deep
@@ -4753,10 +4615,10 @@ object MiniLake {
           .coalesce(1).write.parquet(dvDir.toString)
         parquetFilesIn(dvDir)
       }
-    cloneImpl(spark, srcPath, destPath, mapped, dvOverride = Some(dvAdds))
+    cloneTo(spark, srcPath, destPath, mapped, dvOverride = Some(dvAdds))
   }
 
-  private def cloneImpl(spark: SparkSession, srcPath: String,
+  private def cloneTo(spark: SparkSession, srcPath: String,
       destPath: String, mapFile: String => String,
       dvOverride: Option[Seq[String]]): MiniLake = {
     val src = new MiniLake(spark, srcPath)
@@ -4803,8 +4665,10 @@ object MiniLake {
     // versions against file write versions, and the clone's own later
     // commits (version > clone point) must never sort BELOW a source
     // era. History and time travel simply begin at the clone point,
-    // like a Delta clone whose history begins at the clone commit.
-    dest.writeEntry(CommitEntry(v, "clone", System.currentTimeMillis(),
+    // like a Delta clone whose history begins at the clone commit. A
+    // racing clone into the same destination wins that version and
+    // this one's retry refuses it.
+    dest.publish(-1L)(_ => CommitEntry(v, "clone", System.currentTimeMillis(),
       src.schemaAt(v).json, src.liveFiles(v).map(mapFile), Seq.empty,
       hasChanges = false, bucketSpec = entry.bucketSpec,
       partitionCols = entry.partitionCols,

@@ -1261,7 +1261,7 @@ object Pipeline extends graft.Gates(graft.Gate.LakeProtocol) {
       |FROM base WHERE o_orderstatus <> 'F'""".stripMargin
 
   /** Concurrent row-level DELETE (q284) — [[MiniLake.
-    * deleteVectoredConcurrent]]: three writers race merge-on-read
+    * deleteVectored]]: three writers race merge-on-read
     * deletes confined to disjoint partitions (disjoint deletion-vector
     * target files → Delta's WriteSerializable rules let every sidecar
     * publish without invalidation; DeletionVectorSpec covers the
@@ -1284,7 +1284,7 @@ object Pipeline extends graft.Gates(graft.Gate.LakeProtocol) {
     import scala.concurrent.ExecutionContext.Implicits.global
     val writers = Seq("F", "O", "P").map { st =>
       Future {
-        MiniLake(s, s"$base/orders").deleteVectoredConcurrent(
+        MiniLake(s, s"$base/orders").deleteVectored(
           col("o_orderstatus") === st && col("o_orderkey") % 2 === 0)
       }
     }
@@ -1712,10 +1712,11 @@ object Pipeline extends graft.Gates(graft.Gate.LakeProtocol) {
 
   /** Append-only tables (q301) — Delta's `delta.appendOnly` writer
     * feature via SET TBLPROPERTIES: once set, every row-mutating verb
-    * (DELETE — COW and DV —, UPDATE, both MERGE flavors, overwrite,
-    * RESTORE) refuses, while appends (plain, concurrent, txn-marked),
-    * OPTIMIZE compaction, and vacuum stay legal because they preserve
-    * the logical row set — the audit-log / event-sourcing contract.
+    * (DELETE — COW and DV —, UPDATE, the three MERGE flavors,
+    * overwrite, RESTORE) refuses, while appends (plain, concurrent,
+    * txn-marked), OPTIMIZE compaction, and vacuum stay legal because
+    * they preserve the logical row set — the audit-log /
+    * event-sourcing contract.
     * The gate exercises the full cycle: set → appends through all
     * three paths → eight refusal probes → compact+vacuum under the
     * property → unset → one real delete. Every count and flag is
@@ -1738,7 +1739,8 @@ object Pipeline extends graft.Gates(graft.Gate.LakeProtocol) {
     val nRefused = Seq(
       refused(t.delete(col("o_orderkey") === 3L)),
       refused(t.deleteVectored(col("o_orderkey") === 3L)),
-      refused(t.deleteVectoredConcurrent(col("o_orderkey") === 3L)),
+      refused(t.mergeConcurrent(MiniLake.emptyDf(s, d.schema),
+        d.filter(col("o_orderkey") === 3L), Seq("o_orderkey"))),
       refused(t.update(col("o_orderkey") === 3L,
         Map("cents" -> lit(0L)))),
       refused(t.overwrite(d.limit(1))),

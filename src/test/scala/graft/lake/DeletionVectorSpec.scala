@@ -167,9 +167,9 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
       "(WriteSerializable) — the delete retries and both land") {
     val t = MiniLake.compact(spark, dir)
     t.create(kv(1L -> "a", 2L -> "b", 3L -> "c"))
-    val n = t.deleteVectoredConcurrentImpl(col("key") === 2L, 8, () => {
-      MiniLake(spark, dir).append(kv(9L -> "z"))
-    })
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).append(kv(9L -> "z")))
+    val n = t.deleteVectored(col("key") === 2L)
     assert(n === 1L)
     assert(t.snapshot().select("key").as[Long].collect().sorted.toSeq
       === Seq(1L, 3L, 9L))
@@ -179,12 +179,11 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
       "stacked sidecars compose") {
     val t = MiniLake.partitioned(spark, dir, Seq("value"))
     t.create(kv(1L -> "a", 2L -> "a", 3L -> "b", 4L -> "b"))
-    val n = t.deleteVectoredConcurrentImpl(
-      col("value") === "a" && col("key") === 1L, 8, () => {
-        // the winner vectors a row OUT OF THE OTHER PARTITION's file
-        MiniLake(spark, dir).deleteVectored(
-          col("value") === "b" && col("key") === 3L)
-      })
+    // the winner vectors a row OUT OF THE OTHER PARTITION's file
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).deleteVectored(
+        col("value") === "b" && col("key") === 3L))
+    val n = t.deleteVectored(col("value") === "a" && col("key") === 1L)
     assert(n === 1L)
     assert(t.snapshot().select("key").as[Long].collect().sorted.toSeq
       === Seq(2L, 4L))
@@ -194,10 +193,10 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
       "conflicts (positions could overlap; CDF would double-publish)") {
     val t = MiniLake.compact(spark, dir) // one file: targets must meet
     t.create(kv(1L -> "a", 2L -> "b", 3L -> "c"))
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).deleteVectored(col("key") === 3L))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      t.deleteVectoredConcurrentImpl(col("key") === 2L, 8, () => {
-        MiniLake(spark, dir).deleteVectored(col("key") === 3L)
-      })
+      t.deleteVectored(col("key") === 2L)
     }
     assert(ex.getMessage.contains("invalidated"))
   }
@@ -206,11 +205,11 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
       "recorded positions died with the rewritten files)") {
     val t = MiniLake.compact(spark, dir)
     t.create(kv(1L -> "a", 2L -> "b"))
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).update(col("key") === 1L,
+        Map("value" -> lit("A"))))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      t.deleteVectoredConcurrentImpl(col("key") === 2L, 8, () => {
-        MiniLake(spark, dir).update(col("key") === 1L,
-          Map("value" -> lit("A")))
-      })
+      t.deleteVectored(col("key") === 2L)
     }
     assert(ex.getMessage.contains("invalidated"))
   }

@@ -116,6 +116,10 @@ class IdentityColumnSpec extends AnyFunSuite with BeforeAndAfterEach {
         Seq("key"))
     }
     assert(ex.getMessage.contains("cannot be user-supplied"))
+    // a batch that only updates inserts nothing and burns no id
+    assert(t.mergeUpdate(kv(1L -> "A").orderBy("key"), Seq("key")) ===
+      ((1L, 0L)))
+    assert(ids(t) === Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
   }
 
   test("replacePartitions keeps counting upward (replaced ids burn)") {

@@ -869,16 +869,16 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
     // DISJOINT: while this merge (bucket 0: delete b0.head, insert
     // b0(1)) sits between its data write and its publish, a winner
     // merge lands entirely in bucket 1 — both must commit
-    val (ins, del) = t.mergeConcurrentImpl(
+    t.beforeNextPublish = Some(() => {
+      val w = MiniLake(spark, dir)
+      val r = w.mergeConcurrent(
+        inserts = kv(b1(1) -> "n1"), deletes = kv(b1.head -> "y"),
+        pks = Seq("key"))
+      assert(r === (1L, 1L))
+    })
+    val (ins, del) = t.mergeConcurrent(
       inserts = kv(b0(1) -> "n0"), deletes = kv(b0.head -> "x"),
-      pks = Seq("key"), maxRetries = 16,
-      beforePublish = () => {
-        val w = MiniLake(spark, dir)
-        val r = w.mergeConcurrent(
-          inserts = kv(b1(1) -> "n1"), deletes = kv(b1.head -> "y"),
-          pks = Seq("key"))
-        assert(r === (1L, 1L))
-      })
+      pks = Seq("key"))
     assert((ins, del) === (1L, 1L))
     assert(MiniLake(spark, dir).snapshot().orderBy("key")
       .as[(Long, String)].collect().toSeq ===
@@ -887,14 +887,14 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
     // OVERLAP: a winner touching bucket 0 while our merge also reads/
     // writes bucket 0 — the loser must detect the logical conflict and
     // abort (never last-writer-win a stale rewrite)
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).mergeConcurrent(
+        inserts = kv(b0(3) -> "theirs"),
+        deletes = MiniLake.emptyDf(spark, t.schema), pks = Seq("key")))
     val err = intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrentImpl(
+      t.mergeConcurrent(
         inserts = kv(b0(2) -> "mine"), deletes = kv(b0(1) -> "n0"),
-        pks = Seq("key"), maxRetries = 16,
-        beforePublish = () =>
-          MiniLake(spark, dir).mergeConcurrent(
-            inserts = kv(b0(3) -> "theirs"),
-            deletes = MiniLake.emptyDf(spark, t.schema), pks = Seq("key")))
+        pks = Seq("key"))
     }
     assert(err.getMessage.contains("conflicts"))
     // the winner's commit survives; the loser left only vacuum debris
@@ -906,14 +906,14 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
 
     // SCHEMA CHANGE: a widening append between read and publish
     // invalidates the rewrite's pinned schema — abort
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).append(
+        kv(b1(2) -> "w").withColumn("extra", lit(1L)),
+        mergeSchema = true))
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrentImpl(
+      t.mergeConcurrent(
         inserts = kv(b0(4) -> "v"), deletes = MiniLake.emptyDf(spark, t.schema),
-        pks = Seq("key"), maxRetries = 16,
-        beforePublish = () =>
-          MiniLake(spark, dir).append(
-            kv(b1(2) -> "w").withColumn("extra", lit(1L)),
-            mergeSchema = true))
+        pks = Seq("key"))
     }
   }
 
@@ -943,6 +943,53 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
       .collect().toMap
     keys.foreach(k => assert(snap.get(k) === Some(s"v$k"), s"key $k lost"))
     assert(MiniLake(spark, dir).latestVersion === keys.size.toLong)
+
+    // every racing verb: per bucket, a merge (delete that bucket's key,
+    // insert a fresh one), a blind append of a fresh key, or a DV
+    // delete of that bucket's key. Each call either returns or throws
+    // ConcurrentModificationException; exactly the returned calls land.
+    val fresh = spark.range(200, 400).select(col("id"),
+        pmod(xxhash64(concat_ws("", col("id").cast("string"))),
+          lit(n.toLong)).as("b"))
+      .collect().groupBy(_.getLong(1)).map { case (b, rs) =>
+        b -> rs.head.getLong(0)
+      }
+    val calls: Seq[(String, Long, Long)] = perBucket.toSeq.sortBy(_._1)
+      .map { case (b, k) => (Seq("merge", "append", "dv")(b.toInt % 3),
+        k, fresh(b)) }
+    val outcomes = new java.util.concurrent.ConcurrentHashMap[Int,
+      Either[Throwable, Unit]]()
+    val racers = calls.zipWithIndex.map { case ((verb, k, f), i) =>
+      new Thread(() => {
+        val w = MiniLake(spark, dir)
+        val r = scala.util.Try[Unit](verb match {
+          case "merge" => w.mergeConcurrent(kv(f -> s"v$f"), kv(k -> ""),
+            Seq("key"))
+          case "append" => w.appendConcurrent(kv(f -> s"v$f"))
+          case "dv" => assert(w.deleteVectored(col("key") === k) === 1L)
+        })
+        outcomes.put(i, r.toEither)
+      })
+    }
+    racers.foreach(_.start()); racers.foreach(_.join())
+    val results = calls.indices.map(outcomes.get)
+    results.collect { case Left(e) => e }.foreach { e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e)
+    }
+    val landed = calls.zip(results).collect { case (c, Right(_)) => c }
+    assert(landed.nonEmpty)
+    val expected = landed.foldLeft(snap) { case (m, (verb, k, f)) =>
+      verb match {
+        case "merge" => m - k + (f -> s"v$f")
+        case "append" => m + (f -> s"v$f")
+        case _ => m - k
+      }
+    }
+    val after = MiniLake(spark, dir)
+    assert(after.latestVersion === keys.size.toLong + landed.size)
+    val rows = after.snapshot().as[(Long, String)].collect()
+    assert(rows.length === expected.size)
+    assert(rows.toMap === expected)
   }
 
   test("generated columns: computed when absent, validated when " +
@@ -988,16 +1035,54 @@ class MiniLakeSpec extends AnyFunSuite with BeforeAndAfterEach {
     // and its FIRST publish attempt — it takes the next version, so
     // the publish would NOT collide; only the loop-top schema re-check
     // can catch it
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).renameColumn("value", "val2"))
     val err = intercept[IllegalArgumentException] {
-      t.appendConcurrentImpl(kv(2L -> "b"), maxRetries = 4,
-        beforePublish = () =>
-          MiniLake(spark, dir).renameColumn("value", "val2"))
+      t.appendConcurrent(kv(2L -> "b"))
     }
     assert(err.getMessage.contains("schema mismatch"))
     // the rename survived: no stale-schema entry reverted it
     val fresh = MiniLake(spark, dir)
     assert(fresh.schema.fieldNames.toSeq === Seq("key", "val2"))
     assert(fresh.latestVersion === 1L)
+  }
+
+  test("a single-shot verb that loses a race raises " +
+      "ConcurrentModificationException naming the winner") {
+    val t = MiniLake(spark, dir)
+    t.create(kv(1L -> "a"))
+    t.beforeNextPublish = Some(() =>
+      MiniLake(spark, dir).append(kv(2L -> "b")))
+    val err = intercept[java.util.ConcurrentModificationException] {
+      t.update(col("key") === 1L, Map("value" -> lit("A")))
+    }
+    assert(err.getMessage.contains("concurrent append at version 1"))
+    // the winner stands; the loser's rewrite did not land
+    val fresh = MiniLake(spark, dir)
+    assert(fresh.latestVersion === 1L)
+    assert(fresh.snapshot().as[(Long, String)].collect().toMap ===
+      Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("appendIfAbsent: a racing replay of the same txn is a no-op, " +
+      "not an error") {
+    val t = MiniLake(spark, dir)
+    t.create(kv(1L -> "a"))
+    val batch = kv(2L -> "b")
+    // the rival replay lands inside this writer's publish, after it
+    // claimed version 1 and before its hard link: the link collides
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    MiniLake.clockForTests = Some(() => {
+      if (fired.compareAndSet(false, true))
+        assert(MiniLake(spark, dir).appendIfAbsent(batch, "sink", 7L))
+      System.currentTimeMillis()
+    })
+    try assert(!t.appendIfAbsent(batch, "sink", 7L))
+    finally MiniLake.clockForTests = None
+    val fresh = MiniLake(spark, dir)
+    assert(fresh.latestVersion === 1L)
+    assert(fresh.lastTxnVersion("sink") === 7L)
+    assert(fresh.snapshot().count() === 2L)
   }
 
   test("schema check: nested fields may be stricter than the table, " +

@@ -64,7 +64,7 @@ class TablePropertiesSpec extends AnyFunSuite with BeforeAndAfterEach {
         e.getMessage.contains("append-only") }
     assert(refused(t.delete(col("k") === 1L)))
     assert(refused(t.deleteVectored(col("k") === 1L)))
-    assert(refused(t.deleteVectoredConcurrent(col("k") === 1L)))
+    assert(refused(t.mergeConcurrent(kv(9L -> 90L), kv(1L -> 10L), Seq("k"))))
     assert(refused(t.update(col("k") === 1L, Map("cents" -> lit(0L)))))
     assert(refused(t.overwrite(kv(9L -> 90L))))
     assert(refused(t.merge(kv(9L -> 90L), kv(1L -> 10L), Seq("k"))))
