@@ -48,6 +48,15 @@ object Metrics {
       "table_name" -> tableName, "operation" -> operation,
       "activity" -> activity))
 
+  /** How a `MiniLake.merge` landed its batch: `path` is `dv` (a
+    * deletion-vector sidecar, inserts appended), `rewrite` (live files
+    * rewritten) or `insert` (no matched delete); `value` is the rows it
+    * wrote to data files.
+    */
+  def mergePath(path: String, rowsWritten: Long, tablePath: String): Unit =
+    sink.emit("merge_rows_written", rowsWritten, Map(
+      "path" -> path, "table_path" -> tablePath))
+
   /** monitoring.py:53-94 — logging init shim (correlation id carried as
     * an MDC value; exporters attach here).
     */

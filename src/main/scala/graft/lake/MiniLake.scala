@@ -1651,23 +1651,27 @@ final class MiniLake(spark: SparkSession, val path: String,
     state(asOf).liveFiles
 
   /** Deletion-vector files live as of `asOf` — added by
-    * [[deleteVectored]] commits, retired whenever a commit rewrites
-    * the whole live set (update/overwrite/COW delete/restore/optimize/
-    * [[materializeDeletes]]). Same fold as [[liveFiles]]; DV rows whose
-    * target data file has since left the live set are inert (their
-    * `_dv_file` matches nothing at read time), so partial rewrites —
-    * the bucketed merge — need no DV bookkeeping at all.
+    * [[deleteVectored]] and unbucketed [[merge]] commits, retired
+    * whenever a commit rewrites the whole live set (update/overwrite/
+    * COW delete/merge fold/restore/optimize/[[materializeDeletes]]).
+    * Same fold as [[liveFiles]]; DV rows whose target data file has
+    * since left the live set are inert (their `_dv_file` matches
+    * nothing at read time), so partial rewrites — the bucketed merge —
+    * need no DV bookkeeping at all.
     */
   private def liveDvFiles(asOf: Long): Seq[String] =
     state(asOf).liveDvFiles
 
-  /** Apply live deletion vectors to a file-sourced frame: anti-join on
+  /** Apply live deletion vectors to a file-sourced frame, keyed on
     * (physical file, row position) from the `_metadata` struct — the
     * Iceberg positional-delete / Delta deletion-vector read shape. The
     * DV side is deleted-rows-sized (bounded by churn since the last
-    * materialize, never table-sized), so it broadcasts; the scan side
-    * stays a plain parquet scan with pushdown intact. When no DVs are
-    * live this is the identity — zero cost on the hot path.
+    * materialize, never table-sized). While it stays metadata-sized it
+    * is read on the driver and applied as a hash-set filter on the
+    * scan: no join, and no job to collect it. Larger, it broadcasts
+    * into an anti-join. Either way the scan stays a plain parquet scan
+    * with pushdown intact. When no DVs are live this is the identity —
+    * zero cost on the hot path.
     */
   private def applyDvs(base: DataFrame, asOf: Long,
       keepPos: Boolean = false): DataFrame = {
@@ -1679,12 +1683,56 @@ final class MiniLake(spark: SparkSession, val path: String,
         .withColumn(DvPosCol, col("_metadata.row_index"))
       val joined =
         if (dvFiles.isEmpty) withPos
-        else {
-          val dv = spark.read.schema(DvSchema).parquet(dvFiles: _*)
-          withPos.join(broadcast(dv), Seq(DvFileCol, DvPosCol), "left_anti")
+        else localDvKeys(dvFiles) match {
+          case Some(dead) =>
+            // per target file, a hash set of its deleted positions
+            val pos = org.apache.spark.sql.GraftSql.expressionOf(col(DvPosCol))
+            def in(ps: Set[Any]) = org.apache.spark.sql.GraftSql.columnOf(
+              org.apache.spark.sql.catalyst.expressions.InSet(pos, ps))
+            val (f0, p0) = dead.head
+            val hit = dead.tail.foldLeft(when(col(DvFileCol) === f0, in(p0))) {
+              case (c, (f, ps)) => c.when(col(DvFileCol) === f, in(ps))
+            }.otherwise(false)
+            withPos.filter(!hit)
+          case None =>
+            val dv = spark.read.schema(DvSchema).parquet(dvFiles: _*)
+            withPos.join(broadcast(dv), Seq(DvFileCol, DvPosCol), "left_anti")
         }
       if (keepPos) joined else joined.drop(DvFileCol, DvPosCol)
     }
+  }
+
+  /** The deleted positions of `sidecars` by target file, read on the
+    * driver (once per sidecar per JVM, see [[MiniLake.dvPositions]])
+    * while they stay metadata-sized: at most
+    * [[MiniLake.MaxDriverWriteRows]] positions over at most
+    * [[MiniLake.MaxDvFilterFiles]] target files. None once larger.
+    */
+  private def localDvKeys(
+      sidecars: Seq[String]): Option[Map[String, Set[Any]]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def read(sidecar: String): Option[Map[String, Set[Any]]] =
+      Option(dvPositions.get(sidecar)).getOrElse {
+        val rd = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          new org.apache.hadoop.fs.Path(sidecar)).withConf(conf).build()
+        val rows =
+          try Iterator.continually(rd.read()).takeWhile(_ != null)
+            .take(MaxDriverWriteRows + 1)
+            .map(g => g.getString(DvFileCol, 0) -> g.getLong(DvPosCol, 0))
+            .toVector
+          finally rd.close()
+        val byFile = Option.when(rows.size <= MaxDriverWriteRows)(
+          rows.groupMap(_._1)(_._2: Any).view.mapValues(_.toSet).toMap)
+        dvPositions.put(sidecar, byFile)
+        byFile
+      }
+    val parts = sidecars.map(read)
+    val merged = parts.flatten.flatMap(_.toSeq)
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+    Option.when(parts.forall(_.nonEmpty) && merged.nonEmpty &&
+      merged.size <= MaxDvFilterFiles &&
+      merged.values.map(_.size.toLong).sum <= MaxDriverWriteRows)(merged)
   }
 
   /** RENAME COLUMN as a METADATA-ONLY commit (Delta column-mapping
@@ -2637,20 +2685,33 @@ final class MiniLake(spark: SparkSession, val path: String,
   }
 
   private def writeChanges(changes: DataFrame, v: Long,
-      rowHint: Option[Long] = None): Seq[String] = {
-    val dir = attemptDir("changes", v)
-    localBatchRows(changes, rowHint) match {
+      rowHint: Option[Long] = None): Seq[String] =
+    writeSideFiles("changes", changes, v, rowHint)
+
+  /** A deletion-vector sidecar: the (file, position) pairs of
+    * `doomed`, which [[readFiles]] produced with `keepPos = true`.
+    */
+  private def writeDv(doomed: DataFrame, v: Long, rows: Long): Seq[String] =
+    writeSideFiles("dv", doomed.select(col(DvFileCol), col(DvPosCol)), v,
+      Some(rows))
+
+  /** Change and deletion-vector files: outside the layout of data
+    * files, so a small batch is always one driver-written file.
+    */
+  private def writeSideFiles(kind: String, df: DataFrame, v: Long,
+      rowHint: Option[Long]): Seq[String] = {
+    val dir = attemptDir(kind, v)
+    localBatchRows(df, rowHint) match {
       case Some((rows, sch)) =>
         val fs = writeLocalParquet(rows, sch, dir)
-        // change files never ride the adds stats — drop the inline
+        // side files never ride the adds stats — drop the inline
         // entry writeEntry would otherwise leave parked forever
         fs.foreach(pendingStats.remove)
         fs
       case None =>
         val sized =
-          if (compact) changes.coalesce(1)
-          else rowHint.map(n => changes.coalesce(filesFor(n)))
-            .getOrElse(changes)
+          if (compact) df.coalesce(1)
+          else rowHint.map(n => df.coalesce(filesFor(n))).getOrElse(df)
         sized.write.parquet(dir.toString)
         parquetFilesIn(dir)
     }
@@ -3103,10 +3164,12 @@ final class MiniLake(spark: SparkSession, val path: String,
     * column itself is impossible by construction (ALWAYS forbids
     * caller-supplied values, so incoming rows cannot name a PK to
     * match) — refused explicitly; the merge verbs never accept
-    * caller-supplied ids, even BY DEFAULT.
+    * caller-supplied ids, even BY DEFAULT. `positioned` keeps each
+    * matched row's deletion-vector position columns on `toDelete`.
     */
   private def mergeDeltas(verb: String, inserts: DataFrame,
-      deletes: DataFrame, pks: Seq[String], readV: Long): MergeDeltas = {
+      deletes: DataFrame, pks: Seq[String], readV: Long,
+      positioned: Boolean = false): MergeDeltas = {
     identitySpec.foreach { spec =>
       require(!pks.contains(spec.name),
         s"cannot merge on GENERATED AS IDENTITY column " +
@@ -3131,9 +3194,11 @@ final class MiniLake(spark: SparkSession, val path: String,
     // datalake.py:194-211) — so a PK deleted and re-inserted in the
     // same batch (e.g. from an upstream overwrite) lands correctly.
     val delKeys = deletes.select(pks.map(col): _*).distinct()
+    val files = liveFiles(readV)
     val toDelete =
-      if (emptyDel) emptyDf(spark, target.schema)
-      else target.join(delKeys, pks, "left_semi")
+      if (emptyDel || files.isEmpty) emptyDf(spark, target.schema)
+      else (if (positioned) readFiles(files, readV, keepPos = true)
+        else target).join(delKeys, pks, "left_semi")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kept =
       if (emptyDel) target else target.join(delKeys, pks, "left_anti")
@@ -3156,6 +3221,21 @@ final class MiniLake(spark: SparkSession, val path: String,
     * (datalake.py:194-211). Re-inserting an existing PK is a no-op
     * (idempotent replay, design_doc.md at-least-once note). Returns
     * (#inserted, #deleted) for the caller's metrics (M1).
+    *
+    * Where the matched deletes land depends on the layout:
+    *  - an unbucketed table deletes merge-on-read (Delta's deletion
+    *    vectors, Iceberg's position deletes): one sidecar records the
+    *    matched rows' (file, position) pairs, the inserts append as new
+    *    files, and no live file is rewritten, so the write is
+    *    batch-sized, not table-sized;
+    *  - the fold: the merge whose sidecar would bring the live sidecars
+    *    to [[MiniLake.MaxLiveDvFiles]] rewrites the live set instead,
+    *    reading through the live sidecars, and retires all of them;
+    *  - a bucketed table rewrites only the buckets holding matched rows.
+    * A batch with no matched delete appends its inserts, which double as
+    * its change feed. Each merge reports its path (`dv`, `rewrite` or
+    * `insert`) and the rows it wrote to data files through
+    * [[graft.Metrics.mergePath]].
     */
   def merge(inserts: DataFrame, deletes: DataFrame,
       pks: Seq[String]): (Long, Long) = withCommitPlanning {
@@ -3165,8 +3245,12 @@ final class MiniLake(spark: SparkSession, val path: String,
     // ids), continuing from the high-water mark — merge admits no
     // concurrent winner, like append, so no reservation is needed.
     val readV = latestVersion
+    // the live sidecar count is log state: choosing the path costs no job
+    val vectored =
+      bucketSpec.isEmpty && liveDvFiles(readV).size + 1 < MaxLiveDvFiles
     val MergeDeltas(target, delKeys, toDelete, kept, toInsertRaw,
-      emptyDel, emptyIns) = mergeDeltas("merge", inserts, deletes, pks, readV)
+      emptyDel, emptyIns) =
+      mergeDeltas("merge", inserts, deletes, pks, readV, positioned = vectored)
 
     // The deltas are batch-sized (not table-sized), so persisting them
     // is scale-safe and saves recomputing the anti-joins for the count,
@@ -3197,14 +3281,13 @@ final class MiniLake(spark: SparkSession, val path: String,
     val nDel = delByBucket.values.sum
     val affected = delByBucket.keySet
     val v = readV + 1
-    if (nDel > 0) {
-      // copy-on-write of the affected data. Bucketed tables rewrite
-      // ONLY the buckets holding matched delete rows (a PK's row can
-      // only live in its own bucket, so kept-rows outside those
-      // buckets are untouched and their files stay live); unbucketed
-      // tables rewrite the whole live set.
-      val (newData, removed) = bucketSpec match {
+    val (mergePath, rowsWritten) = if (nDel > 0) {
+      // the data to write, and the data files and sidecars it retires
+      val (newData, removed, dvRemoved) = bucketSpec match {
         case Some(_) =>
+          // a PK's row can only live in its own bucket, so kept rows
+          // outside the hit buckets are untouched and their files stay
+          // live
           val prior = liveFiles(readV)
           val hit = prior.filter(f =>
             affected.exists(k => f.contains(s"/$BucketCol=$k/")))
@@ -3212,18 +3295,28 @@ final class MiniLake(spark: SparkSession, val path: String,
             if (hit.isEmpty) emptyDf(spark, target.schema)
             else readFiles(hit, readV)
           val keptAffected = affectedTarget.join(delKeys, pks, "left_anti")
-          (keptAffected.unionByName(toInsert), hit)
+          (keptAffected.unionByName(toInsert), hit, Seq.empty[String])
+        case None if vectored =>
+          (toInsert, Seq.empty[String], Seq.empty[String])
         case None =>
-          (kept.unionByName(toInsert), liveFiles(readV))
+          // the fold: `kept` reads through the live sidecars, so the
+          // new files already exclude their rows
+          (kept.unionByName(toInsert), liveFiles(readV), liveDvFiles(readV))
       }
-      val (adds, chg) = inParallel(writeData(newData, v),
-        writeChanges(toDelete.withColumn(ChangeType, lit("delete"))
+      val ((adds, dvAdds), chg) = inParallel(
+        (if (vectored && nIns == 0) Seq.empty[String]
+         else writeData(newData, v,
+           rowHint = if (vectored) Some(nIns) else None),
+         if (vectored) writeDv(toDelete, v, nDel) else Seq.empty[String]),
+        writeChanges(toDelete.drop(DvFileCol, DvPosCol)
+          .withColumn(ChangeType, lit("delete"))
           .unionByName(toInsert.withColumn(ChangeType, lit("insert"))), v,
           rowHint = Some(nIns + nDel)))
       publish(readV)(CommitEntry(_, "merge", System.currentTimeMillis(),
         target.schema.json, adds, removed, hasChanges = true,
-        bucketSpec = bucketSpec, changeFiles = chg,
-        identityHighWater = idHw))
+        bucketSpec = bucketSpec, changeFiles = chg, dvAdds = dvAdds,
+        dvRemoves = dvRemoved, identityHighWater = idHw))
+      if (vectored) ("dv", nIns) else ("rewrite", rowsIn(adds))
     } else {
       // pure insert: append-only commit, no rewrite of existing files;
       // the added files double as the change feed
@@ -3232,11 +3325,24 @@ final class MiniLake(spark: SparkSession, val path: String,
         target.schema.json, adds, Seq.empty, hasChanges = true,
         bucketSpec = bucketSpec, changesMode = "insertsFromData",
         identityHighWater = idHw))
+      ("insert", nIns)
     }
     toDelete.unpersist()
     toInsertRaw.unpersist()
     if (!(toInsert eq toInsertRaw)) toInsert.unpersist()
+    graft.Metrics.mergePath(mergePath, rowsWritten, path)
     (nIns, nDel)
+  }
+
+  /** Rows in written parquet files, read from their footers. */
+  private def rowsIn(files: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try rd.getRecordCount finally rd.close()
+    }.sum
   }
 
   /** [[merge]] under OPTIMISTIC CONCURRENCY — Delta's commit-protocol
@@ -3711,18 +3817,9 @@ final class MiniLake(spark: SparkSession, val path: String,
       val v = readV + 1
       val (dvFiles, chg) =
         if (nDel == 0) (Seq.empty[String], Seq.empty[String])
-        else {
-          val dvDir = attemptDir("dv", v)
-          inParallel(
-            {
-              doomed.select(col(DvFileCol), col(DvPosCol))
-                .coalesce(filesFor(nDel)).write.parquet(dvDir.toString)
-              parquetFilesIn(dvDir)
-            },
-            writeChanges(doomed.drop(DvFileCol, DvPosCol)
-              .withColumn(ChangeType, lit("delete")), v,
-              rowHint = Some(nDel)))
-        }
+        else inParallel(writeDv(doomed, v, nDel),
+          writeChanges(doomed.drop(DvFileCol, DvPosCol)
+            .withColumn(ChangeType, lit("delete")), v, rowHint = Some(nDel)))
       doomed.unpersist()
       lazy val myTargets = dvTargets(dvFiles)
       def rule(e: CommitEntry): Option[String] =
@@ -4275,6 +4372,34 @@ object MiniLake {
       org.apache.spark.sql.types.StringType, nullable = false),
     org.apache.spark.sql.types.StructField(DvPosCol,
       org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** Live deletion vectors targeting more data files than this apply
+    * as a broadcast anti-join rather than a filter: the filter compares
+    * each scanned row's file with every target file in turn.
+    */
+  private val MaxDvFilterFiles = 64
+
+  /** Deleted positions by target file of each deletion-vector sidecar
+    * a driver has read, None for one too large to hold. A sidecar never
+    * changes once written (each lands in its own attempt directory), so
+    * an entry never goes stale; past 256 sidecars the least recently
+    * used is dropped.
+    */
+  private val dvPositions = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, Option[Map[String, Set[Any]]]](64,
+        0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          Option[Map[String, Set[Any]]]]): Boolean = size > 256
+    })
+
+  /** An unbucketed [[MiniLake.merge]] whose sidecar would bring the
+    * live deletion-vector sidecars to this count rewrites the live set
+    * instead, retiring every live sidecar. Each read pays one broadcast
+    * anti-join over the live sidecars, so this bounds that tax at a few
+    * small files, while a trickle of small delete batches pays the
+    * copy-on-write once per that many merges.
+    */
+  private[graft] val MaxLiveDvFiles = 16
 
   /** `v=<N>` path segment of a data-file attempt directory. */
   private[lake] val VersionSeg = """/v=(\d+)/""".r

@@ -3,13 +3,14 @@
 
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StringType
 
 import graft.Metrics
-import graft.lake.{Catalog, Cdc, Watermark}
+import graft.lake.{Catalog, Cdc, MiniLake, Watermark}
 import graft.ops.{Extract, Pseudonymise}
-import graft.ops.Pseudonymise.TableConfig
+import graft.ops.Pseudonymise.{FreeText, TableConfig}
 
 /** The medallion-pipeline entry points, faithful to the reference's
   * entrypoint scripts (patient_notes/src/patient_notes/entrypoints/
@@ -40,14 +41,16 @@ object Jobs {
     tableConfigs.foreach { case (tableName, config) =>
       val upd = Cdc.readTableUpdate(spark, s"${zones.bronze}/$tableName",
         wm, "pseudonymisation", tableName)
+      val silver = s"${zones.silver}/$tableName"
       // early-out on empty input (entrypoints/pseudonymisation.py:52-53)
-      if (!upd.df.isEmpty) {
-        val repartitioned = upd.df.repartition(
-          math.max(TargetPartitions, upd.df.rdd.getNumPartitions))
-        val transformed = Pseudonymise.pseudoTransform(
-          repartitioned, tableName, config, anonymise)
+      if (hasRange(upd)) {
+        val transformed = udfOnInserts(upd.df, silver)(
+          d => Pseudonymise.pseudoTransform(
+            d.repartition(math.max(TargetPartitions, d.rdd.getNumPartitions)),
+            tableName, config, anonymise),
+          Pseudonymise.pseudoTransform(_, tableName, config, NullText))
         val (ins, del) = Cdc.writeTableUpdate(spark,
-          upd.copy(df = transformed), s"${zones.silver}/$tableName",
+          upd.copy(df = transformed), silver,
           config.primaryKeys, wm, "pseudonymisation", tableName)
         Metrics.rowsUpdated(ins, tableName, "insert", "pseudonymisation")
         Metrics.rowsUpdated(del, tableName, "delete", "pseudonymisation")
@@ -89,11 +92,17 @@ object Jobs {
     tableConfigs.foreach { case (tableName, config) =>
       val upd = Cdc.readTableUpdate(spark, s"${zones.silver}/$tableName",
         wm, "feature_extraction", tableName)
-      if (!upd.df.isEmpty) {
-        val extracted = Extract.extractFeatures(upd.df, tableName, config,
-          numKeys, annotator)
+      val gold = s"${zones.gold}/$tableName"
+      if (hasRange(upd)) {
+        val freeText = config.columnTypes.collect {
+          case (FreeText, cols) => cols
+        }.flatten
+        val extracted = udfOnInserts(upd.df, gold)(
+          Extract.extractFeatures(_, tableName, config, numKeys, annotator),
+          Pseudonymise.processFreeTextColumns(_, freeText, NullText,
+            tableName))
         val (ins, del) = Cdc.writeTableUpdate(spark,
-          upd.copy(df = extracted), s"${zones.gold}/$tableName",
+          upd.copy(df = extracted), gold,
           config.primaryKeys, wm, "feature_extraction", tableName)
         Metrics.rowsUpdated(ins, tableName, "insert", "feature_extraction")
         Metrics.rowsUpdated(del, tableName, "delete", "feature_extraction")
@@ -102,11 +111,41 @@ object Jobs {
       // reference's Unity Catalog entry is persistent; our view is
       // session-scoped, so (re-)register whenever gold exists — a
       // no-new-data run in a fresh session must still expose the table.
-      if (graft.lake.MiniLake.exists(s"${zones.gold}/$tableName"))
-        Catalog.registerLakeTable(spark, tableName,
-          s"${zones.gold}/$tableName", qualifier = qualifier)
+      if (MiniLake.exists(gold))
+        Catalog.registerLakeTable(spark, tableName, gold,
+          qualifier = qualifier)
     }
   }
+
+  /** A source version range with no versions in it (the source is
+    * absent, or `low > high`) holds no change rows: skip without a job.
+    * A range whose versions hold none ends in [[Cdc.writeTableUpdate]]'s
+    * first pass, with the watermark untouched (C4).
+    */
+  private def hasRange(upd: Cdc.TableUpdate): Boolean = upd.low <= upd.high
+
+  /** Stands in for a free-text UDF on rows whose text must not be
+    * kept.
+    */
+  private val NullText: Column => Column = _ => lit(null).cast(StringType)
+
+  /** Runs `udfStage` only on the change rows the target keeps. Once the
+    * target exists, a delete row contributes only its key to the merge
+    * (its preimage comes from the target), so delete rows take
+    * `keyStage` instead: the same output columns from no UDF, with the
+    * free text nulled, never passed through; columns only `udfStage`
+    * adds are null. The create path (C7) writes every change row, so
+    * there every row takes `udfStage`.
+    */
+  private def udfOnInserts(changes: DataFrame, target: String)(
+      udfStage: DataFrame => DataFrame,
+      keyStage: DataFrame => DataFrame): DataFrame =
+    if (!MiniLake.exists(target)) udfStage(changes)
+    else {
+      val isDelete = col(MiniLake.ChangeType) === "delete"
+      udfStage(changes.filter(!isDelete)).unionByName(
+        keyStage(changes.filter(isDelete)), allowMissingColumns = true)
+    }
 
   /** helloworld/helloworld.py:15 — the contract demo. */
   def helloWorld(): Unit = println("Hello World!")

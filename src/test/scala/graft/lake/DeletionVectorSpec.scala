@@ -112,12 +112,26 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("a full rewrite (update) retires DVs and keeps their effect") {
-    val t = MiniLake(spark, dir)
-    t.create(kv(1L -> "a", 2L -> "b", 3L -> "c"))
-    t.deleteVectored(col("key") === 2)
-    t.update(col("key") === 1, Map("value" -> lit("A")))
-    assert(t.snapshot().orderBy("key").as[(Long, String)].collect().toSeq ===
-      Seq(1L -> "A", 3L -> "c"))
+    // two rewrites of the live set: an update, and the merge that folds
+    // (its sidecar would bring the live sidecars to MaxLiveDvFiles)
+    val vectored = (10L until 10L + MiniLake.MaxLiveDvFiles - 2)
+    val rewrites: Seq[(MiniLake => Unit, Seq[(Long, String)])] = Seq(
+      (_.update(col("key") === 1, Map("value" -> lit("A"))),
+        Seq(1L -> "A", 3L -> "c")),
+      (_.merge(kv(4L -> "d"), kv(1L -> "a"), Seq("key")),
+        Seq(3L -> "c", 4L -> "d")))
+    rewrites.zipWithIndex.foreach { case ((rewrite, want), i) =>
+      val t = MiniLake(spark, s"$dir/$i")
+      t.create(kv(Seq(1L -> "a", 2L -> "b", 3L -> "c") ++
+        vectored.map(_ -> "z"): _*))
+      (2L +: vectored).foreach(k => t.deleteVectored(col("key") === k))
+      assert(t.state(t.latestVersion).liveDvFiles.size ===
+        MiniLake.MaxLiveDvFiles - 1)
+      rewrite(t)
+      assert(t.snapshot().orderBy("key").as[(Long, String)].collect()
+        .toSeq === want)
+      assert(t.state(t.latestVersion).liveDvFiles.isEmpty)
+    }
   }
 
   test("vectored and copy-on-write deletes agree on the same workload") {

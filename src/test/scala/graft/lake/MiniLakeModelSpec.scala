@@ -5,6 +5,7 @@ package graft.lake
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,6 +73,13 @@ class MiniLakeModelSpec extends AnyFunSuite {
     2 -> Gen.const(CrashDv),
     1 -> Gen.const(Evolve))
 
+  // merges only, each naming keys to delete: every merge that matches
+  // one adds a deletion-vector sidecar, until one folds them all
+  private val mergeOnlyGen: Gen[Op] = for {
+    ins <- Gen.mapOf(kvGen)
+    del <- Gen.nonEmptyListOf(Gen.choose(0L, 20L)).map(_.toSet)
+  } yield Merge(ins, del)
+
   private def df(rows: Map[Long, String]) =
     rows.toSeq.toDF("key", "value")
 
@@ -85,6 +93,11 @@ class MiniLakeModelSpec extends AnyFunSuite {
       runFuzz(run, seedBase = 1234L,
         mkTable = d => MiniLake(spark, d), toDf = df)
     }
+    // a merge-only run long enough to cross the live-sidecar bound
+    val folds = runFuzz(0, seedBase = 4321L,
+      mkTable = d => MiniLake(spark, d), toDf = df,
+      ops = Gen.listOfN(2 * MiniLake.MaxLiveDvFiles + 4, mergeOnlyGen))
+    assert(folds > 0, "the merge-only run never folded its sidecars")
   }
 
   test("random op sequences on a value-partitioned table") {
@@ -170,13 +183,12 @@ class MiniLakeModelSpec extends AnyFunSuite {
       toDf: Map[Long, String] => org.apache.spark.sql.DataFrame,
       partitioned: Boolean = false,
       finalCheck: (MiniLake, Map[Long, String]) => Unit = (_, _) => (),
-      afterCreate: MiniLake => Unit = _ => ())
-      : Unit = {
+      afterCreate: MiniLake => Unit = _ => (),
+      ops: Gen[List[Op]] = Gen.listOfN(14, opGen)): Int = {
     def df(rows: Map[Long, String]): org.apache.spark.sql.DataFrame =
       toDf(rows)
     locally {
-      val ops = Gen.listOfN(14, opGen)
-        .pureApply(Gen.Parameters.default, Seed(seedBase + run))
+      val steps = ops.pureApply(Gen.Parameters.default, Seed(seedBase + run))
       val dir = Files.createTempDirectory("graft_model").toString + "/t"
       val t = mkTable(dir)
       var model = Map(1L -> "seed")
@@ -194,8 +206,15 @@ class MiniLakeModelSpec extends AnyFunSuite {
       // attempt dirs stranded by injected crashes: must never influence
       // a read, and must be reclaimed by the final zero-retention vacuum
       val debris = scala.collection.mutable.ArrayBuffer[String]()
+      // the model as of every version time travel can still read (the
+      // sequence's own, up to the last zero-retention vacuum), and the
+      // merges that folded their live sidecars
+      val modelAt = scala.collection.mutable.Map(t.latestVersion -> model)
+      var recorded = t.latestVersion
+      var liveDvs = 0
+      var folds = 0
 
-      ops.zipWithIndex.foreach { case (op, i) =>
+      steps.zipWithIndex.foreach { case (op, i) =>
         op match {
           case Append(rows) =>
             // appended PKs may collide with live ones — MiniLake append
@@ -330,9 +349,23 @@ class MiniLakeModelSpec extends AnyFunSuite {
               t.compactPartitions(m => m("part") == p)
             } else t.compactFiles()
         }
-        val snap = t.snapshot().select("key", "value")
-          .as[(Long, String)].collect().toMap
-        assert(snap === model, s"snapshot diverged after $op (run $run)")
+        if (op == Vacuum) modelAt.clear()
+        (recorded + 1 to t.latestVersion).foreach(modelAt(_) = model)
+        modelAt(t.latestVersion) = model
+        recorded = t.latestVersion
+        val asOf = modelAt.keys.toSeq.sorted.map(v =>
+          t.snapshot(v).select(col("key"), col("value"), lit(v).as("v")))
+          .reduce(_ unionByName _).as[(Long, String, Long)].collect()
+          .groupBy(_._3).view.mapValues(_.map(r => r._1 -> r._2).toMap)
+        modelAt.foreach { case (v, m) =>
+          assert(asOf.getOrElse(v, Map.empty) === m,
+            s"snapshot($v) diverged after $op (run $run)")
+        }
+        val dvs = t.state(t.latestVersion).liveDvFiles.size
+        assert(dvs <= MiniLake.MaxLiveDvFiles,
+          s"$dvs live sidecars after $op (run $run)")
+        if (op.isInstanceOf[Merge] && dvs < liveDvs) folds += 1
+        liveDvs = dvs
         clones.foreach { case (c, frozen, cd) =>
           val cs = c.snapshot().select("key", "value")
             .as[(Long, String)].collect().toMap
@@ -366,6 +399,7 @@ class MiniLakeModelSpec extends AnyFunSuite {
       }
       cloneDirs.foreach(MiniLake.deleteRecursively)
       MiniLake.deleteRecursively(dir)
+      folds
     }
   }
 }

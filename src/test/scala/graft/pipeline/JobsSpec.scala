@@ -6,11 +6,15 @@ package graft.pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Metrics, SparkTestSession}
+import graft.functions.{HealthAnnotator, Ner}
 import graft.lake.MiniLake
+import graft.ops.Extract
 import graft.ops.Pseudonymise._
 
 /** End-to-end medallion pipeline over the reference's Notes table shape
@@ -123,6 +127,66 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterEach {
     val cats = gold.select("NoteText_extracted.document.entities.category")
       .as[Seq[String]].collect()
     assert(cats.forall(_ === Seq("ConditionQualifier", "SymptomOrSign")))
+  }
+
+  test("a trickle batch: UDFs on inserts only, deletes as a deletion " +
+      "vector, and the merge that reaches the sidecar bound folds") {
+    val silverPath = s"${zones.silver}/Notes"
+    val goldPath = s"${zones.gold}/Notes"
+    val bronze = MiniLake(spark, s"${zones.bronze}/Notes")
+    def batch(ids: Seq[Long]) = notes(ids.map(id =>
+      (id, s"John Smith has a severe headache, note $id", id,
+        Timestamp.valueOf("2023-01-01 10:10:10"))): _*)
+    bronze.create(batch(1L to 60L))
+    Jobs.runPseudonymisation(spark, zones, notesConfig)
+    Jobs.runFeatureExtraction(spark, zones, notesConfig)
+
+    // call counters behind the public UDF parameters
+    val nerCalls = spark.sparkContext.longAccumulator("ner")
+    val annotateCalls = spark.sparkContext.longAccumulator("annotate")
+    val anonymise: Column => Column = {
+      val u = udf { (t: String) => nerCalls.add(1); Ner.anonymise(t) }
+      c => u(c)
+    }
+    val annotator: Extract.Annotator = {
+      val u = udf { (t: String) =>
+        annotateCalls.add(1); HealthAnnotator.annotate(t)
+      }
+      (d, c, _) => d.withColumn(c + Extract.ExtractedSuffix, u(col(c)))
+    }
+    val sink = new Metrics.InMemorySink
+    Metrics.sink = sink
+    // the path each silver and gold merge took, in order
+    def paths(table: String) = sink.emitted.collect {
+      case ("merge_rows_written", n, tags) if tags("table_path") == table =>
+        (tags("path"), n)
+    }.toSeq
+    def run(inserts: Seq[Long], deletes: Seq[Long]): Unit = {
+      bronze.merge(batch(inserts), batch(deletes), Seq("NoteID"))
+      Jobs.runPseudonymisation(spark, zones, notesConfig, anonymise)
+      Jobs.runFeatureExtraction(spark, zones, notesConfig,
+        annotator = annotator)
+    }
+    try {
+      run(101L to 140L, 1L to 20L)
+      assert(nerCalls.value === 40L)
+      assert(annotateCalls.value === 40L)
+      assert(paths(silverPath) === Seq(("dv", 40L)))
+      assert(paths(goldPath) === Seq(("dv", 40L)))
+
+      // each batch leaves one more live sidecar; the one that would
+      // reach the bound rewrites the live set: all 80 live rows
+      (2 to MiniLake.MaxLiveDvFiles).foreach(i =>
+        run(Seq(200L + i), Seq(19L + i)))
+      Seq(silverPath, goldPath).foreach { table =>
+        assert(paths(table).map(_._1) ===
+          Seq.fill(MiniLake.MaxLiveDvFiles - 1)("dv") :+ "rewrite")
+        assert(paths(table).last._2 === 80L)
+      }
+      val want = (36L to 60L) ++ (101L to 140L) ++ (202L to 216L)
+      assert(MiniLake(spark, goldPath).snapshot().select("NoteID")
+        .as[Long].collect().sorted.toSeq === want)
+    } finally Metrics.sink = Metrics.LogMetricsSink
   }
 
   test("conf-driven extraction: keys and catalog names from spark.secret.*") {
