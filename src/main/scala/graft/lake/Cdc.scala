@@ -24,6 +24,21 @@ object Cdc {
 
   final case class TableUpdate(df: DataFrame, low: Long, high: Long)
 
+  /** How change rows become target rows. `rows` may be costly (UDFs)
+    * and runs only on rows the target keeps: every row of the create
+    * (C7), the inserts of a merge. A merge's delete rows contribute
+    * only their keys (their preimage comes from the target), so they
+    * take `keys` instead, which must yield the primary-key columns as
+    * the target spells them and call no UDF; nothing else of a delete
+    * row goes on.
+    */
+  final case class Stage(rows: DataFrame => DataFrame,
+      keys: DataFrame => DataFrame)
+
+  object Stage {
+    val identity: Stage = Stage(d => d, d => d)
+  }
+
   /** datalake.py:52-99 — CDF read of everything at or above the low
     * watermark.
     */
@@ -44,13 +59,15 @@ object Cdc {
     TableUpdate(df, low, high)
   }
 
-  /** datalake.py:142-239 — apply a change-set to the target and advance
-    * the watermark. Returns (insertedRows, deletedRows).
+  /** datalake.py:142-239 — apply a change-set to the target through
+    * `stage` and advance the watermark. Returns (insertedRows,
+    * deletedRows).
     */
   def writeTableUpdate(spark: SparkSession, update: TableUpdate,
       targetPath: String, primaryKeys: Seq[String],
       watermark: Watermark, activity: String, tableName: String,
-      bucketNumBuckets: Option[Int] = None): (Long, Long) = {
+      bucketNumBuckets: Option[Int] = None,
+      stage: Stage = Stage.identity): (Long, Long) = {
     val df = update.df
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // One pass over the (batch-sized) change-set answers the emptiness
@@ -87,7 +104,7 @@ object Cdc {
         // with only the metadata columns dropped, regardless of change
         // type (datalake.py:217-230); in practice a first batch from a
         // fresh source contains only inserts.
-        val initial = df.drop(MiniLake.MetaColumns: _*)
+        val initial = stage.rows(df.drop(MiniLake.MetaColumns: _*))
         // row count = all change rows (meta dropped, none filtered) —
         // already known from the typeCounts pass; hint it so the write
         // coalesces to a sane file count instead of one per partition
@@ -98,14 +115,15 @@ object Cdc {
         // hand merge a statically-empty frame for an absent side so it
         // can skip that side's joins (pure-insert and pure-delete
         // batches are the common CDC shapes).
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          df.drop(MiniLake.MetaColumns: _*).schema)
-        def side(changeType: String) =
-          if (typeCounts.contains(changeType))
-            df.filter(col(MiniLake.ChangeType) === changeType)
-              .drop(MiniLake.MetaColumns: _*)
-          else MiniLake.emptyDf(spark, dataSchema)
-        target.merge(side("insert"), side("delete"), primaryKeys)
+        def side(changeType: String, f: DataFrame => DataFrame) = {
+          val rows = f(df.filter(col(MiniLake.ChangeType) === changeType)
+            .drop(MiniLake.MetaColumns: _*))
+          if (typeCounts.contains(changeType)) rows
+          else MiniLake.emptyDf(spark, rows.schema)
+        }
+        target.merge(side("insert", stage.rows),
+          side("delete", stage.keys(_).select(primaryKeys.map(col): _*)),
+          primaryKeys)
       }
 
     df.unpersist()

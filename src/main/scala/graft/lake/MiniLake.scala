@@ -1134,6 +1134,13 @@ final class MiniLake(spark: SparkSession, val path: String,
         .getOrElse(Map.empty))
   }
 
+  /** A parquet file's footer, read on the driver. */
+  private def footer(
+      f: String): org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(f),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+
   /** File-level min/max stats for INT64 and UTF8-string columns, read
     * from the parquet footers the write just produced (driver-side,
     * one footer per file — metadata-sized; the Delta-style
@@ -1149,7 +1156,6 @@ final class MiniLake(spark: SparkSession, val path: String,
       Map[String, Map[String, (Long, Long)]],
       Map[String, Map[String, (String, String)]],
       Map[String, Map[String, (Double, Double)]]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val longs =
       scala.collection.mutable.Map.empty[String, Map[String, (Long, Long)]]
     val strs =
@@ -1158,9 +1164,7 @@ final class MiniLake(spark: SparkSession, val path: String,
       scala.collection.mutable.Map.empty[String, Map[String, (Double, Double)]]
     files.foreach { f =>
       try {
-        val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-          conf, new org.apache.hadoop.fs.Path(f),
-          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        val md = footer(f)
         val accL = scala.collection.mutable.Map.empty[String, (Long, Long)]
         val accS = scala.collection.mutable.Map.empty[String, (String, String)]
         val accD = scala.collection.mutable.Map.empty[String, (Double, Double)]
@@ -1665,13 +1669,13 @@ final class MiniLake(spark: SparkSession, val path: String,
   /** Apply live deletion vectors to a file-sourced frame, keyed on
     * (physical file, row position) from the `_metadata` struct — the
     * Iceberg positional-delete / Delta deletion-vector read shape. The
-    * DV side is deleted-rows-sized (bounded by churn since the last
-    * materialize, never table-sized). While it stays metadata-sized it
-    * is read on the driver and applied as a hash-set filter on the
-    * scan: no join, and no job to collect it. Larger, it broadcasts
-    * into an anti-join. Either way the scan stays a plain parquet scan
-    * with pushdown intact. When no DVs are live this is the identity —
-    * zero cost on the hot path.
+    * sidecars are deleted-rows-sized (bounded by churn since the last
+    * fold or materialize, never table-sized), so the driver reads them
+    * ([[dvPositions]]) and broadcasts the sorted positions of each
+    * target file; the scan keeps a row unless its position is among its
+    * file's. No join and no job to collect the sidecars, and the scan
+    * stays a plain parquet scan with pushdown intact. When no DVs are
+    * live this is the identity — zero cost on the hot path.
     */
   private def applyDvs(base: DataFrame, asOf: Long,
       keepPos: Boolean = false): DataFrame = {
@@ -1681,58 +1685,38 @@ final class MiniLake(spark: SparkSession, val path: String,
       val withPos = base
         .withColumn(DvFileCol, col("_metadata.file_path"))
         .withColumn(DvPosCol, col("_metadata.row_index"))
-      val joined =
+      val kept =
         if (dvFiles.isEmpty) withPos
-        else localDvKeys(dvFiles) match {
-          case Some(dead) =>
-            // per target file, a hash set of its deleted positions
-            val pos = org.apache.spark.sql.GraftSql.expressionOf(col(DvPosCol))
-            def in(ps: Set[Any]) = org.apache.spark.sql.GraftSql.columnOf(
-              org.apache.spark.sql.catalyst.expressions.InSet(pos, ps))
-            val (f0, p0) = dead.head
-            val hit = dead.tail.foldLeft(when(col(DvFileCol) === f0, in(p0))) {
-              case (c, (f, ps)) => c.when(col(DvFileCol) === f, in(ps))
-            }.otherwise(false)
-            withPos.filter(!hit)
-          case None =>
-            val dv = spark.read.schema(DvSchema).parquet(dvFiles: _*)
-            withPos.join(broadcast(dv), Seq(DvFileCol, DvPosCol), "left_anti")
+        else {
+          val dead = spark.sparkContext.broadcast(dvPositions(dvFiles)
+            .map { case (f, ps) => f -> ps.sorted })
+          val live = udf((f: String, p: Long) =>
+            dead.value.get(f).forall(java.util.Arrays.binarySearch(_, p) < 0))
+          withPos.filter(live(col(DvFileCol), col(DvPosCol)))
         }
-      if (keepPos) joined else joined.drop(DvFileCol, DvPosCol)
+      if (keepPos) kept else kept.drop(DvFileCol, DvPosCol)
     }
   }
 
-  /** The deleted positions of `sidecars` by target file, read on the
-    * driver (once per sidecar per JVM, see [[MiniLake.dvPositions]])
-    * while they stay metadata-sized: at most
-    * [[MiniLake.MaxDriverWriteRows]] positions over at most
-    * [[MiniLake.MaxDvFilterFiles]] target files. None once larger.
+  /** The deleted positions that deletion-vector `sidecars` hold, by
+    * target file as `_metadata.file_path` spells it: read on the driver,
+    * no Spark job. The one reader of the sidecar format.
     */
-  private def localDvKeys(
-      sidecars: Seq[String]): Option[Map[String, Set[Any]]] = {
+  private def dvPositions(sidecars: Seq[String]): Map[String, Array[Long]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def read(sidecar: String): Option[Map[String, Set[Any]]] =
-      Option(dvPositions.get(sidecar)).getOrElse {
-        val rd = org.apache.parquet.hadoop.ParquetReader.builder(
-          new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(sidecar)).withConf(conf).build()
-        val rows =
-          try Iterator.continually(rd.read()).takeWhile(_ != null)
-            .take(MaxDriverWriteRows + 1)
-            .map(g => g.getString(DvFileCol, 0) -> g.getLong(DvPosCol, 0))
-            .toVector
-          finally rd.close()
-        val byFile = Option.when(rows.size <= MaxDriverWriteRows)(
-          rows.groupMap(_._1)(_._2: Any).view.mapValues(_.toSet).toMap)
-        dvPositions.put(sidecar, byFile)
-        byFile
-      }
-    val parts = sidecars.map(read)
-    val merged = parts.flatten.flatMap(_.toSeq)
-      .groupMapReduce(_._1)(_._2)(_ ++ _)
-    Option.when(parts.forall(_.nonEmpty) && merged.nonEmpty &&
-      merged.size <= MaxDvFilterFiles &&
-      merged.values.map(_.size.toLong).sum <= MaxDriverWriteRows)(merged)
+    val byFile = scala.collection.mutable.HashMap.empty[
+      String, scala.collection.mutable.ArrayBuilder.ofLong]
+    sidecars.foreach { s =>
+      val rd = org.apache.parquet.hadoop.ParquetReader.builder(
+        new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(s)).withConf(conf).build()
+      try Iterator.continually(rd.read()).takeWhile(_ != null).foreach { g =>
+        byFile.getOrElseUpdate(g.getString(DvFileCol, 0),
+          new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          g.getLong(DvPosCol, 0)
+      } finally rd.close()
+    }
+    byFile.view.mapValues(_.result()).toMap
   }
 
   /** RENAME COLUMN as a METADATA-ONLY commit (Delta column-mapping
@@ -3041,47 +3025,17 @@ final class MiniLake(spark: SparkSession, val path: String,
     // replaced partitions — without this they stay in liveDvFiles
     // forever (vacuum-protected, carried through every checkpoint): a
     // state/space leak, though reads stay correct since the target
-    // files are gone. Metadata-sized: distinct (sidecar, target)
-    // pairs, bounded by DV churn since the last materialize, never
-    // rows. A sidecar with any surviving target stays live (its rows
-    // for doomed files are inert — same as compactPartitions).
-    val liveDvs = liveDvFiles(v - 1)
+    // files are gone. Driver-read, deleted-rows-sized: bounded by DV
+    // churn since the last materialize, never table-sized. A sidecar
+    // with any surviving target stays live (its rows for doomed files
+    // are inert — same as compactPartitions).
     val dvRemoved: Seq[String] =
-      if (liveDvs.isEmpty || doomed.isEmpty) Seq.empty
+      if (doomed.isEmpty) Seq.empty
       else {
         val doomedSet = doomed.map(MiniLake.localPath).toSet
-        // driver-side footer pre-filter: a sidecar whose [min,max]
-        // target range contains NO doomed path cannot target the
-        // replaced partitions at all — skip its row-level scan, and
-        // when no sidecar survives skip the Spark job entirely. This
-        // keeps DV-light workloads' replacePartitions free of the
-        // full-sidecar scan (one footer read per live sidecar,
-        // metadata-sized, same machinery as collectFileStats). Stored
-        // target paths may be file: URIs, so both spellings probe the
-        // range; missing stats stay conservative (scan).
-        val conf = spark.sparkContext.hadoopConfiguration
-        val candidates = liveDvs.filter { dvf =>
-          MiniLake.dvTargetRange(conf, dvf) match {
-            case Some((lo, hi)) => doomedSet.exists { d =>
-              (lo <= d && d <= hi) ||
-                { val u = "file:" + d; lo <= u && u <= hi }
-            }
-            case None => true
-          }
-        }
-        if (candidates.isEmpty) Seq.empty
-        else {
-          val byDv = spark.read.schema(MiniLake.DvSchema)
-            .parquet(candidates: _*)
-            .select(col("_metadata.file_path").as("_dv_sidecar"),
-              col(DvFileCol))
-            .distinct().collect()
-            .groupBy(r => MiniLake.localPath(r.getString(0)))
-          candidates.filter { dvf =>
-            byDv.get(MiniLake.localPath(dvf))
-              .exists(_.forall(r =>
-                doomedSet(MiniLake.localPath(r.getString(1)))))
-          }
+        liveDvFiles(v - 1).filter { dvf =>
+          val targets = dvTargets(Seq(dvf))
+          targets.nonEmpty && targets.forall(doomedSet)
         }
       }
     val (adds, chg) = inParallel(
@@ -3335,15 +3289,8 @@ final class MiniLake(spark: SparkSession, val path: String,
   }
 
   /** Rows in written parquet files, read from their footers. */
-  private def rowsIn(files: Seq[String]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf))
-      try rd.getRecordCount finally rd.close()
-    }.sum
-  }
+  private def rowsIn(files: Seq[String]): Long =
+    files.map(footer(_).getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** [[merge]] under OPTIMISTIC CONCURRENCY — Delta's commit-protocol
     * conflict detection for rewrite commits, where [[appendConcurrent]]
@@ -3762,7 +3709,7 @@ final class MiniLake(spark: SparkSession, val path: String,
   /** Merge-on-read DELETE — the deletion-vector path (Delta DVs /
     * Iceberg positional deletes): instead of rewriting the live set,
     * record the doomed rows' (physical file, row position) pairs in a
-    * sidecar parquet and let every read anti-join them away via the
+    * sidecar parquet and let every read filter them away via the
     * `_metadata` struct. Same observable semantics as [[delete]] —
     * NULL predicate keeps the row, CDF publishes one `delete` preimage
     * per removed row, zero-match still commits a version — but the
@@ -3770,8 +3717,9 @@ final class MiniLake(spark: SparkSession, val path: String,
     *
     * This is THE delete a 100 TB table wants: a copy-on-write of a
     * wide table to drop 0.1% of rows rewrites 100 TB; the DV commit
-    * writes megabytes. The read-side tax is one broadcast anti-join
-    * (DV side bounded by churn since the last materialize);
+    * writes megabytes. The read-side tax is a driver read of the
+    * sidecars and a broadcast position filter (bounded by churn since
+    * the last materialize);
     * [[materializeDeletes]] or [[compactFiles]] folds the DVs back
     * into clean files when the vectors grow past taste. Time travel
     * honors DVs exactly: `snapshot(asOf)` applies the vectors live as
@@ -3839,14 +3787,9 @@ final class MiniLake(spark: SparkSession, val path: String,
     }
   }
 
-  /** The data files a set of deletion-vector sidecars targets
-    * (metadata-sized read of small sidecars).
-    */
+  /** The data files a set of deletion-vector sidecars targets. */
   private def dvTargets(sidecars: Seq[String]): Set[String] =
-    if (sidecars.isEmpty) Set.empty
-    else spark.read.schema(MiniLake.DvSchema).parquet(sidecars: _*)
-      .select(col(DvFileCol)).distinct().collect()
-      .map(r => MiniLake.localPath(r.getString(0))).toSet
+    dvPositions(sidecars).keySet.map(MiniLake.localPath)
 
   /** Fold live deletion vectors into clean data files (Delta's
     * REORG TABLE ... APPLY (PURGE)): one rewrite of the live set with
@@ -4373,31 +4316,12 @@ object MiniLake {
     org.apache.spark.sql.types.StructField(DvPosCol,
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Live deletion vectors targeting more data files than this apply
-    * as a broadcast anti-join rather than a filter: the filter compares
-    * each scanned row's file with every target file in turn.
-    */
-  private val MaxDvFilterFiles = 64
-
-  /** Deleted positions by target file of each deletion-vector sidecar
-    * a driver has read, None for one too large to hold. A sidecar never
-    * changes once written (each lands in its own attempt directory), so
-    * an entry never goes stale; past 256 sidecars the least recently
-    * used is dropped.
-    */
-  private val dvPositions = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[Map[String, Set[Any]]]](64,
-        0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String,
-          Option[Map[String, Set[Any]]]]): Boolean = size > 256
-    })
-
   /** An unbucketed [[MiniLake.merge]] whose sidecar would bring the
     * live deletion-vector sidecars to this count rewrites the live set
-    * instead, retiring every live sidecar. Each read pays one broadcast
-    * anti-join over the live sidecars, so this bounds that tax at a few
-    * small files, while a trickle of small delete batches pays the
-    * copy-on-write once per that many merges.
+    * instead, retiring every live sidecar. Each read opens every live
+    * sidecar on the driver ([[MiniLake!.applyDvs]]), so this bounds that
+    * tax at a few small files, while a trickle of small delete batches
+    * pays the copy-on-write once per that many merges.
     */
   private[graft] val MaxLiveDvFiles = 16
 
@@ -4976,47 +4900,6 @@ object MiniLake {
     */
   private[lake] def localPath(p: String): String =
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-
-  /** Driver-side [min,max] of the DV target-file column, read from a
-    * sidecar's parquet footer (no Spark job) — the pre-filter
-    * [[MiniLake!.replacePartitions]] uses to skip row-level sidecar
-    * scans that cannot intersect the replaced set. None when stats
-    * are unavailable (callers stay conservative and scan).
-    */
-  private[lake] def dvTargetRange(
-      conf: org.apache.hadoop.conf.Configuration,
-      sidecar: String): Option[(String, String)] =
-    try {
-      val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, new org.apache.hadoop.fs.Path(sidecar),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-      var acc: Option[(String, String)] = None
-      var statless = false
-      md.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          if (c.getPath.toDotString == DvFileCol) {
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) statless = true
-            else {
-              val mn = st.genericGetMin
-                .asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8
-              val mx = st.genericGetMax
-                .asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8
-              acc = acc match {
-                case Some((lo, hi)) =>
-                  Some((if (mn < lo) mn else lo, if (mx > hi) mx else hi))
-                case None => Some((mn, mx))
-              }
-            }
-          }
-        }
-      }
-      // any stats-missing row group poisons the bound (its targets are
-      // unknown, so no sound range exists for the file)
-      if (statless) None else acc
-    } catch { case _: Exception => None }
 
   private[lake] def parquetFilesIn(dir: Path): Seq[String] =
     usingStream(Files.walk(dir))(_.filter(p =>

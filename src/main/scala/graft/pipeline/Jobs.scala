@@ -3,14 +3,14 @@
 
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StringType
 
 import graft.Metrics
 import graft.lake.{Catalog, Cdc, MiniLake, Watermark}
 import graft.ops.{Extract, Pseudonymise}
-import graft.ops.Pseudonymise.{FreeText, TableConfig}
+import graft.ops.Pseudonymise.TableConfig
 
 /** The medallion-pipeline entry points, faithful to the reference's
   * entrypoint scripts (patient_notes/src/patient_notes/entrypoints/
@@ -44,14 +44,14 @@ object Jobs {
       val silver = s"${zones.silver}/$tableName"
       // early-out on empty input (entrypoints/pseudonymisation.py:52-53)
       if (hasRange(upd)) {
-        val transformed = udfOnInserts(upd.df, silver)(
-          d => Pseudonymise.pseudoTransform(
+        val stage = Cdc.Stage(
+          rows = d => Pseudonymise.pseudoTransform(
             d.repartition(math.max(TargetPartitions, d.rdd.getNumPartitions)),
             tableName, config, anonymise),
-          Pseudonymise.pseudoTransform(_, tableName, config, NullText))
-        val (ins, del) = Cdc.writeTableUpdate(spark,
-          upd.copy(df = transformed), silver,
-          config.primaryKeys, wm, "pseudonymisation", tableName)
+          keys = Pseudonymise.pseudoTransform(_, tableName, config, NullText))
+        val (ins, del) = Cdc.writeTableUpdate(spark, upd, silver,
+          config.primaryKeys, wm, "pseudonymisation", tableName,
+          stage = stage)
         Metrics.rowsUpdated(ins, tableName, "insert", "pseudonymisation")
         Metrics.rowsUpdated(del, tableName, "delete", "pseudonymisation")
       }
@@ -94,16 +94,12 @@ object Jobs {
         wm, "feature_extraction", tableName)
       val gold = s"${zones.gold}/$tableName"
       if (hasRange(upd)) {
-        val freeText = config.columnTypes.collect {
-          case (FreeText, cols) => cols
-        }.flatten
-        val extracted = udfOnInserts(upd.df, gold)(
-          Extract.extractFeatures(_, tableName, config, numKeys, annotator),
-          Pseudonymise.processFreeTextColumns(_, freeText, NullText,
-            tableName))
-        val (ins, del) = Cdc.writeTableUpdate(spark,
-          upd.copy(df = extracted), gold,
-          config.primaryKeys, wm, "feature_extraction", tableName)
+        // silver's keys are gold's: a delete row needs no stage
+        val stage = Cdc.Stage.identity.copy(rows =
+          Extract.extractFeatures(_, tableName, config, numKeys, annotator))
+        val (ins, del) = Cdc.writeTableUpdate(spark, upd, gold,
+          config.primaryKeys, wm, "feature_extraction", tableName,
+          stage = stage)
         Metrics.rowsUpdated(ins, tableName, "insert", "feature_extraction")
         Metrics.rowsUpdated(del, tableName, "delete", "feature_extraction")
       }
@@ -124,28 +120,10 @@ object Jobs {
     */
   private def hasRange(upd: Cdc.TableUpdate): Boolean = upd.low <= upd.high
 
-  /** Stands in for a free-text UDF on rows whose text must not be
-    * kept.
+  /** The free-text stage of a delete row's keys: the text is nulled,
+    * never passed through, and no UDF runs.
     */
   private val NullText: Column => Column = _ => lit(null).cast(StringType)
-
-  /** Runs `udfStage` only on the change rows the target keeps. Once the
-    * target exists, a delete row contributes only its key to the merge
-    * (its preimage comes from the target), so delete rows take
-    * `keyStage` instead: the same output columns from no UDF, with the
-    * free text nulled, never passed through; columns only `udfStage`
-    * adds are null. The create path (C7) writes every change row, so
-    * there every row takes `udfStage`.
-    */
-  private def udfOnInserts(changes: DataFrame, target: String)(
-      udfStage: DataFrame => DataFrame,
-      keyStage: DataFrame => DataFrame): DataFrame =
-    if (!MiniLake.exists(target)) udfStage(changes)
-    else {
-      val isDelete = col(MiniLake.ChangeType) === "delete"
-      udfStage(changes.filter(!isDelete)).unionByName(
-        keyStage(changes.filter(isDelete)), allowMissingColumns = true)
-    }
 
   /** helloworld/helloworld.py:15 — the contract demo. */
   def helloWorld(): Unit = println("Hello World!")

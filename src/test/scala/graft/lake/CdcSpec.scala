@@ -5,6 +5,8 @@ package graft.lake
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,6 +81,30 @@ class CdcSpec extends AnyFunSuite with BeforeAndAfterEach {
     Cdc.writeTableUpdate(spark, Cdc.TableUpdate(replay, 0, 0), silver,
       Seq("key"), wm, act, "t")
     assert(MiniLake(spark, silver).snapshot().count() === 2L)
+  }
+
+  test("a stage runs on every row of the create, then on inserts only") {
+    val seen = spark.sparkContext.collectionAccumulator[String]("rows")
+    val upper = udf { (v: String) => seen.add(v); v.toUpperCase }
+    // `keys` keeps nothing but the key: a delete needs no more
+    val stage = Cdc.Stage(rows = _.withColumn("value", upper(col("value"))),
+      keys = _.drop("value"))
+    def run(): Unit = {
+      val wm = Watermark(spark, wmPath)
+      val upd = Cdc.readTableUpdate(spark, bronze, wm, act, "t")
+      Cdc.writeTableUpdate(spark, upd, silver, Seq("key"), wm, act, "t",
+        stage = stage)
+    }
+    def seenRows() = seen.value.asScala.toSeq.sorted
+    MiniLake(spark, bronze).create(kv(1L -> "a", 2L -> "b"))
+    run()
+    assert(seenRows() === Seq("a", "b"))
+    seen.reset()
+    MiniLake(spark, bronze).merge(kv(3L -> "c"), kv(1L -> "a"), Seq("key"))
+    run()
+    assert(seenRows() === Seq("c"))
+    assert(MiniLake(spark, silver).snapshot().orderBy("key")
+      .as[(Long, String)].collect().toSeq === Seq(2L -> "B", 3L -> "C"))
   }
 
   test("update changes in the source are rejected downstream") {

@@ -113,15 +113,22 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   test("a full rewrite (update) retires DVs and keeps their effect") {
     // two rewrites of the live set: an update, and the merge that folds
-    // (its sidecar would bring the live sidecars to MaxLiveDvFiles)
+    // (its sidecar would bring the live sidecars to MaxLiveDvFiles); the
+    // fold also on a partitioned table, whose rewrite keeps its layout
     val vectored = (10L until 10L + MiniLake.MaxLiveDvFiles - 2)
-    val rewrites: Seq[(MiniLake => Unit, Seq[(Long, String)])] = Seq(
-      (_.update(col("key") === 1, Map("value" -> lit("A"))),
-        Seq(1L -> "A", 3L -> "c")),
-      (_.merge(kv(4L -> "d"), kv(1L -> "a"), Seq("key")),
-        Seq(3L -> "c", 4L -> "d")))
-    rewrites.zipWithIndex.foreach { case ((rewrite, want), i) =>
-      val t = MiniLake(spark, s"$dir/$i")
+    val plain: String => MiniLake = MiniLake(spark, _)
+    val byValue: String => MiniLake =
+      MiniLake.partitioned(spark, _, Seq("value"))
+    val update: MiniLake => Unit =
+      _.update(col("key") === 1, Map("value" -> lit("A")))
+    val fold: MiniLake => Unit =
+      _.merge(kv(4L -> "d"), kv(1L -> "a"), Seq("key"))
+    val rewrites = Seq(
+      (plain, update, Seq(1L -> "A", 3L -> "c")),
+      (plain, fold, Seq(3L -> "c", 4L -> "d")),
+      (byValue, fold, Seq(3L -> "c", 4L -> "d")))
+    rewrites.zipWithIndex.foreach { case ((open, rewrite, want), i) =>
+      val t = open(s"$dir/$i")
       t.create(kv(Seq(1L -> "a", 2L -> "b", 3L -> "c") ++
         vectored.map(_ -> "z"): _*))
       (2L +: vectored).foreach(k => t.deleteVectored(col("key") === k))
@@ -131,22 +138,36 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(t.snapshot().orderBy("key").as[(Long, String)].collect()
         .toSeq === want)
       assert(t.state(t.latestVersion).liveDvFiles.isEmpty)
+      if (open eq byValue)
+        assert(t.state(t.latestVersion).liveFiles
+          .forall(_.contains("/_p_value=")))
     }
   }
 
   test("vectored and copy-on-write deletes agree on the same workload") {
-    val a = MiniLake(spark, dir + "_cow")
-    val b = MiniLake(spark, dir + "_dv")
-    val data = kv((1L to 50L).map(k => k -> s"v${k % 7}"): _*)
-    a.create(data); b.create(data)
-    val pred = col("value").isin("v1", "v3") && col("key") < 40
-    val na = a.delete(pred)
-    val nb = b.deleteVectored(pred)
-    assert(na === nb)
-    assert(a.snapshot().orderBy("key").collect().toSeq ===
-      b.snapshot().orderBy("key").collect().toSeq)
-    MiniLake.deleteRecursively(dir + "_cow")
-    MiniLake.deleteRecursively(dir + "_dv")
+    // one data file, and 4,000 rows over four files whose deletes span
+    // every file
+    val workloads = Seq(
+      (Seq(kv((1L to 50L).map(k => k -> s"v${k % 7}"): _*)),
+        col("value").isin("v1", "v3") && col("key") < 40),
+      ((0L until 4L).map(f => kv((1L to 1000L).map(k =>
+        (f * 1000L + k) -> s"v${k % 7}"): _*)),
+        col("value") =!= "v2"))
+    workloads.zipWithIndex.foreach { case ((batches, pred), i) =>
+      val a = MiniLake(spark, s"${dir}_cow$i")
+      val b = MiniLake(spark, s"${dir}_dv$i")
+      Seq(a, b).foreach { t =>
+        t.create(batches.head)
+        batches.tail.foreach(t.append(_))
+      }
+      val na = a.delete(pred)
+      val nb = b.deleteVectored(pred)
+      assert(na === nb)
+      assert(a.snapshot().orderBy("key").collect().toSeq ===
+        b.snapshot().orderBy("key").collect().toSeq)
+      MiniLake.deleteRecursively(s"${dir}_cow$i")
+      MiniLake.deleteRecursively(s"${dir}_dv$i")
+    }
   }
 
   test("vacuum keeps live DV files; reads survive") {
