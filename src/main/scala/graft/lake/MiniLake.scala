@@ -1134,12 +1134,26 @@ final class MiniLake(spark: SparkSession, val path: String,
         .getOrElse(Map.empty))
   }
 
+  /** A parquet file opened on the driver. The read options come from
+    * the session's Hadoop configuration: parquet's own defaults build a
+    * fresh configuration per file, about 9 ms each, where reading a
+    * small file takes about 0.3 ms.
+    */
+  private def openParquet(
+      f: String): org.apache.parquet.hadoop.ParquetFileReader = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+  }
+
   /** A parquet file's footer, read on the driver. */
   private def footer(
-      f: String): org.apache.parquet.hadoop.metadata.ParquetMetadata =
-    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(f),
-      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      f: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val rd = openParquet(f)
+    try rd.getFooter finally rd.close()
+  }
 
   /** File-level min/max stats for INT64 and UTF8-string columns, read
     * from the parquet footers the write just produced (driver-side,
@@ -1703,17 +1717,24 @@ final class MiniLake(spark: SparkSession, val path: String,
     * no Spark job. The one reader of the sidecar format.
     */
   private def dvPositions(sidecars: Seq[String]): Map[String, Array[Long]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
     val byFile = scala.collection.mutable.HashMap.empty[
       String, scala.collection.mutable.ArrayBuilder.ofLong]
     sidecars.foreach { s =>
-      val rd = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(s)).withConf(conf).build()
-      try Iterator.continually(rd.read()).takeWhile(_ != null).foreach { g =>
-        byFile.getOrElseUpdate(g.getString(DvFileCol, 0),
-          new scala.collection.mutable.ArrayBuilder.ofLong) +=
-          g.getLong(DvPosCol, 0)
+      val rd = openParquet(s)
+      try {
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(rd.readNextRowGroup()).takeWhile(_ != null)
+          .foreach { rg =>
+            val rows = io.getRecordReader(rg, new GroupRecordConverter(schema))
+            (0L until rg.getRowCount).foreach { _ =>
+              val g = rows.read()
+              byFile.getOrElseUpdate(g.getString(DvFileCol, 0),
+                new scala.collection.mutable.ArrayBuilder.ofLong) +=
+                g.getLong(DvPosCol, 0)
+            }
+          }
       } finally rd.close()
     }
     byFile.view.mapValues(_.result()).toMap
