@@ -1886,7 +1886,7 @@ final class MiniLake(spark: SparkSession, val path: String,
     * rename-aware: with no renames this is the plain one-scan path;
     * otherwise files group by write version, each group scans with
     * its era's physical schema (DVs apply per group — the `_metadata`
-    * columns must resolve against a file relation, so DV anti-joins
+    * columns must resolve against a file relation, so DV filters
     * cannot move above the union), the rename chain folds the old
     * names forward, and each slice conforms to the logical schema
     * (columns added by later evolution null-fill, as on the plain
